@@ -4278,9 +4278,9 @@ def q206_pq_adc_scores(spark, sf):
     the default engine under pq_topk/ivfpq_topk): every (query, code
     row) pair scored via per-query lookup tables, here ranked per query
     with no truncation. Rank-only output (the q39 float policy: the
-    kernel's doubles are bit-identical to the SQL expression twin —
-    pinned by tests/test_adc_arrow.py — but cross-engine raw-double
-    hashing is boundary-fragile, while ranks are stable). Same PQ
+    kernel's doubles match a plain-Python replay bit for bit — pinned
+    by tests/test_adc_arrow.py — but cross-engine raw-double hashing is
+    boundary-fragile, while ranks are stable). Same PQ
     operating point as q39 so the oracle reuses its unrolled k-means
     CTEs. The per-query Window is the eval-surface formulation; the
     production scan truncates per batch inside the kernel (see
@@ -7334,7 +7334,7 @@ def oracle_sql() -> dict[str, str]:
             -- LUT-based ADC (Jégou et al. 2011 asymmetric distance): the
             -- per-(query, subspace, code) distance table replaces any
             -- reconstruction; total d2 sums the 4 subspace distances in
-            -- subspace order, exactly the Spark _pq_adc_expr fold grouping
+            -- subspace order, exactly the Spark _adc_scan_topk_arrow grouping
             subd AS (
                 SELECT p.query_id, cv.neighbor_id, c.s,
                        list_sum(list_transform(range(0, 16), i ->
@@ -7437,7 +7437,7 @@ def oracle_sql() -> dict[str, str]:
             -- v - centroid[cid], residual-seed PQ codebooks (md5-smallest
             -- rows' residual slices), L2 code assignment, per-(query,
             -- probed-cell) LUT over q - centroid[cid], subspace-grouped
-            -- ADC sums (s-major, the _pq_adc_expr contract), exact rerank
+            -- ADC sums (s-major, the _adc_scan_topk_arrow contract), exact rerank
             WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
             {ivf_km},
             assign AS (
@@ -9941,10 +9941,10 @@ def oracle_sql() -> dict[str, str]:
                 QUALIFY rn = 1
             ),
             -- ADC = subspace-grouped summation (the LUT contract,
-            -- similarity.py _pq_adc_expr): per (query, candidate) add the
+            -- similarity.py _adc_scan_topk_arrow): per (query, candidate) add the
             -- per-subspace squared-L2s between the query slice and the
             -- candidate's selected centroid — s-major order, matching the
-            -- Spark fold over zip_with(lut, codes)
+            -- kernel's per-subspace gather-adds
             adc_sub AS (
                 SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.s,
                        list_sum(list_transform(range(0, 16), i ->
@@ -9997,7 +9997,7 @@ def oracle_sql() -> dict[str, str]:
                 QUALIFY rn = 1
             ),
             -- ADC with the LUT association (subspace-grouped s-major sums,
-            -- similarity.py _pq_adc_expr == _lut_numpy == the Arrow kernel)
+            -- similarity.py _lut_numpy == the Arrow kernel)
             adc_sub AS (
                 SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.s,
                        list_sum(list_transform(range(0, 16), i ->

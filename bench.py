@@ -27,9 +27,12 @@ single-row-group, and a parquet row group is the unit of split — so every
 cold scan's map side is ONE data-carrying task no matter how many byte-
 range splits the planner makes (decomposed round 10: scan-metadata count
 0.3 s, narrow groupBy 0.75 s, full-width pack shuffle 1.9 s, all gated by
-that one task). Real inputs carry many row groups / files and fan out;
-the engine's session defaults (files.minPartitionNum, openCostInBytes)
-already request one split per core on small inputs.
+that one task). Real inputs carry many row groups / files and fan out.
+The session sets no small-file split floor; instead the CPU-heavy per-row
+operators (shingling, sketch registers, media codecs) apply a data-sized
+rescue at their own boundary (tuning._ensure_parallelism): a scan with
+fewer than half as many splits as cores is round-robin repartitioned to
+one task per ~64 KiB of input, floored at 2 and capped at the core count.
   count_by          ~ CountNestedBy          (per-category counts)
   reduce_hof        ~ NestedFrameReduce      (per-row mean, HOF fast path)
   reduce_udf        ~ NestedFrameReduce      (per-row mean via pandas UDF)
@@ -897,30 +900,17 @@ def main() -> None:
     bench_extra("sentence_stats", x_sentences)
 
     # -- ADC scan measurement surface (pq_adc_scores: the scan phase of
-    # pq_topk/ivfpq_topk without top-k truncation). Round-10 rerouting:
-    # adc_scan_lut / adc_scan_recon_prefix now measure the SHIPPED Arrow
-    # kernel (method=lut vs method=recon at the same engine — the
-    # LUT-vs-reconstruction comparison the round-7 verdict asked for,
-    # preserved at the kernel level); the *_sqltwin entries keep the
-    # round-9-comparable pure-expression numbers measurable (r9's
-    # adc_scan_lut == r10's adc_scan_lut_sqltwin workload). All four
-    # produce bit-identical distances per method (test_adc_arrow.py).
+    # pq_topk/ivfpq_topk without top-k truncation), run by the Arrow kernel.
     _adc_cbs = sim.pq_codebooks(t("embeddings"), n_sub=8, n_centroids=16)
     _adc_enc = sim.pq_encode(t("embeddings"), _adc_cbs).select(
         "vec_id", "pq_code")
     _adc_q = t("embeddings").where(F.col("vec_id") < 10)
 
-    def x_adc(method, impl):
-        def run():
-            return sim.pq_adc_scores(
-                _adc_enc, _adc_q, _adc_cbs, method=method, impl=impl,
-            ).agg(F.sum("adc_dist")).collect()
-        return run
+    def x_adc():
+        return sim.pq_adc_scores(_adc_enc, _adc_q, _adc_cbs).agg(
+            F.sum("adc_dist")).collect()
 
-    bench_extra("adc_scan_lut", x_adc("lut", "arrow"))
-    bench_extra("adc_scan_recon_prefix", x_adc("recon", "arrow"))
-    bench_extra("adc_scan_lut_sqltwin", x_adc("lut", "sql"))
-    bench_extra("adc_scan_recon_sqltwin", x_adc("recon", "sql"))
+    bench_extra("adc_scan_lut", x_adc)
 
     def x_wordpiece():
         from nested_pandas_spark.pipeline.wordpiece import (

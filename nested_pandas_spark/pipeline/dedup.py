@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..tuning import _ensure_parallelism
 from .text import fingerprint, word_ngrams, words
 
 __all__ = [
@@ -195,78 +196,6 @@ def shingle_hashes(text: Column | str, shingle_n: int = 3) -> Column:
     arithmetically — one md5 per shingle total, not per (shingle, hashfunc).
     """
     return F.transform(word_ngrams(text, shingle_n), lambda s: _h32(s))
-
-
-def _conf_bytes(raw: str) -> int:
-    """Parse a Spark size conf ('134217728', '128m', '1g') to bytes."""
-    s = raw.strip().lower().removesuffix("b")
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suffix):
-            s, mult = s[:-1], m
-            break
-    return int(float(s) * mult)
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the scan would yield fewer partitions
-    than cores. Hash/shingle stages are CPU-bound per row; a small parquet
-    file arrives as ONE split and would run single-threaded. At real scale
-    files exceed maxPartitionBytes and split naturally — this only rescues
-    the small-input case, at the cost of one cheap shuffle of raw text.
-
-    The rescue width is DATA-sized, not cluster-sized
-    (:func:`~nested_pandas_spark.tuning.rescue_width_for`): a repartition
-    to the full core count schedules ``cores`` map+reduce tasks however
-    little work exists, and the round-10 driver bench showed that tax
-    exceeding the win on a contended 32-core host. One task per ~64 KiB
-    of compressed input keeps every rescued stage's per-task slice heavy
-    enough to pay for its own scheduling
-    (``spark.nested_pandas.rescue.bytesPerTask`` overrides at runtime).
-
-    Connect-safe: estimates the scan's split count from ``df.inputFiles()``
-    + driver-visible file sizes instead of probing ``df.rdd`` (which forces
-    a plan->RDD conversion and does not exist under Spark Connect).
-    Non-local URIs and in-memory relations are assumed already parallel —
-    at scale that is the case this heuristic exists to NOT touch.
-    """
-    import os
-
-    if df.isStreaming:
-        # no inputFiles() on a streaming frame, and micro-batch
-        # parallelism is the source's concern — leave it alone
-        return df
-    spark = df.sparkSession
-    from ..session import default_parallelism
-    from ..tuning import rescue_width_for
-
-    target = default_parallelism(spark)
-    files = df.inputFiles()
-    if not files:
-        return df  # in-memory relation: creator already chose partitioning
-    max_pb = _conf_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    est_splits = 0
-    total_bytes = 0
-    for f in files:
-        path = f.removeprefix("file:")
-        if "://" in f and not f.startswith("file:"):
-            return df  # remote store: big-data layout, splits naturally
-        try:
-            size = os.path.getsize(path)
-        except OSError:
-            size = max_pb
-        total_bytes += size
-        est_splits += max(1, -(-size // max_pb))
-        if est_splits >= max(2, target // 2):
-            return df
-    bpt = int(spark.conf.get(
-        "spark.nested_pandas.rescue.bytesPerTask", str(64 * 1024)))
-    width = rescue_width_for(total_bytes, target, bytes_per_task=bpt)
-    if width <= est_splits:
-        return df  # the scan already yields that many data-carrying splits
-    return df.repartition(width)
 
 
 def staged_shingle_hashes(

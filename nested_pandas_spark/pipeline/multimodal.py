@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..tuning import _ensure_parallelism
+
 __all__ = [
     "MEDIA_META_SCHEMA",
     "attach_media_meta",
@@ -105,22 +107,6 @@ def _fake_pixels(payload: bytes, h: int, w: int, c: int) -> np.ndarray:
         for j in range(h * w * c)
     ]
     return np.asarray(vals, dtype=np.uint8).reshape(h, w, c)
-
-
-def _widen(df: DataFrame) -> DataFrame:
-    """Parallelism rescue before a CPU-bound Python codec boundary.
-
-    Codec work (Huffman, DCT, zlib, FFT) costs milliseconds per row; a
-    small parquet input arrives as ONE split, so the whole decode pass
-    would run single-threaded. Delegates to the shared
-    ``_ensure_parallelism`` heuristic: round-robin repartition only when
-    the scan yields fewer splits than half the cores — at real scale the
-    files split naturally and this is a no-op, preserving the module's
-    payloads-never-shuffle property where it matters. Streaming frames
-    and in-memory relations are left untouched."""
-    from .dedup import _ensure_parallelism
-
-    return _ensure_parallelism(df)
 
 
 def decode_bmp(payload: bytes) -> np.ndarray:
@@ -395,7 +381,7 @@ def decode_image(
             out[out_col] = [_decode_one(p) for p in pdf[payload_col]]
             yield out
 
-    return _widen(df).mapInPandas(gen, schema=out_schema)
+    return _ensure_parallelism(df).mapInPandas(gen, schema=out_schema)
 
 
 def encode_image(
@@ -455,7 +441,7 @@ def encode_image(
             out[out_col] = [_encode_one(p) for p in pdf[pixels_col]]
             yield out
 
-    return _widen(df).mapInPandas(gen, schema=out_schema)
+    return _ensure_parallelism(df).mapInPandas(gen, schema=out_schema)
 
 
 def image_features(
@@ -586,7 +572,7 @@ def sample_video_frames(
             out["frames"] = [_frames_of(p) for p in pdf[payload_col]]
             yield out
 
-    return _widen(df).mapInPandas(gen, schema=out_schema)
+    return _ensure_parallelism(df).mapInPandas(gen, schema=out_schema)
 
 
 def audio_features(
@@ -632,7 +618,7 @@ def audio_features(
             out["zcr"] = [f[1] for f in feats]
             yield out
 
-    return _widen(df).mapInPandas(gen, schema=out_schema)
+    return _ensure_parallelism(df).mapInPandas(gen, schema=out_schema)
 
 
 def audio_spectrum(
@@ -705,7 +691,7 @@ def audio_spectrum(
             out["centroid_hz"] = [f[2] for f in feats]
             yield out
 
-    return _widen(df).mapInPandas(gen, schema=out_schema)
+    return _ensure_parallelism(df).mapInPandas(gen, schema=out_schema)
 
 
 def _grid_gray_sql(
@@ -885,7 +871,7 @@ def audio_fingerprint(
             )
             yield o
 
-    return _widen(df).mapInPandas(gen, schema=out_schema)
+    return _ensure_parallelism(df).mapInPandas(gen, schema=out_schema)
 
 
 def audio_near_pairs(
@@ -958,4 +944,4 @@ def encode_wav(
             o[out_col] = [_enc(v) for v in pdf[samples_col]]
             yield o
 
-    return _widen(df).mapInPandas(gen, schema=out_schema)
+    return _ensure_parallelism(df).mapInPandas(gen, schema=out_schema)

@@ -1044,73 +1044,17 @@ def pq_decode(
     )
 
 
-def _with_pq_lut(
-    df: DataFrame,
-    qvec: Column,
-    codebooks: list[list[list[float]]],
-    out: str,
-) -> DataFrame:
-    """Per-QUERY-row ADC lookup tables: ``out[s][c]`` = squared L2 between
-    the query's subspace-``s`` slice and codebook entry ``c`` — the
-    standard PQ asymmetric-distance table (Jégou et al. 2011 §III-B,
-    FAISS's LUT scan). Computed ONCE per query row (queries are the small
-    side by contract), so candidate scoring becomes O(n_sub) table
-    lookups instead of an O(dim) reconstruction distance per (query,
-    candidate) pair. Codebooks ride as plan literals below the threshold,
-    as a broadcast table above."""
-    n_sub = len(codebooks)
-    d_sub = len(codebooks[0][0])
-
-    def lut_expr(cbt: Column) -> Column:
-        return F.transform(
-            cbt,
-            lambda cb_s, s: F.transform(
-                cb_s,
-                lambda cvec: _l2sq(
-                    F.slice(qvec, s * d_sub + 1, F.lit(d_sub)), cvec
-                ),
-            ),
-        )
-
-    if len(codebooks[0]) <= _LITERAL_CENTROID_MAX:
-        return df.withColumn(out, lut_expr(_cb_literal(codebooks)))
-    tbl = _codebook_table_df(df.sparkSession, codebooks)
-    return (
-        df.crossJoin(F.broadcast(tbl))
-        .withColumn(out, lut_expr(F.col("__cb_tbl")))
-        .drop("__cb_tbl")
-    )
-
-
-def _pq_adc_expr(lut: Column, codes: Column) -> Column:
-    """ADC distance from a per-query LUT and a candidate's codes:
-    ``sum_s lut[s][codes[s]]`` — n_sub lookups + adds per pair. The
-    subspace-grouped summation order is the contract the oracles replay
-    (it differs from a full-dimension fold only in FP association)."""
-    return F.aggregate(
-        F.zip_with(
-            lut, codes, lambda t, c: F.element_at(t, (c + 1).cast("int"))
-        ),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
-# Default implementation for the PQ ADC scan phase. "arrow" scans codes
-# in NumPy batches against driver-computed LUTs (bit-identical doubles,
-# see _lut_numpy) — the shipped hot path; "sql" is the pure-expression
-# twin the DuckDB oracles replay, kept selectable everywhere for the
-# equality gate and as the plan-audit LUT proof.
-_ADC_IMPL = "arrow"
-
-
 def _lut_numpy(qv, codebooks: list[list[list[float]]]):
     """ADC lookup table for ONE query vector as a ``(n_sub, n_centroids)``
-    float64 array — the NumPy twin of :func:`_with_pq_lut`'s SQL
-    expression. Accumulates ``(q_j - c_j)^2`` per subspace dimension in
-    the SAME left-to-right order as the SQL ``_l2sq`` fold (acc starts at
-    0.0, one add per dimension), so every entry is bit-identical to what
-    the expression path (and therefore the unrolled SQL oracle) computes.
+    float64 array: ``lut[s][c]`` = squared L2 between the query's
+    subspace-``s`` slice and codebook entry ``c`` — the standard PQ
+    asymmetric-distance table (Jégou et al. 2011 §III-B, FAISS's LUT
+    scan). Built once per query (queries are the small side by contract),
+    so scoring a candidate is ``n_sub`` lookups instead of an O(dim)
+    reconstruction distance. Accumulates ``(q_j - c_j)^2`` per subspace
+    dimension left to right from 0.0 (one add per dimension, the
+    :func:`_l2sq` fold order), which is the order the unrolled DuckDB
+    oracles replay bit for bit.
     """
     import numpy as np
 
@@ -1129,6 +1073,30 @@ def _lut_numpy(qv, codebooks: list[list[list[float]]]):
     return lut
 
 
+def _probe_lut_entries(rows, cents, cbs, residual: bool):
+    """ADC scan entries ``(query_id, cid, lut)``, one per (query, probed
+    cell), from collected ``(query_id, __qv, __cids)`` rows. Residual
+    codes get a LUT over ``q - centroid[cid]`` per cell; raw codes share
+    one query LUT across its cells. Queries with no probed cell score
+    nothing."""
+    import numpy as np
+
+    centd = {cid: np.asarray(cv, np.float64) for cid, cv in cents}
+    entries = []
+    for r in rows:
+        if not r["__cids"]:
+            continue
+        if residual:
+            qvn = np.asarray(r["__qv"], np.float64)
+            for cid in r["__cids"]:
+                entries.append(
+                    (r["query_id"], cid, _lut_numpy(qvn - centd[cid], cbs)))
+        else:
+            lut = _lut_numpy(r["__qv"], cbs)
+            entries.extend((r["query_id"], cid, lut) for cid in r["__cids"])
+    return entries
+
+
 def _adc_scan_topk_arrow(
     codes_df: DataFrame,
     entries: list[tuple[object, int | None, "object"]],
@@ -1145,13 +1113,13 @@ def _adc_scan_topk_arrow(
     ``entries`` is the (small-by-contract) query side, collected on the
     driver: ``(query_id, cell_or_None, lut)`` with ``lut`` from
     :func:`_lut_numpy`. With ``cell_col`` set, a query scores only the
-    batch rows in its probed cells (the IVFPQ shape — the broadcast
-    ``__cid`` join becomes a closure lookup); without it every query
-    scores every row (the flat PQ shape — the crossJoin disappears).
+    batch rows in its probed cells (the IVFPQ shape — the probe join is a
+    closure lookup); without it every query scores every row (the flat PQ
+    shape — no crossJoin).
 
-    Numbers are bit-identical to the SQL twin (:func:`_pq_adc_expr`):
-    per pair the subspace terms accumulate left-to-right from 0.0 exactly
-    like the fold, on the same LUT doubles. Candidate selection replays
+    Per pair the subspace terms accumulate left-to-right from 0.0
+    (``sum_s lut[s][code[s]]``, subspace-major) — the order the DuckDB
+    oracles replay. Candidate selection replays
     :func:`_per_query_topk`'s total order (distance asc, id asc), and
     per-batch truncation is tournament-exact: the global top-``per_q``
     is invariant as long as every batch keeps ``per_q`` survivors.
@@ -1163,8 +1131,7 @@ def _adc_scan_topk_arrow(
     of the full |queries| x |codes| pair blow-up.
 
     Rows with a NULL code or (when ``cell_col`` is set) a NULL cell are
-    skipped — the SQL twin never ranks them either (null scores sort
-    last; null cells don't survive the cid equi-join).
+    skipped: they have no distance and belong to no probed cell.
     """
     import numpy as np
     import pandas as pd
@@ -1249,102 +1216,88 @@ def pq_adc_scores(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "lut",
-    impl: str | None = None,
 ) -> DataFrame:
     """All-pairs ADC distances between encoded corpus rows and query
     vectors — the scan phase of :func:`pq_topk` exposed on its own (no
     top-k truncation), for ADC-quality evaluation and as the bench /
     oracle measurement surface. Output ``(query_id, neighbor_id,
-    adc_dist)`` over every (query, code row) pair.
+    adc_dist)`` over every (query, code row) pair; rows with a NULL code
+    are skipped.
 
-    ``method="lut"`` scores via per-query lookup tables (Jégou 2011 ADC
-    — n_sub lookups per pair); ``method="recon"`` reconstructs each
-    code's vector and takes a full O(dim) squared-L2 (the pre-LUT
-    formulation, kept as the efficiency comparator). ``impl="arrow"``
-    runs NumPy Arrow batches (shipped path), ``impl="sql"`` the pure
-    expression twin. For each method the two impls produce bit-identical
-    distances (same fold orders; a test asserts it); lut and recon differ
-    from each other only by FP association (subspace-grouped vs full-dim
-    summation, ~1e-15 relative).
+    Scores run as NumPy Arrow batches against per-query lookup tables
+    (:func:`_lut_numpy`, Jégou 2011 ADC — n_sub lookups per pair), summed
+    subspace-major left to right from 0.0, the same doubles
+    :func:`_adc_scan_topk_arrow` ranks by.
     """
     import numpy as np
+    import pandas as pd
 
-    impl = impl or _ADC_IMPL
+    from pyspark.sql import types as T
+
     codes = codes_df.select(
         F.col(id_col).alias("neighbor_id"), "pq_code")
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("__qv"),
     )
-    if impl == "arrow":
-        import pandas as pd
+    qrows = q.collect()
+    schema = T.StructType([
+        T.StructField("query_id", q.schema["query_id"].dataType),
+        T.StructField("neighbor_id", codes.schema["neighbor_id"].dataType),
+        T.StructField("adc_dist", T.DoubleType()),
+    ])
+    luts = np.stack([_lut_numpy(r["__qv"], codebooks) for r in qrows])
+    n_sub = luts.shape[1]
+    qids = [r["query_id"] for r in qrows]
 
-        from pyspark.sql import types as T
+    def gen(batches):
+        for pdf in batches:
+            pdf = pdf[pdf["pq_code"].notna()]
+            if not len(pdf):
+                continue
+            c = np.asarray(
+                [np.asarray(x, np.int64) for x in pdf["pq_code"]])
+            d = np.zeros((len(qids), len(pdf)), np.float64)
+            for s in range(n_sub):
+                d += luts[:, s][:, c[:, s]]
+            yield pd.DataFrame({
+                "query_id": np.repeat(qids, len(pdf)),
+                "neighbor_id": np.tile(pdf["neighbor_id"].to_numpy(),
+                                       len(qids)),
+                "adc_dist": d.reshape(-1),
+            })
 
-        qrows = q.collect()
-        nid_field = next(
-            f for f in codes.schema.fields if f.name == "neighbor_id")
-        qid_field = next(
-            f for f in q.schema.fields if f.name == "query_id")
-        schema = T.StructType([
-            T.StructField("query_id", qid_field.dataType),
-            T.StructField("neighbor_id", nid_field.dataType),
-            T.StructField("adc_dist", T.DoubleType()),
-        ])
-        if method == "lut":
-            luts = np.stack(
-                [_lut_numpy(r["__qv"], codebooks) for r in qrows])
-            n_sub = luts.shape[1]
-        else:
-            cb = np.asarray(codebooks, np.float64)  # (n_sub, n_cent, d_sub)
-            qmat = np.asarray([r["__qv"] for r in qrows], np.float64)
-        qids = [r["query_id"] for r in qrows]
+    return codes.mapInPandas(gen, schema=schema)
 
-        def gen(batches):
-            for pdf in batches:
-                pdf = pdf[pdf["pq_code"].notna()]
-                if not len(pdf):
-                    continue
-                c = np.asarray(
-                    [np.asarray(x, np.int64) for x in pdf["pq_code"]])
-                ids = pdf["neighbor_id"].to_numpy()
-                if method == "lut":
-                    d = np.zeros((len(qids), len(pdf)), np.float64)
-                    for s in range(n_sub):
-                        d += luts[:, s][:, c[:, s]]
-                else:
-                    # reconstruct then fold (q_j - r_j)^2 in dim order —
-                    # the same association as the SQL _l2sq twin
-                    recon = np.concatenate(
-                        [cb[s][c[:, s]] for s in range(cb.shape[0])],
-                        axis=1)  # (B, dim)
-                    d = np.zeros((len(qids), len(pdf)), np.float64)
-                    for j in range(recon.shape[1]):
-                        dj = qmat[:, j][:, None] - recon[:, j][None, :]
-                        d += dj * dj
-                out = pd.DataFrame({
-                    "query_id": np.repeat(qids, len(pdf)),
-                    "neighbor_id": np.tile(ids, len(qids)),
-                    "adc_dist": d.reshape(-1),
-                })
-                yield out
 
-        return codes.mapInPandas(gen, schema=schema)
-
-    if method == "lut":
-        ql = _with_pq_lut(q, F.col("__qv"), codebooks, "__lut").select(
-            "query_id", "__lut")
-        return codes.crossJoin(F.broadcast(ql)).select(
-            "query_id", "neighbor_id",
-            _pq_adc_expr(F.col("__lut"), F.col("pq_code")).alias("adc_dist"),
+def _exact_rerank_topk(
+    cand: DataFrame,
+    vectors: DataFrame,
+    qv: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact squared-L2 re-rank of ADC ``(query_id, neighbor_id)``
+    candidates: join each candidate's raw vector from ``vectors`` and the
+    query's ``__qv`` from ``qv``, keep the ``k`` nearest per query.
+    Output ``(query_id, neighbor_id, rank)``."""
+    exact = (
+        cand.join(
+            vectors.select(
+                F.col(id_col).alias("neighbor_id"),
+                F.col(vec_col).cast("array<double>").alias("__cv"),
+            ),
+            on="neighbor_id",
         )
-    recon = codes.withColumn(
-        "__rv", pq_decode(F.col("pq_code"), codebooks))
-    return recon.crossJoin(F.broadcast(q)).select(
-        "query_id", "neighbor_id",
-        _l2sq(F.col("__qv"), F.col("__rv")).alias("adc_dist"),
+        .join(F.broadcast(qv), on="query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            (-_l2sq(F.col("__qv"), F.col("__cv"))).alias("cos_sim"),
+        )
     )
+    return _per_query_topk(exact, k).select("query_id", "neighbor_id", "rank")
 
 
 def pq_topk(
@@ -1358,28 +1311,21 @@ def pq_topk(
     refine: int = 4,
     partial_buckets: int | None = None,
     n_iters: int = 0,
-    impl: str | None = None,
 ) -> DataFrame:
     """PQ approximate top-k with exact re-rank (asymmetric distance via
     per-query LUTs): each query row precomputes the ``n_sub x
-    n_centroids`` table of subspace squared-L2s once (:func:`_with_pq_lut`
+    n_centroids`` table of subspace squared-L2s once (:func:`_lut_numpy`
     — Jégou et al. 2011 §III-B, FAISS's ADC scan), so scoring a candidate
     is ``n_sub`` lookups + adds over its CODES — the scan phase reads
     (id, pq_code) only, never raw vectors or O(dim) reconstructions.
-    Keep ``refine * k`` ADC candidates per query, then re-rank those few
-    exactly. Output (query_id, neighbor_id, rank) by ascending exact
-    squared-L2.
+    Keep ``refine * k`` ADC candidates per query
+    (:func:`_adc_scan_topk_arrow`), then re-rank those few exactly.
+    Output (query_id, neighbor_id, rank) by ascending exact squared-L2.
 
     At scale the corpus stores ``pq_code`` at ingest (pq_encode) and this
     search touches ~n_sub bytes/row instead of the full vector — the
     standard memory-bound ANN formulation alongside IVF's compute-bound one.
-
-    ``impl`` selects the ADC scan engine: ``"arrow"`` (default — NumPy
-    Arrow batches against driver-computed LUTs, bit-identical doubles,
-    see :func:`_adc_scan_topk_arrow`) or ``"sql"`` (the pure-expression
-    oracle twin). Both return the same rows.
     """
-    impl = impl or _ADC_IMPL
     cbs = pq_codebooks(corpus, id_col, vec_col, n_sub, n_centroids, n_iters)
     encoded = pq_encode(corpus, cbs, vec_col).select(
         F.col(id_col).alias("neighbor_id"), "pq_code"
@@ -1388,54 +1334,18 @@ def pq_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("__qv"),
     )
-    if impl == "arrow":
-        qrows = qv.collect()
-        entries = [
-            (r["query_id"], None, _lut_numpy(r["__qv"], cbs)) for r in qrows
-        ]
-        adc = _adc_scan_topk_arrow(
-            encoded, entries, refine * k,
-            qid_type=qv.schema["query_id"].dataType,
-        )
-    else:
-        q = _with_pq_lut(qv, F.col("__qv"), cbs, "__lut")
-        adc = encoded.crossJoin(
-            F.broadcast(q.select("query_id", "__lut"))
-        ).where(
-            F.col("query_id") != F.col("neighbor_id")
-        ).select(
-            "query_id",
-            "neighbor_id",
-            (-_pq_adc_expr(F.col("__lut"), F.col("pq_code"))).alias("cos_sim"),
-        )
-
-    def l2sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
-
+    entries = [
+        (r["query_id"], None, _lut_numpy(r["__qv"], cbs))
+        for r in qv.collect()
+    ]
+    adc = _adc_scan_topk_arrow(
+        encoded, entries, refine * k,
+        qid_type=qv.schema["query_id"].dataType,
+    )
     cand = _per_query_topk(adc, refine * k, partial_buckets).select(
         "query_id", "neighbor_id"
     )
-    exact = (
-        cand.join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).cast("array<double>").alias("__cv"),
-            ),
-            on="neighbor_id",
-        )
-        .join(F.broadcast(qv), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (-l2sq(F.col("__qv"), F.col("__cv"))).alias("cos_sim"),
-        )
-    )
-    out = _per_query_topk(exact, k)
-    return out.select("query_id", "neighbor_id", "rank")
+    return _exact_rerank_topk(cand, corpus, qv, k, id_col, vec_col)
 
 
 def srp_probe_buckets(
@@ -2003,7 +1913,6 @@ def ivfpq_topk(
     n_iters: int = 0,
     pq_iters: int = 0,
     residual: bool = False,
-    impl: str | None = None,
 ) -> DataFrame:
     """IVF + PQ composed ANN — the standard billion-scale index shape
     (FAISS ``IVFx,PQy``; Jégou et al. 2011): the inverted file prunes
@@ -2030,7 +1939,6 @@ def ivfpq_topk(
     touches raw vectors until the final re-rank of ~refine*k rows per
     query.
     """
-    impl = impl or _ADC_IMPL
     # one seed scan serves both trainings (seed_vectors' prefix property);
     # the residual path still seeds its PQ on the residual frame itself
     shared_seeds = seed_vectors(
@@ -2071,88 +1979,18 @@ def ivfpq_topk(
             F.col("__cv"), cents, 1,
         ).select("neighbor_id", "pq_code", F.col("__cids")[0].alias("__cid"))
 
-    if impl == "arrow":
-        # query side to the driver (small by contract): one LUT per
-        # (query, probed cell) — residual LUTs over q - centroid[cid],
-        # with the same elementwise subtraction the zip_with twin does
-        import numpy as np
-
-        rows = probed0.select("query_id", "__qv", "__cids").collect()
-        centd = {cid: np.asarray(cv, np.float64) for cid, cv in cents}
-        entries = []
-        for r in rows:
-            if not r["__cids"]:
-                continue
-            if residual:
-                qvn = np.asarray(r["__qv"], np.float64)
-                for cid in r["__cids"]:
-                    entries.append(
-                        (r["query_id"], cid,
-                         _lut_numpy(qvn - centd[cid], cbs)))
-            else:
-                lut = _lut_numpy(r["__qv"], cbs)
-                for cid in r["__cids"]:
-                    entries.append((r["query_id"], cid, lut))
-        adc = _adc_scan_topk_arrow(
-            c, entries, refine * k, cell_col="__cid",
-            qid_type=probed0.schema["query_id"].dataType,
-        )
-    elif residual:
-        # per-(query, probed-cell) LUT over the query's own residual in
-        # that cell — the residual IVFADC query path
-        probed = probed0.select(
-            "query_id", "__qv", F.explode(F.col("__cids")).alias("__cid")
-        )
-        probed = _with_centroid_vec(probed, F.col("__cid"), cents, "__cc")
-        probed = probed.withColumn(
-            "__qres", F.zip_with(F.col("__qv"), F.col("__cc"),
-                                 lambda a, b: a - b)
-        )
-        q = _with_pq_lut(probed, F.col("__qres"), cbs, "__lut").select(
-            "query_id", "__lut", "__cid"
-        )
-    else:
-        q = _with_pq_lut(probed0, F.col("__qv"), cbs, "__lut").select(
-            "query_id", "__lut", F.explode(F.col("__cids")).alias("__cid")
-        )
-
-    def l2sq(a: Column, b: Column) -> Column:
-        return _l2sq(a, b)
-
-    # each corpus row lives in exactly ONE cell, so the probe join yields
-    # each (query, neighbor) pair at most once — no dedup needed. ADC is
-    # LUT-based: the probed scan reads only (id, pq_code, cid) — never a
-    # vector — and each pair costs n_sub lookups, not an O(dim) fold over
-    # a pq_decode reconstruction.
-    if impl != "arrow":
-        adc = (
-            c.join(F.broadcast(q), on="__cid")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                (-_pq_adc_expr(F.col("__lut"),
-                               F.col("pq_code"))).alias("cos_sim"),
-            )
-        )
+    # query side to the driver (small by contract): one LUT per (query,
+    # probed cell). Each corpus row lives in exactly ONE cell, so a
+    # (query, neighbor) pair is scored at most once; the probed scan reads
+    # only (id, pq_code, cid) — never a vector.
+    rows = probed0.select("query_id", "__qv", "__cids").collect()
+    adc = _adc_scan_topk_arrow(
+        c, _probe_lut_entries(rows, cents, cbs, residual), refine * k,
+        cell_col="__cid", qid_type=probed0.schema["query_id"].dataType,
+    )
     cand = _per_query_topk(adc, refine * k).select("query_id", "neighbor_id")
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("__qv"),
     )
-    exact = (
-        cand.join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).cast("array<double>").alias("__cv"),
-            ),
-            on="neighbor_id",
-        )
-        .join(F.broadcast(qv), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (-l2sq(F.col("__qv"), F.col("__cv"))).alias("cos_sim"),
-        )
-    )
-    return _per_query_topk(exact, k).select("query_id", "neighbor_id", "rank")
+    return _exact_rerank_topk(cand, corpus, qv, k, id_col, vec_col)

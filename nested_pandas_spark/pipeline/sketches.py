@@ -29,6 +29,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..tuning import _ensure_parallelism
+
 __all__ = [
     "hll_rho",
     "hll_registers",
@@ -108,8 +110,6 @@ def hll_registers(
     # same guard the dedup shingle stages use (_ensure_parallelism is a
     # no-op once the scan splits naturally). Projected to (keys, value)
     # first so the rescue shuffle carries narrow rows only.
-    from .dedup import _ensure_parallelism
-
     rows = _ensure_parallelism(
         df.where(c.isNotNull()).select(*keys, c.alias("__hll_v"))
     )
@@ -221,8 +221,6 @@ def cms_sketch(
     keys = list(by or [])
     # widen BEFORE hashing (the hll_registers guard): depth md5s per row
     # on a single-split input would run one-wide — measured 5x at sf0.1
-    from .dedup import _ensure_parallelism
-
     base = _ensure_parallelism(
         df.where(c.isNotNull()).select(*keys, c.alias("__cms_v"))
     )

@@ -47,7 +47,7 @@ def get_spark(app_name: str = "nested-pandas-spark", cpus: int | None = None) ->
         # per-row work is heavy enough to justify widening a tiny scan
         # (codecs, register hashing, shingling) apply the data-aware
         # `_ensure_parallelism` rescue at their own boundary instead
-        # (pipeline/dedup.py), sized by input bytes, not cluster width.
+        # (tuning.py), sized by input bytes, not cluster width.
         # At 100 TB both choices are identical no-ops: size-based
         # splitting already yields far more splits than cores.
         # session contract: parquet TIMESTAMP(NANOS) columns (one testdata

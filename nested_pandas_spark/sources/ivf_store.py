@@ -25,7 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.similarity import (
+    _adc_scan_topk_arrow,
+    _exact_rerank_topk,
     _per_query_topk,
+    _probe_lut_entries,
     cosine,
     ivf_centroids,
     with_nearest_ids,
@@ -388,7 +391,6 @@ def ivfpq_search(
     k: int = 10,
     n_probe: int = 4,
     refine: int = 4,
-    impl: str | None = None,
 ) -> DataFrame:
     """Approximate top-k against a :func:`write_ivfpq_index` store —
     identical math (and output) to
@@ -401,118 +403,33 @@ def ivfpq_search(
     the sidecar) automatically gets the residual query path: one LUT per
     (query, probed cell) against ``q - centroid[cid]``.
 
-    ``impl="arrow"`` (default) runs the ADC scan as NumPy Arrow batches
-    against driver-computed LUTs — bit-identical distances, same rows;
-    ``impl="sql"`` is the pure-expression oracle twin. Partition pruning
-    is identical either way: the probe set is a literal ``isin`` on the
-    partition column BEFORE the scan engine sees a row.
+    The ADC scan runs as NumPy Arrow batches against driver-computed LUTs;
+    the probe set is a literal ``isin`` on the partition column, applied
+    BEFORE the scan sees a row.
     """
-    from ..pipeline.similarity import (
-        _ADC_IMPL,
-        _adc_scan_topk_arrow,
-        _l2sq,
-        _lut_numpy,
-        _pq_adc_expr,
-        _with_centroid_vec,
-        _with_pq_lut,
-    )
-
-    impl = impl or _ADC_IMPL
     meta = _read_sidecar(path)
     cents, cbs = read_ivfpq_meta(path)
-    residual = bool(meta.get("residual"))
-    vec = F.col(vec_col).cast("array<double>")
-    probed0 = with_nearest_ids(
-        queries.select(
-            F.col(id_col).alias("query_id"), vec.alias("__qv")
-        ),
-        F.col("__qv"), cents, n_probe,
+    qv = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("__qv"),
     )
-    if impl == "arrow":
-        import numpy as np
-
-        rows = probed0.select("query_id", "__qv", "__cids").collect()
-        centd = {cid: np.asarray(cv, np.float64) for cid, cv in cents}
-        entries = []
-        for r in rows:
-            if not r["__cids"]:
-                continue
-            if residual:
-                qvn = np.asarray(r["__qv"], np.float64)
-                for cid in r["__cids"]:
-                    entries.append(
-                        (r["query_id"], cid,
-                         _lut_numpy(qvn - centd[cid], cbs)))
-            else:
-                lut = _lut_numpy(r["__qv"], cbs)
-                for cid in r["__cids"]:
-                    entries.append((r["query_id"], cid, lut))
-        probe_cids = sorted({int(cid) for _, cid, _ in entries})
-    else:
-        if residual:
-            probed = probed0.select(
-                "query_id", "__qv", F.explode(F.col("__cids")).alias("__cid")
-            )
-            probed = _with_centroid_vec(probed, F.col("__cid"), cents, "__cc")
-            probed = probed.withColumn(
-                "__qres",
-                F.zip_with(F.col("__qv"), F.col("__cc"), lambda a, b: a - b),
-            )
-            q = _with_pq_lut(probed, F.col("__qres"), cbs, "__lut").select(
-                "query_id", "__lut", "__cid"
-            )
-        else:
-            q = _with_pq_lut(probed0, F.col("__qv"), cbs, "__lut").select(
-                "query_id", "__lut", F.explode(F.col("__cids")).alias("__cid")
-            )
-        probe_cids = sorted(
-            {r["__cid"] for r in q.select("__cid").distinct().collect()})
+    probed0 = with_nearest_ids(qv, F.col("__qv"), cents, n_probe)
+    rows = probed0.select("query_id", "__qv", "__cids").collect()
+    entries = _probe_lut_entries(rows, cents, cbs, bool(meta.get("residual")))
+    probe_cids = sorted({int(cid) for _, cid, _ in entries})
     store = spark.read.parquet(path).where(F.col("__cid").isin(probe_cids))
 
-    def l2sq(a, b):
-        return _l2sq(a, b)
-
-    # ADC phase: only (id, code, partition col) leave the scan; scoring
-    # is LUT-based (per-query subspace distance tables built once above),
-    # so each (query, candidate) pair costs n_sub lookups, never an
-    # O(dim) reconstruction distance
+    # ADC phase: only (id, code, partition col) leave the scan; each
+    # (query, candidate) pair costs n_sub LUT lookups, never an O(dim)
+    # reconstruction distance
     codes = store.select(
         F.col(id_col).alias("neighbor_id"),
         F.col("pq_code"),
         F.col("__cid").cast("long").alias("__cid"),
     )
-    if impl == "arrow":
-        adc = _adc_scan_topk_arrow(
-            codes, entries, refine * k, cell_col="__cid",
-            qid_type=probed0.schema["query_id"].dataType,
-        )
-    else:
-        adc = (
-            codes.join(F.broadcast(q), on="__cid")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                (-_pq_adc_expr(F.col("__lut"),
-                               F.col("pq_code"))).alias("cos_sim"),
-            )
-        )
-    cand = _per_query_topk(adc, refine * k).select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), vec.alias("__qv"))
-    exact = (
-        cand.join(
-            store.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).cast("array<double>").alias("__cv"),
-            ),
-            on="neighbor_id",
-        )
-        .join(F.broadcast(qv), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (-l2sq(F.col("__qv"), F.col("__cv"))).alias("cos_sim"),
-        )
+    adc = _adc_scan_topk_arrow(
+        codes, entries, refine * k, cell_col="__cid",
+        qid_type=probed0.schema["query_id"].dataType,
     )
-    return _per_query_topk(exact, k).select("query_id", "neighbor_id", "rank")
+    cand = _per_query_topk(adc, refine * k).select("query_id", "neighbor_id")
+    return _exact_rerank_topk(cand, store, qv, k, id_col, vec_col)

@@ -2,10 +2,12 @@
 
 Pure functions (unit-testable without a session) encoding the rules of
 thumb the rest of the engine assumes, plus ``apply_scale_conf`` to set the
-runtime-settable knobs on a live session. Numbers follow standard Spark
-sizing practice: ~128 MiB scan splits, shuffle partitions sized so a
-partition fits comfortably in a task's memory share, AQE left on to coalesce
-or split at runtime when the estimates are off.
+runtime-settable knobs on a live session and ``_ensure_parallelism``, the
+small-input parallelism rescue the CPU-heavy per-row operators share.
+Numbers follow standard Spark sizing practice: ~128 MiB scan splits,
+shuffle partitions sized so a partition fits comfortably in a task's memory
+share, AQE left on to coalesce or split at runtime when the estimates are
+off.
 
 At 100 TB the difference between "works" and "falls over" is usually one of
 these knobs: a shuffle with 200 default partitions puts 500 GB in each task;
@@ -14,6 +16,12 @@ helpers make the arithmetic explicit instead of folklore.
 """
 
 from __future__ import annotations
+
+import os
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 MiB = 1 << 20
 GiB = 1 << 30
@@ -60,6 +68,71 @@ def rescue_width_for(
     """
     want = -(-input_bytes // max(bytes_per_task, 1))  # ceil div
     return int(max(2, min(want, max(total_cores, 2))))
+
+
+def _conf_bytes(raw: str) -> int:
+    """Parse a Spark size conf ('134217728', '128m', '1g') to bytes."""
+    s = raw.strip().lower().removesuffix("b")
+    mult = 1
+    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
+        if s.endswith(suffix):
+            s, mult = s[:-1], m
+            break
+    return int(float(s) * mult)
+
+
+def _ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition when the scan would yield fewer partitions
+    than cores. CPU-bound per-row stages (shingle hashing, sketch
+    registers, media codecs) on a small parquet file arrive as ONE split
+    and would run single-threaded. At real scale files exceed
+    maxPartitionBytes and split naturally — this only rescues the
+    small-input case, at the cost of one cheap shuffle of the input rows.
+
+    The rescue width is DATA-sized, not cluster-sized
+    (:func:`rescue_width_for` at its 64 KiB-per-task default): a
+    repartition to the full core count schedules ``cores`` map+reduce
+    tasks however little work exists, and the round-10 driver bench
+    showed that tax exceeding the win on a contended 32-core host.
+
+    Connect-safe: estimates the scan's split count from ``df.inputFiles()``
+    + driver-visible file sizes instead of probing ``df.rdd`` (which forces
+    a plan->RDD conversion and does not exist under Spark Connect).
+    Non-local URIs and in-memory relations are assumed already parallel —
+    at scale that is the case this heuristic exists to NOT touch.
+    Streaming frames are returned unchanged (no ``inputFiles()``, and
+    micro-batch parallelism is the source's concern).
+    """
+    from .session import default_parallelism
+
+    if df.isStreaming:
+        return df
+    spark = df.sparkSession
+    target = default_parallelism(spark)
+    files = df.inputFiles()
+    if not files:
+        return df  # in-memory relation: creator already chose partitioning
+    max_pb = _conf_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    )
+    est_splits = 0
+    total_bytes = 0
+    for f in files:
+        path = f.removeprefix("file:")
+        if "://" in f and not f.startswith("file:"):
+            return df  # remote store: big-data layout, splits naturally
+        try:
+            size = os.path.getsize(path)
+        except OSError:
+            size = max_pb
+        total_bytes += size
+        est_splits += max(1, -(-size // max_pb))
+        if est_splits >= max(2, target // 2):
+            return df
+    width = rescue_width_for(total_bytes, target)
+    if width <= est_splits:
+        return df  # the scan already yields that many data-carrying splits
+    return df.repartition(width)
 
 
 def shuffle_partitions_for(

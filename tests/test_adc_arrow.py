@@ -1,11 +1,21 @@
-"""Arrow ADC scan vs the SQL expression twin.
+"""Arrow ADC scan vs a plain-Python replay of its definition.
 
-The shipped PQ/IVFPQ candidate scan (``impl="arrow"``,
-``similarity._adc_scan_topk_arrow``) must return exactly the rows the
-pure-expression path returns — same LUT doubles (same per-dimension fold
-order), same tournament total order (distance asc, id asc), same
-self-exclusion. These tests pin the bit-level equality contract that lets
-the DuckDB oracles keep gating the arrow path.
+The PQ/IVFPQ candidate scan (``similarity._adc_scan_topk_arrow``) and the
+all-pairs ADC surface (``similarity.pq_adc_scores``) must produce exactly
+the doubles and rows the definition gives when replayed one float at a
+time here:
+
+- each LUT entry ``lut[s][c]`` = sum over the subspace's dimensions, left
+  to right from 0.0, of ``(q_j - c_j) * (q_j - c_j)``
+- each pair's distance = ``sum_s lut[s][code[s]]``, subspace-major, left to
+  right from 0.0
+- candidates ordered by (distance, id), the query's own id excluded
+- rows with a NULL code, or a NULL cell in by-cell mode, skipped
+
+Comparisons are ``==`` on doubles: the DuckDB oracles replay the same
+summation order, so any drift in association would break them too.
+End-to-end equality (store == inline, full-probe == ``pq_topk``) lives in
+``test_pipeline.py``.
 """
 
 import numpy as np
@@ -14,78 +24,178 @@ from pyspark.sql import functions as F
 
 from nested_pandas_spark.pipeline import similarity as sim
 
+N_SUB, D_SUB, N_CENT = 4, 3, 6
+PER_Q = 5
+
+
+def _replay_lut(qv, codebooks):
+    d_sub = len(codebooks[0][0])
+    lut = []
+    for s, cb in enumerate(codebooks):
+        row = []
+        for cvec in cb:
+            acc = 0.0
+            for j in range(d_sub):
+                d = qv[s * d_sub + j] - cvec[j]
+                acc = acc + d * d
+            row.append(acc)
+        lut.append(row)
+    return lut
+
+
+def _replay_dist(lut, code):
+    acc = 0.0
+    for s in range(len(code)):
+        acc = acc + lut[s][code[s]]
+    return acc
+
 
 @pytest.fixture(scope="module")
 def emb(spark):
     rng = np.random.default_rng(7)
-    rows = [
-        (int(i), [float(x) for x in rng.normal(size=16)])
-        for i in range(300)
+    return spark.createDataFrame(
+        [(int(i), [float(x) for x in rng.normal(size=16)])
+         for i in range(300)],
+        "vec_id long, embedding array<float>",
+    )
+
+
+@pytest.fixture(scope="module")
+def space():
+    rng = np.random.default_rng(11)
+    codebooks = [
+        [[float(x) for x in rng.normal(size=D_SUB)] for _ in range(N_CENT)]
+        for _ in range(N_SUB)
     ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = {
+        qid: [float(x) for x in rng.normal(size=N_SUB * D_SUB)]
+        for qid in (3, 17, 42)
+    }
+    centroids = [
+        (cid, [float(x) for x in rng.normal(size=N_SUB * D_SUB)])
+        for cid in range(3)
+    ]
+    rows = []
+    for i in range(240):
+        code = [int(c) for c in rng.integers(0, N_CENT, size=N_SUB)]
+        cell = int(rng.integers(0, 3))
+        if i % 37 == 5:
+            code = None
+        if i % 41 == 7:
+            cell = None
+        rows.append((i, code, cell))
+    return codebooks, queries, centroids, rows
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+@pytest.fixture(scope="module")
+def codes_df(spark, space):
+    rows = space[3]
+    return spark.createDataFrame(
+        rows, "neighbor_id long, pq_code array<int>, __cid long"
+    ).repartition(3)
 
 
-def test_pq_topk_arrow_equals_sql(emb):
-    q = emb.where(F.col("vec_id") < 5)
-    kw = dict(k=4, n_sub=4, n_centroids=8, refine=3, n_iters=1)
-    assert _rows(sim.pq_topk(emb, q, impl="arrow", **kw)) == _rows(
-        sim.pq_topk(emb, q, impl="sql", **kw))
+def _topk(scored):
+    """Per query: the PER_Q (id, -dist) pairs in (dist, id) order."""
+    out = {}
+    for qid, pairs in scored.items():
+        ranked = sorted(pairs, key=lambda p: (p[1], p[0]))[:PER_Q]
+        out[qid] = [(nid, -d) for nid, d in ranked]
+    return out
+
+
+def _kernel_topk(df):
+    got = {}
+    for r in df.collect():
+        got.setdefault(r["query_id"], []).append(
+            (r["neighbor_id"], -r["cos_sim"]))
+    return got, _topk(got)
+
+
+def test_adc_scan_flat_matches_replay(codes_df, space):
+    codebooks, queries, _, rows = space
+    entries = [(qid, None, sim._lut_numpy(qv, codebooks))
+               for qid, qv in queries.items()]
+    for qid, _, lut in entries:
+        assert lut.tolist() == _replay_lut(queries[qid], codebooks)
+
+    want = {}
+    for qid, qv in queries.items():
+        lut = _replay_lut(qv, codebooks)
+        want[qid] = [(nid, _replay_dist(lut, code))
+                     for nid, code, _ in rows
+                     if code is not None and nid != qid]
+
+    got, got_top = _kernel_topk(sim._adc_scan_topk_arrow(
+        codes_df.select("neighbor_id", "pq_code"), entries, PER_Q))
+    exact = {qid: dict(pairs) for qid, pairs in want.items()}
+    assert all(exact[qid][nid] == d
+               for qid, pairs in got.items() for nid, d in pairs)
+    assert got_top == _topk(want)
 
 
 @pytest.mark.parametrize("residual", [False, True])
-def test_ivfpq_topk_arrow_equals_sql(emb, residual):
-    q = emb.where(F.col("vec_id") < 5)
-    kw = dict(k=4, n_centroids=4, n_probe=2, n_sub=4, pq_centroids=8,
-              refine=3, n_iters=1, pq_iters=1, residual=residual)
-    assert _rows(sim.ivfpq_topk(emb, q, impl="arrow", **kw)) == _rows(
-        sim.ivfpq_topk(emb, q, impl="sql", **kw))
+def test_adc_scan_by_cell_matches_replay(codes_df, space, residual):
+    codebooks, queries, centroids, rows = space
+    probes = {3: [0, 2], 17: [1], 42: [2, 1]}
+    collected = [{"query_id": qid, "__qv": queries[qid], "__cids": probes[qid]}
+                 for qid in queries]
+    collected.append({"query_id": 99, "__qv": queries[3], "__cids": []})
+    entries = sim._probe_lut_entries(collected, centroids, codebooks, residual)
+    cents = dict(centroids)
+
+    def query_lut(qid, cid):
+        qv = queries[qid]
+        if residual:
+            qv = [a - b for a, b in zip(qv, cents[cid])]
+        return _replay_lut(qv, codebooks)
+
+    assert [(q, c) for q, c, _ in entries] == [
+        (qid, cid) for qid in queries for cid in probes[qid]]
+    for qid, cid, lut in entries:
+        assert lut.tolist() == query_lut(qid, cid)
+
+    want = {}
+    for qid in queries:
+        for cid in probes[qid]:
+            lut = query_lut(qid, cid)
+            want.setdefault(qid, []).extend(
+                (nid, _replay_dist(lut, code))
+                for nid, code, cell in rows
+                if code is not None and cell == cid and nid != qid)
+
+    got, got_top = _kernel_topk(sim._adc_scan_topk_arrow(
+        codes_df, entries, PER_Q, cell_col="__cid"))
+    exact = {qid: dict(pairs) for qid, pairs in want.items()}
+    assert all(exact[qid][nid] == d
+               for qid, pairs in got.items() for nid, d in pairs)
+    assert got_top == _topk(want)
 
 
-def test_pq_adc_scores_bit_identical_per_method(emb):
-    """arrow and sql produce bit-identical distances for each method;
-    lut vs recon differ only by FP association (subspace-grouped vs
-    full-dimension summation)."""
+def test_pq_adc_scores_matches_replay(emb):
     q = emb.where(F.col("vec_id") < 3)
     cbs = sim.pq_codebooks(emb, n_sub=4, n_centroids=8, n_iters=1)
     enc = sim.pq_encode(emb, cbs).select("vec_id", "pq_code")
 
-    def scores(method, impl):
-        return {
-            (r["query_id"], r["neighbor_id"]): r["adc_dist"]
-            for r in sim.pq_adc_scores(
-                enc, q, cbs, method=method, impl=impl).collect()
-        }
-
-    for method in ("lut", "recon"):
-        a, s = scores(method, "arrow"), scores(method, "sql")
-        assert a.keys() == s.keys() and len(a) == 3 * 300
-        assert all(a[k] == s[k] for k in a), method
-
-    lut, recon = scores("lut", "arrow"), scores("recon", "arrow")
-    assert all(abs(lut[k] - recon[k]) <= 1e-9 * max(1.0, abs(lut[k]))
-               for k in lut)
-
-
-def test_ivfpq_search_store_arrow_equals_sql(emb, tmp_path, spark):
-    from nested_pandas_spark.sources.ivf_store import (
-        ivfpq_search,
-        write_ivfpq_index,
-    )
-
-    path = str(tmp_path / "idx")
-    write_ivfpq_index(emb, path, n_centroids=4, n_iters=1, n_sub=4,
-                      pq_centroids=8, residual=True)
-    q = emb.where(F.col("vec_id") < 5)
-    a = _rows(ivfpq_search(spark, path, q, k=4, n_probe=2, impl="arrow"))
-    s = _rows(ivfpq_search(spark, path, q, k=4, n_probe=2, impl="sql"))
-    assert a == s and len(a) == 20
+    luts = {
+        r["vec_id"]: _replay_lut(r["v"], cbs)
+        for r in q.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        ).collect()
+    }
+    want = {
+        (qid, r["vec_id"]): _replay_dist(lut, r["pq_code"])
+        for r in enc.collect() for qid, lut in luts.items()
+    }
+    got = {
+        (r["query_id"], r["neighbor_id"]): r["adc_dist"]
+        for r in sim.pq_adc_scores(enc, q, cbs).collect()
+    }
+    assert got.keys() == want.keys() and len(got) == 3 * 300
+    assert all(got[k] == want[k] for k in want)
 
 
-def test_append_rejects_wrong_dim_and_schema(emb, tmp_path, spark):
+def test_append_rejects_wrong_dim_and_schema(emb, tmp_path):
     from nested_pandas_spark.sources.ivf_store import (
         append_ivf_index,
         write_ivf_index,

@@ -50,3 +50,37 @@ def test_apply_scale_conf_sets_runtime_knobs(spark):
         assert int(applied["spark.sql.execution.arrow.maxRecordsPerBatch"]) == 6710
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_ensure_parallelism_rescue_decision(spark, tmp_path):
+    """The small-input rescue widens only a local scan with too few splits,
+    to the data-sized width; many-file scans, in-memory frames and
+    streaming frames come back as the same object."""
+    import os
+
+    from nested_pandas_spark.session import default_parallelism
+    from nested_pandas_spark.tuning import _ensure_parallelism, rescue_width_for
+
+    cores = default_parallelism(spark)
+    rows = spark.range(20_000).selectExpr("id", "rand(7) AS x")
+
+    one = str(tmp_path / "one")
+    rows.coalesce(1).write.parquet(one)
+    df = spark.read.parquet(one)
+    (part,) = df.inputFiles()
+    size = os.path.getsize(part.removeprefix("file:"))
+    plan = _ensure_parallelism(df)._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "Repartition" and plan.shuffle()
+    assert plan.numPartitions() == rescue_width_for(size, cores)
+
+    many = str(tmp_path / "many")
+    rows.repartition(max(2, cores // 2)).write.parquet(many)
+    wide = spark.read.parquet(many)
+    assert len(wide.inputFiles()) >= max(2, cores // 2)
+    assert _ensure_parallelism(wide) is wide
+
+    mem = spark.createDataFrame([(1, 2.0)], "id long, x double")
+    assert _ensure_parallelism(mem) is mem
+
+    stream = spark.readStream.format("rate").load()
+    assert _ensure_parallelism(stream) is stream

@@ -1085,22 +1085,17 @@ def main() -> int:
 
     # -- 36. pq_topk ADC scan: LUT lookups over codes, no reconstruction ----
     q36 = emb.where(F.col("vec_id") < 10)
-    pq_sql = sim.pq_topk(emb, q36, k=3, n_sub=4, n_centroids=8, refine=4,
-                         impl="sql")
-    p36a = pq_sql._jdf.queryExecution().analyzed().toString()
-    check(
-        "pq_topk SQL twin scores via per-query LUT, not reconstructions",
-        "__lut" in p36a and "__recon" not in p36a,
-        "expected a __lut column in the analyzed plan and no __recon",
-    )
     pq_df = sim.pq_topk(emb, q36, k=3, n_sub=4, n_centroids=8, refine=4)
-    p36b = pq_df._jdf.queryExecution().analyzed().toString()
+    p36 = pq_df._jdf.queryExecution().analyzed().toString()
     check(
-        "pq_topk shipped scan is the Arrow kernel (no LUT expression tree,"
-        " no code crossJoin)",
-        "MapInPandas" in p36b and "__lut" not in p36b,
-        "expected a MapInPandas ADC scan and no __lut column in the "
-        "default plan",
+        "pq_topk ADC scan is the Arrow kernel",
+        "MapInPandas" in p36,
+        "expected a MapInPandas ADC scan in the analyzed plan",
+    )
+    check(
+        "pq_topk builds no LUT expression column and no code crossJoin",
+        "__lut" not in p36 and "Join Cross" not in p36,
+        "expected no __lut column and no cross join in the analyzed plan",
     )
     sections.append((
         "PQ top-k: ADC scan reads codes only (per-query LUT)",
@@ -1109,16 +1104,14 @@ def main() -> int:
         "same machinery as ivfpq_topk) — the scan never materializes an "
         "O(dim) reconstruction per (query, candidate) pair, so at 100 TB "
         "it touches ~n_sub bytes per corpus row. Raw vectors are read "
-        "only for the refine*k exact re-rank per query. The shipped scan "
-        "engine is an Arrow-batched NumPy kernel (MapInPandas: LUT "
-        "gather-adds, per-batch tournament truncation — bit-identical "
-        "doubles to the SQL twin, which stays selectable via impl='sql' "
-        "as the oracle-replayable formulation).",
+        "only for the refine*k exact re-rank per query. The scan is one "
+        "Arrow-batched NumPy kernel (MapInPandas: driver-built LUTs ride "
+        "in the closure, gather-adds per batch, per-batch tournament "
+        "truncation), so the plan carries no LUT column and no "
+        "codes x queries crossJoin.",
         "\n".join(
-            ln.strip() for ln in p36a.splitlines() if "__lut" in ln
-        )[:300] + "\n--- default (arrow) ---\n" + "\n".join(
-            ln.strip() for ln in p36b.splitlines() if "MapInPandas" in ln
-        )[:200],
+            ln.strip() for ln in p36.splitlines() if "MapInPandas" in ln
+        )[:300],
     ))
 
     # -- 37. eTLD+1 lookup: zero shuffle, one literal map, codegen-sized ----
