@@ -22,7 +22,11 @@ Scale notes (100 TB):
   ``nest_rolling`` / ``nest_cum`` / ``nest_ewm``: the same operator routed
   through explode -> window/groupBy -> order-preserving repack, linear per
   cell, result-identical (use ``pack`` + ``count_nested`` to find the mega
-  cells first).
+  cells first). The explode engine stamps rows with
+  ``monotonically_increasing_id`` and reads the stamp from two plan branches
+  (the exploded side and the join-back side); the id is deterministic only
+  for one physical execution, so the stamped frame is a ``snapshot``
+  (``session.py``) taken before branching.
 * ``phase_fold`` is a pure per-element ``transform`` — one pass, no shuffle.
 * Integer (int64-nanosecond) timestamps never pass through ``double``:
   epoch-nano magnitudes (~1.7e18) exceed double's 2^53 exact range, so all
@@ -38,6 +42,7 @@ from pyspark.sql import types as T
 
 from ..functions.nested import nested_field_names, quote, struct_sql
 from ..nestedframe.expr import _sql_literal
+from ..session import snapshot
 
 __all__ = ["rebin", "phase_fold", "nest_diff", "nest_rolling", "sigma_clip",
            "trend_slope", "nest_zscore", "nest_topk", "nest_wmean", "nest_interp",
@@ -105,31 +110,6 @@ def _floor_bin_sql(expr: str, width, origin, integral: bool) -> str:
     return f"CAST(floor((({expr}) - CAST({origin} AS DOUBLE)) / CAST({width} AS DOUBLE)) AS BIGINT)"
 
 
-def _stamped(df: DataFrame) -> DataFrame:
-    """Row-id-stamped, eagerly SNAPSHOTTED frame for the explode engine.
-
-    ``monotonically_increasing_id`` is deterministic only for one physical
-    execution of one plan; the explode engine references the stamped frame
-    from two plan branches (the exploded side and the join-back side), so
-    it must be materialized once before branching or a recomputation could
-    renumber rows and silently mis-join.
-
-    ``localCheckpoint(eager=True)`` rather than ``persist`` (round-4
-    advice): a persist rides in the CacheManager until someone calls
-    ``unpersist`` — but the lazy result needs the stamp on EVERY action,
-    so no safe unpersist point exists inside the operator, and repeated
-    explode-engine calls accumulated cached mega-cell frames for the
-    session lifetime. The local checkpoint is a one-time eager snapshot
-    (also immune to cache eviction-then-recompute renumbering) whose
-    blocks the ContextCleaner releases as soon as the result DataFrame is
-    garbage-collected — lifetime tied to the result, not the session.
-    The snapshot is the price of the escape hatch — the explode engine is
-    for mega-cell frames where per-cell O(n^2) HOFs are the bigger cost.
-    """
-    stamped = df.withColumn("__rid", F.monotonically_increasing_id())
-    return stamped.localCheckpoint(eager=True)
-
-
 def _check_engine(engine: str) -> None:
     if engine not in ("hof", "explode"):
         raise ValueError(f"engine must be 'hof' or 'explode', got {engine!r}")
@@ -188,7 +168,8 @@ def _rebin_explode(
     a single row's elements never split across input partitions, so the
     partial aggregate folds values in array order, exactly like the HOF
     fold (0.0 + v1 + ... with the same final division for the mean)."""
-    stamped = _stamped(df)
+    stamped = snapshot(
+        df.withColumn("__rid", F.monotonically_increasing_id()))
     if kind == "timestamp":
         t_sql = f"unix_micros(CAST(__e.{quote(time_field)} AS TIMESTAMP))"
     else:
@@ -523,7 +504,8 @@ def nest_rolling(
     if engine == "explode":
         from pyspark.sql import Window as W
 
-        stamped = _stamped(df)
+        stamped = snapshot(
+            df.withColumn("__rid", F.monotonically_increasing_id()))
         flat = stamped.select(
             "__rid", F.posexplode(F.col(nest)).alias("__pos", "__e")
         )
@@ -1059,7 +1041,8 @@ def _ewm_explode(
     import pandas as pd
 
     onema = 1.0 - a
-    stamped = _stamped(df)
+    stamped = snapshot(
+        df.withColumn("__rid", F.monotonically_increasing_id()))
     flat = (
         stamped.select("__rid", F.posexplode(F.col(nest)).alias("__pos", "__e"))
         .select(
@@ -1211,7 +1194,8 @@ def nest_cum(
     if engine == "explode":
         from pyspark.sql import Window as W
 
-        stamped = _stamped(df)
+        stamped = snapshot(
+            df.withColumn("__rid", F.monotonically_increasing_id()))
         flat = stamped.select(
             "__rid", F.posexplode(F.col(nest)).alias("__pos", "__e")
         )
@@ -1288,7 +1272,8 @@ def nest_dedup(
     if engine == "explode":
         from pyspark.sql import Window as W
 
-        stamped = _stamped(df)
+        stamped = snapshot(
+            df.withColumn("__rid", F.monotonically_increasing_id()))
         flat = stamped.select(
             "__rid", F.posexplode(F.col(nest)).alias("__pos", "__e")
         )
@@ -2106,7 +2091,8 @@ def _nest_align_explode(
             return f"unix_micros(CAST({var}.{field} AS TIMESTAMP))"
         return f"{var}.{field}"
 
-    stamped = _stamped(df)
+    stamped = snapshot(
+        df.withColumn("__rid", F.monotonically_increasing_id()))
     lflat = stamped.select(
         "__rid", F.posexplode(F.col(left_nest)).alias("__pos", "__x")
     ).withColumn("__t", F.expr(f"CAST({t_sql(lkind, '__x', qlt)} AS {t_type})"))

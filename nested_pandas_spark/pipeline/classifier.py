@@ -43,6 +43,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cached
 from .dedup import _h32
 from .text import words
 
@@ -168,14 +169,13 @@ def train_quality_classifier(
         .withColumnRenamed(id_col, "__id")
         .join(labels, on="__id")
         .repartition("__id")
-        .persist()
     )
-    try:
+    with cached(feats) as feats:
         # n (the document count) is NOT computed by a separate count()
         # job: every document carries exactly one intercept feature row,
         # so the intercept bucket's row count inside the gradient
         # aggregation IS n. Epoch 1's collect therefore also materializes
-        # the persisted features — one action per epoch, nothing else.
+        # the cached features — one action per epoch, nothing else.
         # The division by n moves to the driver: same two IEEE doubles,
         # bit-identical g (the trained weights stay value-gated).
         n = 0
@@ -226,8 +226,6 @@ def train_quality_classifier(
                 g = float(row["gsum"]) / n
                 decay = 1.0 if b == INTERCEPT_BUCKET else (1.0 - lr * l2)
                 w[b] = w.get(b, 0.0) * decay - lr * g
-    finally:
-        feats.unpersist()
     return _weights_df(spark, w)
 
 

@@ -21,6 +21,7 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import default_parallelism, snapshot
 from .dedup import (
     _h32,
     exact_dedup,
@@ -67,7 +68,7 @@ def _stream_starts(
     """(id, __sz, __start): each row's exclusive running-sum position in the
     ``order_expr``-ordered stream of ``size_expr`` weights. ``carry``
     adds extra aliased Column expressions to the partitioned projection
-    (evaluated once, cached with it) — e.g. a token size riding along a
+    (evaluated once, materialized with it) — e.g. a token size riding along a
     unit-weight rank computation.
 
     The distributed prefix sum shared by :func:`pack_sequences` and
@@ -84,21 +85,18 @@ def _stream_starts(
     physical partitioning or rows near a boundary could land in a
     different ``__pid`` on recomputation and silently corrupt every
     ``__start``. The partitioned projection (id, size, key — never text)
-    is therefore persisted (memory, spilling to local disk) before the
-    totals collect materializes it; the returned plan reads the same
-    cached partitions. A persist only survives as long as its executors:
+    is therefore a ``snapshot`` (``session.py``: an eager local
+    checkpoint) taken before the totals collect; the returned plan reads
+    the same materialized partitions, and their blocks live as long as
+    that plan. A local checkpoint only survives as long as its executors:
     at 100 TB a lost executor mid-job would silently recompute a
     differently-partitioned slice — pass ``checkpoint=True`` to pin the
     projection with a RELIABLE checkpoint (written to
     ``sparkContext.setCheckpointDir``, which must be a fault-tolerant
     filesystem at scale) so offsets also survive executor loss. The
-    cached/checkpointed slice is ~24 bytes/doc either way.
+    materialized slice is ~24 bytes/doc either way.
     """
-    from pyspark import StorageLevel
-
     spark = docs.sparkSession
-    from ..session import default_parallelism
-
     par = default_parallelism(spark)
     base = (
         docs.select(F.col(id_col), size_expr.cast("long").alias("__sz"),
@@ -124,13 +122,15 @@ def _stream_starts(
         # repartitionByRange boundaries
         base = base.checkpoint(eager=True)
     else:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+        base = snapshot(base)
 
     # tiny: one row per partition — exclusive prefix offsets driver-side.
     # (repartitionByRange makes partition ids follow the key ranges, so
-    # cumulating totals in __pid order IS the global stream order.)
-    # This collect is also what materializes the cache above.
-    totals = base.groupBy("__pid").agg(F.sum("__sz").alias("__t")).collect()
+    # cumulating totals in __pid order IS the global stream order.) A NULL
+    # size adds nothing, as in the running sum: a partition of NULL-size
+    # rows totals 0, not NULL.
+    totals = base.groupBy("__pid").agg(
+        F.coalesce(F.sum("__sz"), F.lit(0)).alias("__t")).collect()
     run, offs = 0, []
     for r in sorted(totals, key=lambda r: r["__pid"]):
         offs.append((r["__pid"], run))
@@ -913,9 +913,8 @@ def clean_corpus(
         # fine when the filters are cheap projections (the q29 path),
         # ruinous once the O(n^2)-per-doc repetition HOFs are in it.
         # Snapshot the filtered corpus ONCE; everything downstream reads
-        # the materialized rows. localCheckpoint, not persist, so the
-        # blocks die with the result frame (the _stamped lesson).
-        kept = kept.localCheckpoint(eager=True)
+        # the materialized rows.
+        kept = snapshot(kept)
     if min_bigram_logprob is not None:
         lp = bigram_logprob(kept, id_col=id_col, text_col=text_col)
         ok_ids = lp.where(
@@ -1307,8 +1306,6 @@ def sample_per_group(
     n = int(n)
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    from ..session import default_parallelism
-
     buckets = default_parallelism(docs.sparkSession) * 4
     h = F.md5(F.concat_ws(":", F.lit(str(int(seed))),
                           F.col(id_col).cast("string")))
@@ -1645,7 +1642,7 @@ def pack_whole_docs(
 
     ``id_col`` values should be unique: rank positions are unique
     regardless (running count, not dense_rank), but the relative order
-    of EQUAL ids follows the persisted physical partitioning rather
+    of EQUAL ids follows the snapshotted physical partitioning rather
     than a stable total order."""
     if capacity < 1:
         raise ValueError("capacity must be >= 1")

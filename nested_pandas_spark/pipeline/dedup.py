@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cached, snapshot
 from ..tuning import _ensure_parallelism
 from .text import fingerprint, word_ngrams, words
 
@@ -423,10 +424,10 @@ def ngram_jaccard_pairs(
     base = _ensure_parallelism(df)
     if candidates is not None:
         # The candidate pair set is consumed three times below (two id
-        # projections + the pair join); without a persist each consumption
+        # projections + the pair join); without a snapshot each consumption
         # re-executes the ENTIRE candidate-generation sub-plan (e.g. the
         # LSH pipeline). Pairs are (bigint, bigint) — tiny at any scale.
-        candidates = candidates.select("id_a", "id_b").persist()
+        candidates = snapshot(candidates.select("id_a", "id_b"))
         # verify mode touches only candidate documents: semi-join on the
         # candidate id set BEFORE computing shingles, so the expensive
         # tokenize+ngram pass runs over |candidates| docs, not the corpus
@@ -453,10 +454,10 @@ def ngram_jaccard_pairs(
         # verify-only mode: join each candidate pair to its two shingle sets
         # and compute the exact Jaccard per pair with array_intersect — work
         # is O(|candidates| * shingles), never an all-pairs or index join.
-        # sh is consumed twice (a/b sides): persist the candidate docs'
+        # sh is consumed twice (a/b sides): snapshot the candidate docs'
         # shingle sets (bounded by the candidate count) so the upstream
         # scan+tokenize chain runs once, not twice.
-        sh = sh.persist()
+        sh = snapshot(sh)
         a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa"))
         b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb"))
         paired = candidates.select("id_a", "id_b").join(a, on="id_a").join(b, on="id_b")
@@ -739,9 +740,10 @@ def connected_components(
     label's label); the label-of-label hop halves chain lengths, so rounds
     are O(log diameter) — and dedup clusters have tiny diameters, so this
     converges in 2-3 rounds in practice. Every round shuffles only
-    ``(bigint, bigint)`` label rows, never documents; each round's result
-    is persisted and the previous unpersisted, keeping lineage flat (the
-    same structure the large-star/small-star map-reduce CC algorithm uses).
+    ``(bigint, bigint)`` label rows, never documents; the edge table is
+    cached for the call and each round's labels are a snapshot, keeping
+    lineage flat (the same structure the large-star/small-star map-reduce
+    CC algorithm uses).
 
     Nodes appearing in no pair are absent from the output (they are their
     own singleton components; ``resolve_duplicates`` treats missing as
@@ -759,78 +761,72 @@ def connected_components(
         F.col(id_a).cast("long").alias("u"), F.col(id_b).cast("long").alias("v")
     )
     edges = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    edges = edges.persist()
+    with cached(edges) as edges:
+        if small_graph_threshold > 0:
+            # limit()+count probes boundedly: never scans past threshold+1 rows
+            probe = edges.limit(small_graph_threshold + 1).count()
+            if probe <= small_graph_threshold:
+                rows = edges.collect()
+                parent: dict[int, int] = {}
 
-    if small_graph_threshold > 0:
-        # limit()+count probes boundedly: never scans past threshold+1 rows
-        probe = edges.limit(small_graph_threshold + 1).count()
-        if probe <= small_graph_threshold:
-            rows = edges.collect()
-            edges.unpersist()
-            parent: dict[int, int] = {}
+                def find(x: int) -> int:
+                    root = x
+                    while parent.get(root, root) != root:
+                        root = parent[root]
+                    while parent.get(x, x) != x:  # path compression
+                        parent[x], x = root, parent[x]
+                    return root
 
-            def find(x: int) -> int:
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:  # path compression
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in rows:
-                ru, rv = find(r["u"]), find(r["v"])
-                if ru != rv:
-                    # union by MIN id so the root IS the component label
-                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                    parent[hi] = lo
-            nodes = {r["u"] for r in rows}
-            out = [(n, find(n)) for n in sorted(nodes)]
-            return pairs.sparkSession.createDataFrame(
-                out or [], "node long, component long"
+                for r in rows:
+                    ru, rv = find(r["u"]), find(r["v"])
+                    if ru != rv:
+                        # union by MIN id so the root IS the component label
+                        lo, hi = (ru, rv) if ru < rv else (rv, ru)
+                        parent[hi] = lo
+                nodes = {r["u"] for r in rows}
+                out = [(n, find(n)) for n in sorted(nodes)]
+                return pairs.sparkSession.createDataFrame(
+                    out or [], "node long, component long"
+                )
+        # initial label: min(self, min neighbor) — one round for free
+        lbl = snapshot(
+            edges.groupBy("u")
+            .agg(F.min("v").alias("nmin"))
+            .select("u", F.least(F.col("u"), F.col("nmin")).alias("lbl"))
+        )
+        for _ in range(max_iter):
+            nbr = (
+                edges.join(
+                    lbl.select(F.col("u").alias("v"), F.col("lbl").alias("vlbl")),
+                    "v",
+                )
+                .groupBy("u")
+                .agg(F.min("vlbl").alias("nlbl"))
             )
-
-    # initial label: min(self, min neighbor) — one round for free
-    lbl = (
-        edges.groupBy("u")
-        .agg(F.min("v").alias("nmin"))
-        .select("u", F.least(F.col("u"), F.col("nmin")).alias("lbl"))
-        .persist()
-    )
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(
-                lbl.select(F.col("u").alias("v"), F.col("lbl").alias("vlbl")), "v"
+            stepped = (
+                lbl.join(nbr, "u", "left")
+                .select("u", F.least("lbl", "nlbl").alias("lbl"))
             )
-            .groupBy("u")
-            .agg(F.min("vlbl").alias("nlbl"))
-        )
-        stepped = (
-            lbl.join(nbr, "u", "left")
-            .select("u", F.least("lbl", "nlbl").alias("lbl"))
-        )
-        # pointer doubling: lbl(u) <- min(lbl(u), lbl(lbl(u)))
-        doubled = (
-            stepped.alias("x")
-            .join(
-                stepped.select(
-                    F.col("u").alias("pu"), F.col("lbl").alias("plbl")
-                ).alias("y"),
-                F.col("x.lbl") == F.col("y.pu"),
-                "left",
+            # pointer doubling: lbl(u) <- min(lbl(u), lbl(lbl(u)))
+            doubled = snapshot(
+                stepped.alias("x")
+                .join(
+                    stepped.select(
+                        F.col("u").alias("pu"), F.col("lbl").alias("plbl")
+                    ).alias("y"),
+                    F.col("x.lbl") == F.col("y.pu"),
+                    "left",
+                )
+                .select(F.col("x.u").alias("u"), F.least("x.lbl", "plbl").alias("lbl"))
             )
-            .select(F.col("x.u").alias("u"), F.least("x.lbl", "plbl").alias("lbl"))
-            .persist()
-        )
-        converged = (
-            doubled.join(lbl.select("u", F.col("lbl").alias("old")), "u")
-            .where(F.col("lbl") < F.col("old"))
-            .isEmpty()
-        )
-        lbl.unpersist()
-        lbl = doubled
-        if converged:
-            break
-    edges.unpersist()
+            converged = (
+                doubled.join(lbl.select("u", F.col("lbl").alias("old")), "u")
+                .where(F.col("lbl") < F.col("old"))
+                .isEmpty()
+            )
+            lbl = doubled
+            if converged:
+                break
     return lbl.select(F.col("u").alias("node"), F.col("lbl").alias("component"))
 
 

@@ -11,10 +11,8 @@ PageRank, Spark-first: each iteration is one join (ranks → edges on
 ``src``) plus one aggregation (contributions by ``dst``) — the textbook
 distributed power iteration. Dangling-node mass is collected with a
 one-row aggregate and folded back via a broadcast cross join (never a
-driver collect), and the rank frame is eagerly ``localCheckpoint``-ed
-every iteration so plan depth and lineage stay O(1) across iterations
-(the iterative-join lesson from operators/timeseries.py ``_stamped``:
-blocks are freed by the ContextCleaner when the frame is GC'd).
+driver collect), and the rank frame is a ``snapshot`` (``session.py``)
+every iteration so plan depth and lineage stay O(1) across iterations.
 
 At 100 TB: edges pre-partitioned by ``src`` are reused every iteration;
 the per-iteration shuffles (contribution groupBy ``dst``, join back to
@@ -26,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import snapshot
 
 __all__ = ["degree_stats", "pagerank"]
 
@@ -97,7 +97,7 @@ def pagerank(
         .distinct()
         .join(deg.select("node", F.lit(False).alias("__nd")), "node", "left")
         .select("node", F.coalesce("__nd", F.lit(True)).alias("__dangling"))
-        .localCheckpoint(eager=True)
+        .transform(snapshot)
     )
     n = nodes.count()
     if n == 0:
@@ -106,7 +106,7 @@ def pagerank(
     links = (
         e.join(deg, e[src] == deg["node"])
         .select(F.col(src).alias("__src"), F.col(dst).alias("__dst"), "__outdeg")
-        .localCheckpoint(eager=True)
+        .transform(snapshot)
     )
     ranks = nodes.withColumn(out, F.lit(1.0 / n))
     for _ in range(iters):
@@ -137,7 +137,7 @@ def pagerank(
                     )
                 ).alias(out),
             )
-            .localCheckpoint(eager=True)
+            .transform(snapshot)
         )
     ranks = ranks.select("node", out)
     return ranks

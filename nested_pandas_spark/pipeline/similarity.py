@@ -13,11 +13,13 @@
 from __future__ import annotations
 
 import functools
+from contextlib import nullcontext
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.nested import quote
+from ..session import cached
 
 __all__ = [
     "cosine", "dot", "norm", "brute_force_topk", "srp_bucket",
@@ -375,14 +377,6 @@ def kmeans_refine(
     dim = len(seeds[0][1])
     vec = F.col(vec_expr) if isinstance(vec_expr, str) else vec_expr
     base = corpus.select(vec.cast("array<double>").alias("__v"))
-    # every Lloyd round scans the full vector set: persist the projection
-    # once (memory, spilling to disk) so rounds 2..n read cached columns
-    # instead of re-decoding parquet — and lineage stays bounded
-    from pyspark import StorageLevel
-
-    persisted = n_iters > 1
-    if persisted:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
     cents = seeds
     # the per-dimension sums ride in ONE parsed expression: dim separate
     # F.sum(F.col("__v")[i]) Columns cost a py4j round trip each (~0.6 s
@@ -393,30 +387,31 @@ def kmeans_refine(
     sums_expr = F.expr(
         "array(" + ",".join(f"sum(__v[{i}])" for i in range(dim)) + ")"
     ).alias("__sums")
-    for _ in range(n_iters):
-        assigned = with_nearest_ids(
-            base, F.col("__v"), cents, 1, "__cids", metric
-        ).withColumn("__cid", F.col("__cids")[0])
-        rows = (
-            assigned
-            .groupBy("__cid")
-            .agg(F.count("*").alias("__n"), sums_expr)
-            .collect()
-        )
-        by_cid = {r["__cid"]: r for r in rows}
-        nxt = []
-        for c, old in cents:
-            r = by_cid.get(c)
-            if r and r["__n"]:
-                nxt.append(
-                    (c, [_round_half_up(s / r["__n"], decimals)
-                         for s in r["__sums"]])
-                )
-            else:
-                nxt.append((c, old))
-        cents = nxt
-    if persisted:
-        base.unpersist()
+    # every Lloyd round scans the full vector set: cache the projection
+    # once so rounds 2..n read cached columns instead of re-decoding parquet
+    with cached(base) if n_iters > 1 else nullcontext(base) as base:
+        for _ in range(n_iters):
+            assigned = with_nearest_ids(
+                base, F.col("__v"), cents, 1, "__cids", metric
+            ).withColumn("__cid", F.col("__cids")[0])
+            rows = (
+                assigned
+                .groupBy("__cid")
+                .agg(F.count("*").alias("__n"), sums_expr)
+                .collect()
+            )
+            by_cid = {r["__cid"]: r for r in rows}
+            nxt = []
+            for c, old in cents:
+                r = by_cid.get(c)
+                if r and r["__n"]:
+                    nxt.append(
+                        (c, [_round_half_up(s / r["__n"], decimals)
+                             for s in r["__sums"]])
+                    )
+                else:
+                    nxt.append((c, old))
+            cents = nxt
     return cents
 
 
@@ -730,61 +725,55 @@ def _pq_refine_fused(
     full corpus scans per iteration instead of one, which at small data
     is pure job-count overhead and at 100 TB is ``n_sub`` extra reads of
     the entire vector column."""
-    from pyspark import StorageLevel
-
     n_sub = len(books)
     base = corpus.select(vec.alias("__v"))
-    persisted = n_iters > 1
-    if persisted:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    for _ in range(n_iters):
-        entries = F.array(*[
-            F.struct(
-                F.lit(s).alias("s"),
-                _nearest_ids_tbl(
-                    F.slice(F.col("__v"), s * d_sub + 1, d_sub),
-                    _centroid_tbl_literal(list(enumerate(books[s]))),
-                    1, "l2",
-                )[0].alias("cid"),
-                F.slice(F.col("__v"), s * d_sub + 1, d_sub).alias("sv"),
+    with cached(base) if n_iters > 1 else nullcontext(base) as base:
+        for _ in range(n_iters):
+            entries = F.array(*[
+                F.struct(
+                    F.lit(s).alias("s"),
+                    _nearest_ids_tbl(
+                        F.slice(F.col("__v"), s * d_sub + 1, d_sub),
+                        _centroid_tbl_literal(list(enumerate(books[s]))),
+                        1, "l2",
+                    )[0].alias("cid"),
+                    F.slice(F.col("__v"), s * d_sub + 1, d_sub).alias("sv"),
+                )
+                for s in range(n_sub)
+            ])
+            rows = (
+                base.select(F.explode(entries).alias("e"))
+                .select(
+                    F.col("e.s").alias("s"),
+                    F.col("e.cid").alias("cid"),
+                    F.col("e.sv").alias("sv"),
+                )
+                .groupBy("s", "cid")
+                .agg(
+                    F.count("*").alias("__n"),
+                    # one parsed expression for all d_sub sums (the
+                    # kmeans_refine py4j lesson); per-sum folds unchanged
+                    F.expr(
+                        "array("
+                        + ",".join(f"sum(sv[{i}])" for i in range(d_sub))
+                        + ")"
+                    ).alias("__sums"),
+                )
+                .collect()
             )
-            for s in range(n_sub)
-        ])
-        rows = (
-            base.select(F.explode(entries).alias("e"))
-            .select(
-                F.col("e.s").alias("s"),
-                F.col("e.cid").alias("cid"),
-                F.col("e.sv").alias("sv"),
-            )
-            .groupBy("s", "cid")
-            .agg(
-                F.count("*").alias("__n"),
-                # one parsed expression for all d_sub sums (the
-                # kmeans_refine py4j lesson); per-sum folds unchanged
-                F.expr(
-                    "array("
-                    + ",".join(f"sum(sv[{i}])" for i in range(d_sub))
-                    + ")"
-                ).alias("__sums"),
-            )
-            .collect()
-        )
-        by = {(r["s"], r["cid"]): r for r in rows}
-        for s in range(n_sub):
-            nxt = []
-            for cid, old in enumerate(books[s]):
-                r = by.get((s, cid))
-                if r and r["__n"]:
-                    nxt.append(
-                        [_round_half_up(sv / r["__n"], decimals)
-                         for sv in r["__sums"]]
-                    )
-                else:
-                    nxt.append(old)
-            books[s] = nxt
-    if persisted:
-        base.unpersist()
+            by = {(r["s"], r["cid"]): r for r in rows}
+            for s in range(n_sub):
+                nxt = []
+                for cid, old in enumerate(books[s]):
+                    r = by.get((s, cid))
+                    if r and r["__n"]:
+                        nxt.append(
+                            [_round_half_up(sv / r["__n"], decimals)
+                             for sv in r["__sums"]]
+                        )
+                    else:
+                        nxt.append(old)
+                books[s] = nxt
     return books
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..nestedframe.expr import _sql_literal
+from ..session import FrameChain, snapshot
 
 __all__ = [
     "token_count",
@@ -338,9 +339,9 @@ def unigram_logprob(
     Output: (``id_col``, ``n_tokens``, ``mean_logp``) — every input doc
     appears, token-less docs with n_tokens = 0 and NULL mean_logp.
 
-    Scale shape: the model corpus is tokenized ONCE into a persisted
+    Scale shape: the model corpus is tokenized ONCE into a snapshotted
     word-count table (vocabulary-bounded); the broadcast T/V totals
-    re-aggregate that cache. Doc tokens shuffle once for the
+    re-aggregate that snapshot. Doc tokens shuffle once for the
     (doc token) x (vocab) equi-join, and the final per-doc mean is one
     more partial-agg shuffle on the doc id. No Python, no all-pairs, no
     skew beyond natural term frequency (AQE splits hot terms).
@@ -350,21 +351,17 @@ def unigram_logprob(
         F.col(id_col).alias("__doc"),
         F.explode(words(F.col(text_col))).alias("__term"),
     )
-    vocab_counts = (
+    # the model table is consumed twice (the broadcast totals AND the
+    # scoring join); Spark's exchange reuse does not deduplicate the two
+    # branches (the tokenizer's HOF lambdas defeat plan canonicalization),
+    # so without a snapshot each consumer re-tokenizes and re-shuffles the
+    # ENTIRE model corpus. Word grain — bounded by vocabulary, tiny vs the
+    # corpus.
+    vocab_counts = snapshot(
         model_docs.select(F.explode(words(F.col(text_col))).alias("__term"))
         .groupBy("__term")
         .agg(F.count("*").alias("__c"))
     )
-    if not model_docs.isStreaming:
-        # the model table is consumed twice (the broadcast totals AND the
-        # scoring join); Spark's exchange reuse does not deduplicate the
-        # two branches (the tokenizer's HOF lambdas defeat plan
-        # canonicalization), so without a persist each consumer
-        # re-tokenizes and re-shuffles the ENTIRE model corpus. The cache
-        # is word grain — bounded by vocabulary, tiny vs the corpus.
-        from pyspark import StorageLevel
-
-        vocab_counts = vocab_counts.persist(StorageLevel.MEMORY_AND_DISK)
     totals = vocab_counts.agg(
         F.sum("__c").alias("__T"), F.count("*").alias("__V")
     )
@@ -771,9 +768,6 @@ def bpe_train(
       (deterministic argmax: n desc, then the pair itself asc);
     * ``vocab`` — the distinct-word table after all merges:
       ``(word, wc, syms)`` with ``syms`` the space-joined symbol string.
-      The returned frame IS the persisted training table — the caller
-      owns the cache and should ``vocab.unpersist()`` (or let the
-      session end) once done encoding with it.
 
     Scale shape — the reference trainer's trick, distributed: the corpus
     collapses ONCE to a distinct-word frequency table (the only
@@ -788,9 +782,10 @@ def bpe_train(
     ``tests/test_text_pipeline.py``). A plain padded ``replace`` would
     consume the shared delimiter space and skip every second adjacent
     occurrence ('a a a a' -> 'aa a a' instead of 'aa aa').
-    The vocab table is persisted and re-persisted (with a
-    ``localCheckpoint`` every ``checkpoint_every`` steps to keep the
-    lineage bounded) so step ``k`` never recomputes steps ``1..k-1``.
+    The vocab table is materialized once per step
+    (:class:`~nested_pandas_spark.session.FrameChain`, a snapshot every
+    ``checkpoint_every`` steps to keep the lineage bounded) so step ``k``
+    never recomputes steps ``1..k-1``.
 
     Words are symbolized as their characters plus ``end_marker`` (pass
     ``end_marker=None`` to omit). Training stops early when the best
@@ -811,13 +806,11 @@ def bpe_train(
         raise ValueError("checkpoint_every must be >= 1")
     if end_marker is not None and (" " in end_marker or end_marker == ""):
         raise ValueError("end_marker must be a non-empty token without spaces")
-    from pyspark import StorageLevel
-
     w = words(F.col(text_col))
     marker_sql = (
         f" || ' ' || {_sql_literal(end_marker)}" if end_marker is not None else ""
     )
-    vocab_df = (
+    vocab_df = snapshot(
         docs.select(F.explode(w).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("wc"))
@@ -828,7 +821,6 @@ def bpe_train(
                 "__i -> substring(word, __i, 1)), ' ')" + marker_sql
             ),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     return _bpe_merge_loop(
         docs.sparkSession, vocab_df, n_merges, min_pair_count,
@@ -840,7 +832,7 @@ def _bpe_merge_loop(
     spark, vocab_df, n_merges: int, min_pair_count: int,
     checkpoint_every: int, driver_threshold: int = DRIVER_VOCAB_THRESHOLD,
 ):
-    """The shared BPE training loop over a persisted ``(word, wc, syms)``
+    """The shared BPE training loop over a snapshotted ``(word, wc, syms)``
     vocab frame — see :func:`bpe_train` for the scale shape. Symbol
     GRAIN is whatever the caller's symbolization produced (characters
     for :func:`bpe_train`, hex byte pairs for :func:`byte_bpe_train`);
@@ -852,86 +844,65 @@ def _bpe_merge_loop(
     locally — identical merges (same argmax, same tie-breaks), zero
     per-step Spark jobs. Pass ``driver_threshold=0`` to force the
     distributed loop (vocabularies too large to collect)."""
-    from pyspark import StorageLevel
-
-    if driver_threshold > 0:
-        probe = vocab_df.limit(driver_threshold + 1).count()
-        if probe <= driver_threshold:
-            rows = vocab_df.collect()
-            vocab_df.unpersist()
-            merges, words_out = _driver_merge_loop(
-                rows, n_merges, min_pair_count
-            )
-            # Arrow-table construction -> a true LocalRelation, so
-            # downstream piece/vocab collects stay driver-only (the
-            # classic tuple path plans a LogicalRDD whose every collect
-            # is a cluster job)
-            import pyarrow as pa
-
-            merges_df = spark.createDataFrame(pa.table({
-                "step": pa.array([m[0] for m in merges], pa.int32()),
-                "left": pa.array([m[1] for m in merges], pa.string()),
-                "right": pa.array([m[2] for m in merges], pa.string()),
-                "n": pa.array([m[3] for m in merges], pa.int64()),
-            }))
-            vocab_out = spark.createDataFrame(pa.table({
-                "word": pa.array([w[0] for w in words_out], pa.string()),
-                "wc": pa.array([w[1] for w in words_out], pa.int64()),
-                "syms": pa.array([w[2] for w in words_out], pa.string()),
-            }))
-            return merges_df, vocab_out
-
-    merges = []
-    for step in range(1, n_merges + 1):
-        pairs = (
-            vocab_df.select(
-                F.expr("split(syms, ' ')").alias("sl"), F.col("wc")
-            )
-            .select(
-                F.explode(
-                    F.expr(
-                        "CASE WHEN size(sl) >= 2 THEN transform("
-                        "sequence(1, size(sl) - 1), __i -> "
-                        "struct(element_at(sl, __i) AS l, "
-                        "element_at(sl, __i + 1) AS r)) "
-                        "ELSE CAST(array() AS array<struct<l: string, r: string>>) END"
-                    )
-                ).alias("p"),
-                F.col("wc"),
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("wc").cast("long").alias("n"))
-            .orderBy(F.col("n").desc(), F.col("l").asc(), F.col("r").asc())
-            .limit(1)
-            .collect()
-        )
-        if not pairs or pairs[0]["n"] < min_pair_count:
-            break
-        l_, r_, n_ = pairs[0]["l"], pairs[0]["r"], pairs[0]["n"]
-        merges.append((step, l_, r_, n_))
-        old = vocab_df
-        vocab_df = vocab_df.withColumn(
-            "syms", F.expr(_merge_sql("syms", l_, r_))
-        )
-        if step % checkpoint_every == 0:
-            vocab_df = vocab_df.localCheckpoint(eager=True)
-        else:
-            vocab_df = vocab_df.persist(StorageLevel.MEMORY_AND_DISK)
-            vocab_df.count()  # materialize before dropping the parent
-        old.unpersist()
-    # LocalRelation for the driver-side merge list (see fast path above)
     import pyarrow as pa
 
+    if driver_threshold > 0 and (
+        vocab_df.limit(driver_threshold + 1).count() <= driver_threshold
+    ):
+        merges, words_out = _driver_merge_loop(
+            vocab_df.collect(), n_merges, min_pair_count
+        )
+        # Arrow-table construction -> a true LocalRelation, so downstream
+        # piece/vocab collects stay driver-only (the classic tuple path
+        # plans a LogicalRDD whose every collect is a cluster job)
+        vocab_df = spark.createDataFrame(pa.table({
+            "word": pa.array([w[0] for w in words_out], pa.string()),
+            "wc": pa.array([w[1] for w in words_out], pa.int64()),
+            "syms": pa.array([w[2] for w in words_out], pa.string()),
+        }))
+    else:
+        merges = []
+        with FrameChain(vocab_df, checkpoint_every) as chain:
+            for step in range(1, n_merges + 1):
+                vocab_df = chain.df
+                pairs = (
+                    vocab_df.select(
+                        F.expr("split(syms, ' ')").alias("sl"), F.col("wc")
+                    )
+                    .select(
+                        F.explode(
+                            F.expr(
+                                "CASE WHEN size(sl) >= 2 THEN transform("
+                                "sequence(1, size(sl) - 1), __i -> "
+                                "struct(element_at(sl, __i) AS l, "
+                                "element_at(sl, __i + 1) AS r)) "
+                                "ELSE CAST(array() AS "
+                                "array<struct<l: string, r: string>>) END"
+                            )
+                        ).alias("p"),
+                        F.col("wc"),
+                    )
+                    .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+                    .agg(F.sum("wc").cast("long").alias("n"))
+                    .orderBy(F.col("n").desc(), F.col("l").asc(), F.col("r").asc())
+                    .limit(1)
+                    .collect()
+                )
+                if not pairs or pairs[0]["n"] < min_pair_count:
+                    break
+                l_, r_, n_ = pairs[0]["l"], pairs[0]["r"], pairs[0]["n"]
+                merges.append((step, l_, r_, n_))
+                chain.advance(vocab_df.withColumn(
+                    "syms", F.expr(_merge_sql("syms", l_, r_))
+                ))
+            vocab_df = chain.result()
+    # LocalRelation for the driver-side merge list (see the fast path)
     merges_df = spark.createDataFrame(pa.table({
         "step": pa.array([m[0] for m in merges], pa.int32()),
         "left": pa.array([m[1] for m in merges], pa.string()),
         "right": pa.array([m[2] for m in merges], pa.string()),
         "n": pa.array([m[3] for m in merges], pa.int64()),
     }))
-    # Return the persisted/checkpointed frame itself (columns are already
-    # exactly (word, wc, syms)): the CALLER owns the cached copy and can
-    # release it with `vocab.unpersist()` when done — a projection wrapper
-    # would orphan the handle and leak the cache for the session lifetime.
     return merges_df, vocab_df
 
 
@@ -1086,14 +1057,11 @@ def byte_bpe_train(
         raise ValueError("min_pair_count must be >= 1")
     if checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
-    from pyspark import StorageLevel
-
-    vocab_df = (
+    vocab_df = snapshot(
         docs.select(F.explode(pretokens(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("wc"))
         .withColumn("syms", F.expr(_BYTE_SYMS_SQL.replace("__w", "word")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     return _bpe_merge_loop(
         docs.sparkSession, vocab_df, n_merges, min_pair_count,
@@ -1253,15 +1221,12 @@ def _encode_with_vocab(
     qt = "`" + text_col.replace("`", "``") + "`"
     # monotonically_increasing_id is deterministic only for one physical
     # execution of one plan; this frame is referenced from TWO branches
-    # (the posexplode side and the join-back below), so it must be
-    # materialized once before branching — otherwise an upstream shuffle
-    # could renumber rows between evaluations and silently attach token
-    # arrays to the wrong documents. Same hazard + same remedy as
-    # operators/timeseries.py _stamped: an eager localCheckpoint whose
-    # blocks the ContextCleaner frees when the result is GC'd.
-    stamped = docs.withColumn(
-        "__row_id", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
+    # (the posexplode side and the join-back below), so it is snapshotted
+    # once before branching — otherwise an upstream shuffle could renumber
+    # rows between evaluations and attach token arrays to the wrong
+    # documents.
+    stamped = snapshot(
+        docs.withColumn("__row_id", F.monotonically_increasing_id()))
     exploded = stamped.where(F.col(text_col).isNotNull()).select(
         F.col("__row_id"),
         F.posexplode(F.expr(w_arr)).alias("__pos", "__w"),
@@ -1476,7 +1441,7 @@ def bigram_logprob(
     appears; docs with < 2 tokens get ``n_bigrams = 0`` and NULL mean.
 
     Scale shape (same as the unigram scorer): the model corpus is
-    tokenized ONCE into a persisted bigram-count table (vocabulary-
+    tokenized ONCE into a snapshotted bigram-count table (vocabulary-
     bounded); the context table re-aggregates that cache. The doc side
     joins on (w1, w2) then w1 (AQE splits hot words), V rides along
     broadcast, and the per-doc mean is a final partial agg. No Python,
@@ -1506,17 +1471,13 @@ def bigram_logprob(
         )
 
     model_bi = bigrams(model_docs, with_id=False)
-    bi_counts = model_bi.groupBy("__w1", "__w2").agg(
-        F.count("*").alias("__c12"))
-    if not model_docs.isStreaming:
-        # bi_counts feeds the context table AND the scoring join; exchange
-        # reuse does not deduplicate the branches (HOF lambdas defeat plan
-        # canonicalization), so each consumer would re-tokenize and
-        # re-shuffle the model corpus at bigram grain. Bigram-type grain —
-        # vocabulary-bounded, far smaller than the corpus.
-        from pyspark import StorageLevel
-
-        bi_counts = bi_counts.persist(StorageLevel.MEMORY_AND_DISK)
+    # bi_counts feeds the context table AND the scoring join; exchange
+    # reuse does not deduplicate the branches (HOF lambdas defeat plan
+    # canonicalization), so each consumer would re-tokenize and re-shuffle
+    # the model corpus at bigram grain. Bigram-type grain — vocabulary-
+    # bounded, far smaller than the corpus.
+    bi_counts = snapshot(model_bi.groupBy("__w1", "__w2").agg(
+        F.count("*").alias("__c12")))
     # ctx(w1) = number of bigrams with context w1 = sum of its per-bigram
     # counts: a re-aggregation of the cached bigram table (exact longs,
     # identical values), not another pass over the model corpus
@@ -1591,9 +1552,9 @@ def kn_bigram_logprob(
     appears; docs with < 2 tokens get ``n_bigrams = 0`` and NULL mean.
 
     Scale shape: identical to :func:`bigram_logprob` — the model corpus
-    is tokenized ONCE into a persisted bigram-count table; the context /
+    is tokenized ONCE into a snapshotted bigram-count table; the context /
     continuation / counts-of-counts tables are re-aggregations of that
-    cache (vocabulary-bounded), and the totals ride as ONE broadcast
+    snapshot (vocabulary-bounded), and the totals ride as ONE broadcast
     row; the doc side joins on (w1, w2) then w1 then w2 (AQE splits hot
     words) and finishes with a per-doc partial agg.  No Python, no
     all-pairs, no driver loop.
@@ -1624,18 +1585,14 @@ def kn_bigram_logprob(
         )
 
     model_bi = bigrams(model_docs, with_id=False)
-    bi_counts = model_bi.groupBy("__w1", "__w2").agg(
-        F.count("*").alias("__c12"))
-    if not model_docs.isStreaming:
-        # bi_counts feeds FOUR consumers (ctx, cont, the discount totals,
-        # and the scoring join); exchange reuse does not deduplicate them
-        # (HOF lambdas defeat plan canonicalization), so without a persist
-        # every consumer re-tokenizes and re-shuffles the model corpus at
-        # bigram grain. Bigram-type grain — vocabulary-bounded, far
-        # smaller than the corpus.
-        from pyspark import StorageLevel
-
-        bi_counts = bi_counts.persist(StorageLevel.MEMORY_AND_DISK)
+    # bi_counts feeds FOUR consumers (ctx, cont, the discount totals, and
+    # the scoring join); exchange reuse does not deduplicate them (HOF
+    # lambdas defeat plan canonicalization), so without a snapshot every
+    # consumer re-tokenizes and re-shuffles the model corpus at bigram
+    # grain. Bigram-type grain — vocabulary-bounded, far smaller than the
+    # corpus.
+    bi_counts = snapshot(model_bi.groupBy("__w1", "__w2").agg(
+        F.count("*").alias("__c12")))
     ctx = bi_counts.groupBy("__w1").agg(
         F.sum("__c12").alias("__c1"),
         F.count("*").alias("__nfwd"),   # N1+(w1, .)

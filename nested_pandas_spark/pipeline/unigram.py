@@ -15,7 +15,7 @@ to a distinct-word frequency table — the only corpus-sized shuffle.
 Seeding explodes substrings of *words* (bounded by max_piece_len x word
 length), ranks them with a distributed top-k (TakeOrderedAndProject —
 never a single-partition sort). Each EM iteration is one Arrow-batched
-pass over the persisted word table with the current piece table riding
+pass over the cached word table with the current piece table riding
 in the task closure (vocab-sized, ~10^4 entries), followed by a
 piece-grain count aggregation; the driver only ever collects
 vocab-sized count rows. Encoding is a single zero-shuffle Arrow pass:
@@ -40,6 +40,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cached
 from .text import words
 
 __all__ = [
@@ -116,7 +117,7 @@ def _seed_from_word_counts(
     wc: DataFrame, seed_size: int, max_piece_len: int
 ) -> DataFrame:
     """Seed pieces from an existing (word, wc) table — lets the trainer
-    reuse its persisted word-count table instead of re-scanning the
+    reuse its cached word-count table instead of re-scanning the
     corpus (the seed derives from word counts alone)."""
     if seed_size < 1:
         raise ValueError("seed_size must be >= 1")
@@ -192,9 +193,8 @@ def unigram_train(
     if seed_size is None:
         seed_size = max(vocab_size * 4, 64)
     spark = docs.sparkSession
-    word_df = _word_counts(docs, text_col).persist()
-    try:
-        # seed from the persisted word table: the corpus is scanned and
+    with cached(_word_counts(docs, text_col)) as word_df:
+        # seed from the cached word table: the corpus is scanned and
         # word-count-shuffled exactly ONCE for the whole training run
         # (round 10; previously the seed re-derived word counts from docs)
         seed = _seed_from_word_counts(word_df, seed_size, max_piece_len)
@@ -239,8 +239,6 @@ def unigram_train(
             "logprob": pa.array([r[1] for r in out_rows], pa.float64()),
             "count": pa.array([r[2] for r in out_rows], pa.int64()),
         }))
-    finally:
-        word_df.unpersist()
 
 
 def _normalize(counts: dict[str, int]) -> dict[str, float]:
@@ -267,7 +265,7 @@ def unigram_encode(
     repeated across a task's documents is segmented once (the in-task
     analogue of the old distinct-word table). The piece table rides in
     the task closure (vocab-sized). This replaces the previous
-    stamp/localCheckpoint + posexplode + word-grain join + collect_list
+    stamp/snapshot + posexplode + word-grain join + collect_list
     assembly — four token-grain exchanges — with zero exchanges:
     document text never crosses the wire at all, only the JVM->Python
     Arrow boundary, once. NULL text -> NULL pieces; empty -> empty

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..nestedframe.expr import _sql_literal
+from ..session import FrameChain, snapshot
 from .text import words
 
 __all__ = [
@@ -111,8 +112,7 @@ def wordpiece_train(
       operand symbol counts ``lc``/``rc`` (all exact longs; the score
       that was maximized is ``n / (lc * rc)``, reconstructible and
       engine-portable without shipping a float).
-    * ``vocab``: the persisted ``(word, wc, syms)`` frame after all
-      merges — the caller owns the cache handle (``vocab.unpersist()``).
+    * ``vocab``: the ``(word, wc, syms)`` frame after all merges.
 
     Small-vocab fast path (``driver_threshold``, default
     :data:`.text.DRIVER_VOCAB_THRESHOLD`): when the distinct-word table
@@ -141,15 +141,12 @@ def wordpiece_train(
         raise ValueError("min_pair_count must be >= 1")
     if checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
-    from pyspark import StorageLevel
-
     spark = docs.sparkSession
-    vocab_df = (
+    vocab_df = snapshot(
         docs.select(F.explode(words(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("wc"))
         .withColumn("syms", F.expr(_WP_SYMS_SQL.replace("__w", "word")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     if vocab_size is not None:
         n_base = (
@@ -159,7 +156,6 @@ def wordpiece_train(
         )
         n_merges = vocab_size - n_base
         if n_merges < 1:
-            vocab_df.unpersist()
             raise ValueError(
                 f"vocab_size {vocab_size} <= base alphabet {n_base}"
             )
@@ -173,7 +169,6 @@ def wordpiece_train(
             import pyarrow as pa
 
             rows = vocab_df.collect()
-            vocab_df.unpersist()
             merges, words_out = _driver_merge_loop(
                 rows, n_merges, min_pair_count, wordpiece=True
             )
@@ -193,77 +188,74 @@ def wordpiece_train(
                 })),
             )
     merges = []
-    for step in range(1, n_merges + 1):
-        exploded = vocab_df.select(
-            F.expr("split(syms, ' ')").alias("sl"), F.col("wc")
-        )
-        sym_counts = (
-            exploded.select(F.explode("sl").alias("s"), F.col("wc"))
-            .groupBy("s")
-            .agg(F.sum("wc").cast("long").alias("sc"))
-        )
-        pair_counts = (
-            exploded.select(
-                F.explode(
-                    F.expr(
-                        "CASE WHEN size(sl) >= 2 THEN transform("
-                        "sequence(1, size(sl) - 1), __i -> "
-                        "struct(element_at(sl, __i) AS l, "
-                        "element_at(sl, __i + 1) AS r)) "
-                        "ELSE CAST(array() AS array<struct<l: string, r: string>>) END"
-                    )
-                ).alias("p"),
-                F.col("wc"),
+    with FrameChain(vocab_df, checkpoint_every) as chain:
+        for step in range(1, n_merges + 1):
+            vocab_df = chain.df
+            exploded = vocab_df.select(
+                F.expr("split(syms, ' ')").alias("sl"), F.col("wc")
             )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("wc").cast("long").alias("n"))
-        )
-        best = (
-            pair_counts.join(
-                F.broadcast(
-                    sym_counts.select(
-                        F.col("s").alias("l"), F.col("sc").alias("lc")
-                    )
-                ),
-                on="l",
+            sym_counts = (
+                exploded.select(F.explode("sl").alias("s"), F.col("wc"))
+                .groupBy("s")
+                .agg(F.sum("wc").cast("long").alias("sc"))
             )
-            .join(
-                F.broadcast(
-                    sym_counts.select(
-                        F.col("s").alias("r"), F.col("sc").alias("rc")
-                    )
-                ),
-                on="r",
+            pair_counts = (
+                exploded.select(
+                    F.explode(
+                        F.expr(
+                            "CASE WHEN size(sl) >= 2 THEN transform("
+                            "sequence(1, size(sl) - 1), __i -> "
+                            "struct(element_at(sl, __i) AS l, "
+                            "element_at(sl, __i + 1) AS r)) "
+                            "ELSE CAST(array() AS "
+                            "array<struct<l: string, r: string>>) END"
+                        )
+                    ).alias("p"),
+                    F.col("wc"),
+                )
+                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+                .agg(F.sum("wc").cast("long").alias("n"))
             )
-            .select(
-                "l", "r", "n", "lc", "rc",
-                # two divisions, never the lc*rc long product: long*long
-                # silently overflows past ~3e9 counts in non-ANSI Spark
-                (F.col("n") / F.col("lc") / F.col("rc")).alias("score"),
+            best = (
+                pair_counts.join(
+                    F.broadcast(
+                        sym_counts.select(
+                            F.col("s").alias("l"), F.col("sc").alias("lc")
+                        )
+                    ),
+                    on="l",
+                )
+                .join(
+                    F.broadcast(
+                        sym_counts.select(
+                            F.col("s").alias("r"), F.col("sc").alias("rc")
+                        )
+                    ),
+                    on="r",
+                )
+                .select(
+                    "l", "r", "n", "lc", "rc",
+                    # two divisions, never the lc*rc long product: long*long
+                    # silently overflows past ~3e9 counts in non-ANSI Spark
+                    (F.col("n") / F.col("lc") / F.col("rc")).alias("score"),
+                )
+                .orderBy(
+                    F.col("score").desc(), F.col("n").desc(),
+                    F.col("l").asc(), F.col("r").asc(),
+                )
+                .limit(1)
+                .collect()
             )
-            .orderBy(
-                F.col("score").desc(), F.col("n").desc(),
-                F.col("l").asc(), F.col("r").asc(),
-            )
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["n"] < min_pair_count:
-            break
-        l_, r_, n_ = best[0]["l"], best[0]["r"], best[0]["n"]
-        lc_, rc_ = best[0]["lc"], best[0]["rc"]
-        merged = l_ + (r_[2:] if r_.startswith("##") else r_)
-        merges.append((step, l_, r_, merged, n_, lc_, rc_))
-        old = vocab_df
-        vocab_df = vocab_df.withColumn(
-            "syms", F.expr(_wp_merge_sql("syms", l_, r_, merged))
-        )
-        if step % checkpoint_every == 0:
-            vocab_df = vocab_df.localCheckpoint(eager=True)
-        else:
-            vocab_df = vocab_df.persist(StorageLevel.MEMORY_AND_DISK)
-            vocab_df.count()  # materialize before dropping the parent
-        old.unpersist()
+            if not best or best[0]["n"] < min_pair_count:
+                break
+            l_, r_, n_ = best[0]["l"], best[0]["r"], best[0]["n"]
+            lc_, rc_ = best[0]["lc"], best[0]["rc"]
+            merged = l_ + (r_[2:] if r_.startswith("##") else r_)
+            merges.append((step, l_, r_, merged, n_, lc_, rc_))
+            chain.advance(vocab_df.withColumn(
+                "syms", F.expr(_wp_merge_sql("syms", l_, r_, merged))
+            ))
+        vocab_df = chain.result()
     return _local_merges_df(spark, merges), vocab_df
 
 
@@ -436,7 +428,7 @@ def wordpiece_encode_vocab(
     repeated across a task's documents is segmented once (the in-task
     analogue of the old distinct-word table). The piece set rides in the
     task closure (vocab-sized). This replaces the previous
-    stamp/localCheckpoint + posexplode + word-grain join + collect_list
+    stamp/snapshot + posexplode + word-grain join + collect_list
     assembly — token-grain exchanges — with zero exchanges: document
     text never crosses the wire, only the JVM->Python Arrow boundary,
     once. The greedy fold is the bit-exact Python twin of

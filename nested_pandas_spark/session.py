@@ -14,8 +14,15 @@ keeps scan tasks bounded; nested-schema pruning keeps parquet reads of
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+# The one storage level every operator-owned persist uses: DataFrame.cache()'s
+# own level (columnar batches in memory, spilling to local disk).
+_LEVEL = StorageLevel.MEMORY_AND_DISK_DESER
 
 
 def get_spark(app_name: str = "nested-pandas-spark", cpus: int | None = None) -> SparkSession:
@@ -76,3 +83,82 @@ def default_parallelism(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
     except Exception:  # Spark Connect: no sparkContext on the client
         return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` for the body of the ``with`` block, then unpersist it.
+
+    The cache lifecycle for a frame that only the operator itself re-reads
+    before it returns (a k-means scan, a write-then-count, an edge table).
+    A streaming frame is handed back unchanged.
+    """
+    if df.isStreaming:
+        yield df
+        return
+    df = df.persist(_LEVEL)
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def snapshot(df: DataFrame) -> DataFrame:
+    """``df`` materialized once by an eager ``localCheckpoint``.
+
+    The cache lifecycle for a frame that the returned lazy result re-reads
+    on every action (a row-id stamp read from two plan branches, an
+    iterative rank or label frame, an LM model table). No safe unpersist
+    point exists inside the operator, and a persist would stay in the
+    CacheManager for the session lifetime. The checkpoint cuts the
+    lineage, cannot be evicted and then recomputed differently (a
+    ``monotonically_increasing_id`` stamp would renumber), and its blocks
+    are released by the ContextCleaner once the result frames planned on
+    it are garbage-collected. A streaming frame is handed back unchanged.
+    """
+    if df.isStreaming:
+        return df
+    return df.localCheckpoint(eager=True)
+
+
+class FrameChain:
+    """The state frame of an iterative loop, materialized once per step.
+
+    ``advance(new)`` persists and counts the next state, then unpersists
+    the previous one, so step ``k`` never recomputes steps ``1..k-1``;
+    every ``checkpoint_every``-th state is a :func:`snapshot` instead, which
+    keeps the lineage bounded. ``result()`` hands back the final state as a
+    snapshot, never a persisted plan. Leaving the ``with`` block releases
+    any state still persisted, also on an error.
+    """
+
+    def __init__(self, df: DataFrame, checkpoint_every: int):
+        self.df, self._every, self._steps = df, checkpoint_every, 0
+        self._held: DataFrame | None = None
+
+    def __enter__(self) -> FrameChain:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._release()
+
+    def advance(self, new: DataFrame) -> None:
+        self._steps += 1
+        if self._steps % self._every == 0:
+            new, held = snapshot(new), None
+        else:
+            new = held = new.persist(_LEVEL)
+            new.count()  # materialize before dropping the parent
+        self._release()
+        self.df, self._held = new, held
+
+    def result(self) -> DataFrame:
+        if self._held is not None:
+            self.df = snapshot(self.df)
+            self._release()
+        return self.df
+
+    def _release(self) -> None:
+        if self._held is not None:
+            self._held.unpersist()
+            self._held = None

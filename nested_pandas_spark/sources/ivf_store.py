@@ -33,6 +33,7 @@ from ..pipeline.similarity import (
     ivf_centroids,
     with_nearest_ids,
 )
+from ..session import cached
 
 __all__ = ["write_ivf_index", "read_ivf_centroids", "ivf_search",
            "append_ivf_index", "ivf_cell_stats",
@@ -79,16 +80,13 @@ def _check_append_compat(
 
 def _write_append_counts(staged: DataFrame, path: str) -> list[tuple[int, int]]:
     """Write staged rows into their ``__cid=`` partitions and report
-    per-cell counts from the SAME materialization: ``staged`` is persisted
+    per-cell counts from the SAME materialization: ``staged`` is cached
     so the write and the count observe one evaluation (a nondeterministic
     input — sample/limit — can't make the reported counts diverge from
     the rows actually appended)."""
-    staged = staged.persist()
-    try:
+    with cached(staged) as staged:
         staged.write.mode("append").partitionBy("__cid").parquet(path)
         counts = staged.groupBy("__cid").count().collect()
-    finally:
-        staged.unpersist()
     return sorted((int(r["__cid"]), int(r["count"])) for r in counts)
 
 

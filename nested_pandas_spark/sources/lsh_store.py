@@ -37,6 +37,7 @@ from ..pipeline.similarity import (
     _srp_tables_expr,
     cosine,
 )
+from ..session import cached
 
 __all__ = ["write_lsh_index", "read_lsh_params", "lsh_search",
            "append_lsh_index"]
@@ -132,16 +133,12 @@ def append_lsh_index(
         )
         .repartition(F.col("__tbl"), F.col("__bucket"))
     )
-    # persist so the write and the returned count observe ONE evaluation
+    # cache so the write and the returned count observe ONE evaluation
     # (a nondeterministic input can't desynchronize them)
-    staged = staged.persist()
-    try:
+    with cached(staged) as staged:
         staged.write.mode("append").partitionBy(
             "__tbl", "__bucket").parquet(path)
-        n = staged.count()
-    finally:
-        staged.unpersist()
-    return n
+        return staged.count()
 
 
 def lsh_search(

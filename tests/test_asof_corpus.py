@@ -333,9 +333,24 @@ def test_pack_sequences(spark):
     }
     assert out == {1: (3, 0, 0), 2: (4, 0, 3), 3: (5, 1, 2), 4: (2, 2, 2)}
 
+    # NULL text has no token count and adds nothing to the stream, also
+    # when a range partition holds only NULL-text docs
+    for rows, want in (
+        ([(1, "a b"), (2, None), (3, "c")],
+         {1: (2, 0, 0), 2: (None, None, None), 3: (1, 0, 2)}),
+        ([(1, None), (2, None)],
+         {1: (None, None, None), 2: (None, None, None)}),
+    ):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        out = {
+            r["doc_id"]: (r["n_tokens"], r["bin_id"], r["bin_offset"])
+            for r in pack_sequences(docs, capacity=5).collect()
+        }
+        assert out == want
+
 
 def test_pack_sequences_checkpoint_identical(spark, tmp_path):
-    """checkpoint=True must produce the exact same offsets as the persist
+    """checkpoint=True must produce the exact same offsets as the snapshot
     path (it pins the same partitioned projection, reliably), and must
     demand a checkpoint dir up front."""
     from nested_pandas_spark.pipeline.corpus import assign_shards, pack_sequences

@@ -156,12 +156,6 @@ def test_param_validation(spark, docs):
         train_quality_classifier(docs.where(F.lit(False)), "y")
 
 
-def test_training_releases_cache(spark, docs):
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
-    train_quality_classifier(docs, "y", dim=8, epochs=2)
-    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == before
-
-
 @pytest.mark.parametrize("features", ["binary", "tf"])
 def test_inline_score_matches_join_path(spark, docs, features):
     from nested_pandas_spark.pipeline.classifier import (

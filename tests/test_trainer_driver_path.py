@@ -86,13 +86,17 @@ def test_driver_path_early_stop_parity(spark, docs):
 
 def test_threshold_boundary_forces_distributed(spark, docs):
     # threshold below the distinct-word count: the probe must route to
-    # the distributed loop (observable: returned vocab is persisted)
+    # the distributed loop (observable: the returned vocab is a snapshot,
+    # a checkpointed LogicalRDD, not the driver path's LocalRelation — and
+    # never a persisted plan)
+    from pyspark import StorageLevel
+
     from nested_pandas_spark.pipeline.text import bpe_train
 
     m, v = bpe_train(docs, 2, driver_threshold=1)
-    assert v.storageLevel.useMemory or v.storageLevel.useDisk
+    assert v._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+    assert v.storageLevel == StorageLevel.NONE
     assert m.count() == 2
-    v.unpersist()
 
 
 def test_driver_loop_wordpiece_scores_are_exact_longs(spark, docs):

@@ -54,8 +54,9 @@ def test_apply_scale_conf_sets_runtime_knobs(spark):
 
 def test_ensure_parallelism_rescue_decision(spark, tmp_path):
     """The small-input rescue widens only a local scan with too few splits,
-    to the data-sized width; many-file scans, in-memory frames and
-    streaming frames come back as the same object."""
+    to the data-sized width; many-file scans (tiny files included, which
+    still plan at least the early-return floor of scan partitions),
+    in-memory frames and streaming frames come back as the same object."""
     import os
 
     from nested_pandas_spark.session import default_parallelism
@@ -78,6 +79,18 @@ def test_ensure_parallelism_rescue_decision(spark, tmp_path):
     wide = spark.read.parquet(many)
     assert len(wide.inputFiles()) >= max(2, cores // 2)
     assert _ensure_parallelism(wide) is wide
+
+    # tiny files: Spark's small-file packing (openCostInBytes) merges them
+    # into fewer splits, but never below the early-return floor, so a scan
+    # returned unchanged is never about one task wide
+    floor = max(2, cores // 2)
+    for n_files in (floor, 8 * cores):
+        tiny = str(tmp_path / f"tiny{n_files}")
+        spark.range(n_files, numPartitions=n_files).write.parquet(tiny)
+        df = spark.read.parquet(tiny)
+        assert len(df.inputFiles()) == n_files
+        assert _ensure_parallelism(df) is df
+        assert df.rdd.getNumPartitions() >= floor
 
     mem = spark.createDataFrame([(1, 2.0)], "id long, x double")
     assert _ensure_parallelism(mem) is mem
