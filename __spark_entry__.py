@@ -897,15 +897,31 @@ def q40_stream_state(spark, sf):
         shutil.copy(f"{sf}/events.parquet", f"{d}/part-0.parquet")
         stream = evs.read_event_stream(spark, d)
         name = "q40_mem_" + uuid.uuid4().hex[:8]
-        q = (
-            evs.running_user_totals(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        # the operator's ProcessingTimeTimeout keeps scheduling empty
+        # "cleaning up state" micro-batches, so availableNow never reaches
+        # its end; the query captures this conf at start, so it is set for
+        # the start only and the session's value comes back right after
+        key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, "false")
+        try:
+            q = (
+                evs.running_user_totals(stream)
+                .writeStream.format("memory")
+                .queryName(name)
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
+        try:
+            q.awaitTermination(300)
+        finally:
+            q.stop()
     finally:
         # memory sink rows live in the session, not these staged files
         shutil.rmtree(d, ignore_errors=True)
@@ -3940,8 +3956,7 @@ def q190_byte_bpe_train(spark, sf):
     from nested_pandas_spark.pipeline.text import byte_bpe_train
 
     docs = _t(spark, sf, "documents")
-    merges, vocab = byte_bpe_train(docs, 3)
-    vocab.unpersist()
+    merges, _ = byte_bpe_train(docs, 3)
     return merges
 
 
@@ -3957,8 +3972,7 @@ def q191_byte_bpe_encode(spark, sf):
     )
 
     docs = _t(spark, sf, "documents")
-    merges, vocab = byte_bpe_train(docs, 3)
-    vocab.unpersist()
+    merges, _ = byte_bpe_train(docs, 3)
     out = byte_bpe_encode(docs.select("doc_id", "text"), merges)
     return out.select(
         "doc_id",
@@ -4063,8 +4077,7 @@ def q195_wordpiece_train(spark, sf):
     from nested_pandas_spark.pipeline.wordpiece import wordpiece_train
 
     docs = _t(spark, sf, "documents")
-    merges, vocab = wordpiece_train(docs, 3)
-    vocab.unpersist()
+    merges, _ = wordpiece_train(docs, 3)
     return merges
 
 

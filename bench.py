@@ -928,7 +928,6 @@ def main() -> None:
         docs = t("documents").repartition(cpus)
         m, v = wordpiece_train(docs, 8)
         pieces = wordpiece_pieces(m, v)
-        v.unpersist()
         return wordpiece_encode_vocab(docs, pieces).select(
             F.sum("tokens_n")).collect()
 

@@ -351,7 +351,7 @@ def main() -> None:
         byte_bpe_train,
     )
 
-    merges, bvocab = byte_bpe_train(docs.limit(200), n_merges=12)
+    merges, _ = byte_bpe_train(docs.limit(200), n_merges=12)
     enc = byte_bpe_encode(docs.limit(5), merges)
     roundtrip = enc.select(
         (byte_bpe_decode("tokens") == F.coalesce(F.col("text"), F.lit("")))
@@ -359,7 +359,6 @@ def main() -> None:
     ).collect()
     print("byte-BPE lossless round trip on 5 docs:",
           all(r[0] for r in roundtrip))
-    bvocab.unpersist()
 
     # -- 12c. residual IVF+PQ: the FAISS IVFADC shape -----------------------
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
@@ -391,7 +390,6 @@ def main() -> None:
 
     wp_m, wp_v = wordpiece_train(docs.limit(200), n_merges=6)
     pieces = wordpiece_pieces(wp_m, wp_v)
-    wp_v.unpersist()
     art = os.path.join(tempfile.gettempdir(), "walkthrough_wp.json")
     save_tokenizer(art, "wordpiece", pieces)
     _, payload = load_tokenizer(art)

@@ -2,12 +2,18 @@
 
 * brute-force cosine top-k — the exactness baseline: broadcast the (small)
   query set against the corpus; dot products via ``zip_with``+``aggregate``
-  HOFs (JVM, codegen'd — no UDF); per-query top-k via window rank.
+  HOFs (JVM-side, no Python UDF; Spark evaluates HOF lambdas interpreted,
+  ``CodegenFallback``, not in generated code); per-query top-k via window
+  rank.
 * SRP-LSH bucketed ANN — the scale path: sign-random-projection bucket keys
   from deterministic md5-derived hyperplanes; candidates only join within a
   bucket, then exact re-rank. Sub-linear candidate generation at 100 TB; the
   planes are pseudo-random but fully deterministic (seeded by plane index),
   so results are reproducible and oracle-checkable.
+* PQ / IVF-PQ — one Arrow-batched NumPy pass per corpus scan
+  (``_adc_scan_topk_arrow``): cell, code, ADC score and exact re-rank
+  distance per batch, with NumPy folds bit-identical to the Spark HOF
+  expressions (``with_nearest_ids``, ``pq_encode``, ``_l2sq``).
 """
 
 from __future__ import annotations
@@ -415,26 +421,6 @@ def kmeans_refine(
     return cents
 
 
-def _nearest_centroids(
-    vec: Column, centroids: list[tuple[int, list[float]]], n: int
-) -> Column:
-    """Ids of the ``n`` centroids nearest to ``vec`` by cosine (desc, ties to
-    the smaller id). Centroids are plan literals, so this is a pure per-row
-    projection — zero shuffle regardless of corpus size."""
-    scored = F.array(
-        *[
-            F.struct(
-                cosine(vec, _lit_double_array(cv)).alias("cs"),
-                F.lit(-cid).cast("long").alias("ncid"),
-            )
-            for cid, cv in centroids
-        ]
-    )
-    # ascending (cs, -cid) reversed = cs desc with ties broken to smaller cid
-    top = F.slice(F.reverse(F.array_sort(scored)), 1, n)
-    return F.transform(top, lambda s: -s["ncid"])
-
-
 # Above this many centroids (per codebook, for PQ) the plan-literal
 # assignment expressions switch to a broadcast centroid TABLE: a literal
 # F.array of n_centroids struct(vector) entries means O(n_centroids x dim)
@@ -491,10 +477,9 @@ def _l2sq(a: Column, b: Column) -> Column:
 
 def _nearest_ids_tbl(vec: Column, tbl: Column, n: int, metric: str) -> Column:
     """``array<long>`` of the n nearest centroid ids where ``tbl`` is a
-    centroid-table COLUMN (``array<struct<cid, v>>``) instead of plan
-    literals. Same per-centroid math and tie rules as the literal
-    expressions (:func:`_nearest_centroids` / :func:`_nearest_l2_ids`), so the
-    two paths agree bit-for-bit; the HOF form just keeps plan size O(1)."""
+    centroid table (``array<struct<cid, v>>``, a column or ONE parsed
+    literal): squared-L2 asc or cosine desc, ties to the smaller id. A
+    NULL ``vec`` gets a NULL id array (no made-up cell)."""
     if metric == "l2":
         scored = F.transform(
             tbl,
@@ -502,17 +487,116 @@ def _nearest_ids_tbl(vec: Column, tbl: Column, n: int, metric: str) -> Column:
                 _l2sq(vec, c["v"]).alias("d2"), c["cid"].alias("cid")
             ),
         )
-        return F.transform(
+        ids = F.transform(
             F.slice(F.array_sort(scored), 1, n), lambda s: s["cid"]
         )
-    scored = F.transform(
-        tbl,
-        lambda c: F.struct(
-            cosine(vec, c["v"]).alias("cs"), (-c["cid"]).alias("ncid")
-        ),
-    )
-    top = F.slice(F.reverse(F.array_sort(scored)), 1, n)
-    return F.transform(top, lambda s: -s["ncid"])
+    else:
+        scored = F.transform(
+            tbl,
+            lambda c: F.struct(
+                cosine(vec, c["v"]).alias("cs"), (-c["cid"]).alias("ncid")
+            ),
+        )
+        top = F.slice(F.reverse(F.array_sort(scored)), 1, n)
+        ids = F.transform(top, lambda s: -s["ncid"])
+    return F.when(vec.isNotNull(), ids)
+
+
+def _fold_sq_np(D):
+    """``sum_j D[..., j] * D[..., j]`` as the Spark left fold: from 0.0,
+    one add per element of the last axis, left to right (NumPy's own
+    reductions sum pairwise, which rounds differently)."""
+    import numpy as np
+
+    acc = np.zeros(D.shape[:-1], np.float64)
+    for j in range(D.shape[-1]):
+        acc = acc + D[..., j] * D[..., j]
+    return acc
+
+
+def _fold_l2sq_np(A, B):
+    """Pairwise :func:`_l2sq` fold: ``(len(A), len(B))`` squared L2 between
+    the rows of ``A`` and ``B``, accumulated like :func:`_fold_sq_np`."""
+    import numpy as np
+
+    acc = np.zeros((len(A), len(B)), np.float64)
+    for j in range(A.shape[1]):
+        d = A[:, j, None] - B[None, :, j]
+        acc = acc + d * d
+    return acc
+
+
+def _centroid_matrix(centroids: list[tuple[int, list[float]]]):
+    """``(cids, C)``: int64 ids ascending and the ``(k, dim)`` float64
+    matrix in that order — the form :func:`_nearest_ids_np` takes, built
+    once per closure rather than per batch."""
+    import numpy as np
+
+    ordered = sorted(centroids, key=lambda c: c[0])
+    return (np.asarray([int(c) for c, _ in ordered], np.int64),
+            np.asarray([v for _, v in ordered], np.float64))
+
+
+def _cosine_np(V, C):
+    """``(len(V), len(C))`` :func:`cosine` values: ``dot / (norm(v) *
+    norm(c))`` with ``dot`` and ``norm`` as the Spark left folds, from 0.0
+    one add per dimension. A zero-norm vector has no cosine and raises,
+    as Spark's ANSI division does there."""
+    import numpy as np
+
+    dots = np.zeros((len(V), len(C)), np.float64)
+    for j in range(V.shape[1]):
+        dots = dots + V[:, j, None] * C[None, :, j]
+    den = np.sqrt(_fold_sq_np(V))[:, None] * np.sqrt(_fold_sq_np(C))
+    if not den.all():
+        raise ZeroDivisionError("cosine of a zero-norm vector")
+    return dots / den
+
+
+def _nearest_ids_np(V, cids, C, n: int, metric: str = "cosine"):
+    """NumPy twin of :func:`with_nearest_ids` for a ``(rows, dim)`` float64
+    batch against :func:`_centroid_matrix` output: ``(rows, min(n, k))``
+    int64 ids, ties to the smaller id.
+
+    Up to ``_HOF_CENTROID_MAX`` centroids the distances are the HOF tiers'
+    folds replayed element by element (:func:`_cosine_np`,
+    :func:`_fold_l2sq_np`), so the ids are bit-identical to the literal and
+    broadcast-table tiers. Above, the matmul tier's BLAS scores (zero
+    norms read as 1)."""
+    import numpy as np
+
+    if len(C) > _HOF_CENTROID_MAX:
+        if metric == "cosine":
+            cn = np.linalg.norm(C, axis=1)
+            cn[cn == 0] = 1.0
+            vn = np.linalg.norm(V, axis=1)
+            vn[vn == 0] = 1.0
+            key = -((V / vn[:, None]) @ (C / cn[:, None]).T)
+        else:
+            key = (V * V).sum(1)[:, None] - 2.0 * (V @ C.T) + (C * C).sum(1)
+    elif metric == "l2":
+        key = _fold_l2sq_np(V, C)
+    else:
+        key = -_cosine_np(V, C)
+    # stable sort over cid-ordered columns: exact ties -> smaller cid
+    return cids[np.argsort(key, axis=1, kind="stable")[:, :n]]
+
+
+def _pq_codes_np(X, codebooks):
+    """NumPy twin of :func:`pq_encode` for a ``(rows, dim)`` float64 batch
+    and a ``(n_sub, n_cent, d_sub)`` float64 codebook array: ``(rows,
+    n_sub)`` int64 codes. Per subspace the squared-L2 to each entry is the
+    :func:`_l2sq` fold over the slice, and the code is the first minimum
+    (ties to the smaller id), as the HOF's ``array_sort(struct(d2,
+    cid))[0]`` picks it."""
+    import numpy as np
+
+    n_sub, _, d_sub = codebooks.shape
+    codes = np.empty((len(X), n_sub), np.int64)
+    for s in range(n_sub):
+        codes[:, s] = _fold_l2sq_np(
+            X[:, s * d_sub:(s + 1) * d_sub], codebooks[s]).argmin(1)
+    return codes
 
 
 # Above this many centroids the broadcast-table HOF fold (interpreted
@@ -537,24 +621,16 @@ def _with_nearest_ids_matmul(
 ) -> DataFrame:
     """Vectorized nearest-centroid assignment: the centroid matrix ships
     once inside the serialized task (O(1) plan nodes, like the broadcast
-    table) and every Arrow batch is one NumPy matmul + argsort — the
-    10^4-10^5-centroid regime where interpreted HOF folds would burn
-    n_centroids x dim lambda evaluations per row. NULL/empty vectors get
-    a NULL id array."""
+    table) and every Arrow batch is one :func:`_nearest_ids_np` call — a
+    NumPy matmul + argsort in the 10^4-10^5-centroid regime where
+    interpreted HOF folds would burn n_centroids x dim lambda evaluations
+    per row. NULL/wrong-dim vectors get a NULL id array."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
     tagged = df.withColumn("__mmv", vec.cast("array<double>"))
-    cids = np.asarray([int(c) for c, _ in centroids], np.int64)
-    mat = np.asarray([v for _, v in centroids], np.float64)  # (k, dim)
-    if metric == "cosine":
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        matn = mat / norms[:, None]
-    else:
-        c2 = (mat * mat).sum(axis=1)
+    cids, mat = _centroid_matrix(centroids)
     keep = [f for f in tagged.schema.fields if f.name != "__mmv"]
     schema = T.StructType(
         keep + [T.StructField(out, T.ArrayType(T.LongType()))]
@@ -572,15 +648,7 @@ def _with_nearest_ids_matmul(
             if ok:
                 V = np.stack([np.asarray(vecs.iloc[i], np.float64)
                               for i in ok])
-                if metric == "cosine":
-                    vn = np.linalg.norm(V, axis=1)
-                    vn[vn == 0] = 1.0
-                    scores = -((V / vn[:, None]) @ matn.T)  # asc = best
-                else:
-                    scores = (V * V).sum(1)[:, None] - 2.0 * (V @ mat.T) + c2
-                # stable sort: exact ties resolve to the smaller cid
-                order = np.argsort(scores, axis=1, kind="stable")[:, :n]
-                picked = cids[order]
+                picked = _nearest_ids_np(V, cids, mat, n, metric)
                 for j, i in enumerate(ok):
                     res[i] = picked[j].tolist()
             o = pdf[names].copy()
@@ -588,22 +656,6 @@ def _with_nearest_ids_matmul(
             yield o
 
     return tagged.mapInPandas(gen, schema=schema)
-
-
-def _nearest_l2_ids(
-    vec: Column, centroids: list[tuple[int, list[float]]], n: int
-) -> Column:
-    """n-ids generalization of :func:`_nearest_l2` (literal path)."""
-    scored = F.array(
-        *[
-            F.struct(
-                _l2sq(vec, _lit_double_array(cv)).alias("d2"),
-                F.lit(cid).cast("long").alias("cid"),
-            )
-            for cid, cv in centroids
-        ]
-    )
-    return F.transform(F.slice(F.array_sort(scored), 1, n), lambda s: s["cid"])
 
 
 def with_nearest_ids(
@@ -632,11 +684,10 @@ def with_nearest_ids(
     """
     if len(centroids) <= _LITERAL_CENTROID_MAX:
         # literal tier through the SAME HOF expression as the broadcast
-        # tier, with the centroid table as ONE parsed literal — the
-        # unrolled per-centroid expressions (_nearest_centroids /
-        # _nearest_l2_ids) are bit-identical but cost a py4j round trip
-        # per Column node to BUILD (~2-8 ms each on this gateway; dozens
-        # of centroids = seconds of driver time per query construction)
+        # tier, with the centroid table as ONE parsed literal — unrolled
+        # per-centroid Column expressions cost a py4j round trip per node
+        # to BUILD (~2-8 ms each; dozens of centroids = seconds of driver
+        # time per query construction)
         return df.withColumn(
             out, _nearest_ids_tbl(vec, _centroid_tbl_literal(centroids),
                                   n, metric)
@@ -832,35 +883,6 @@ def pq_codebooks(
     return books
 
 
-def _pq_code_expr(vec: Column, codebooks: list[list[list[float]]]) -> Column:
-    """``array<int>`` of per-subspace nearest-centroid ids (squared-L2,
-    ties to the smaller id). Codebooks are plan literals — pure per-row
-    projection, zero shuffle at any corpus size."""
-    n_sub = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    codes = []
-    for s, cb in enumerate(codebooks):
-        sub = F.slice(vec, s * d_sub + 1, d_sub)
-        scored = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            sub, _lit_double_array(cvec),
-                            lambda a, b: (a - b) * (a - b),
-                        ),
-                        F.lit(0.0).cast("double"),
-                        lambda acc, v: acc + v,
-                    ).alias("d2"),
-                    F.lit(cid).cast("long").alias("cid"),
-                )
-                for cid, cvec in enumerate(cb)
-            ]
-        )
-        codes.append(F.array_sort(scored)[0]["cid"].cast("int"))
-    return F.array(*codes)
-
-
 def _codebook_table_df(spark, codebooks: list[list[list[float]]]):
     """ONE-row frame carrying the PQ codebooks as
     ``array<array<array<double>>>`` (``[subspace][centroid][dim]``) — the
@@ -896,10 +918,11 @@ def _cb_literal(codebooks: list[list[list[float]]]) -> Column:
 def _pq_code_expr_tbl(
     vec: Column, cbt: Column, n_sub: int, d_sub: int
 ) -> Column:
-    """``array<int>`` of per-subspace nearest-centroid ids where ``cbt``
-    is a codebook-table COLUMN — bit-identical math and tie rule (smaller
-    id) to :func:`_pq_code_expr`, O(1) plan nodes at any centroid count."""
-    return F.transform(
+    """``array<int>`` of per-subspace nearest-centroid ids (squared-L2,
+    ties to the smaller id) where ``cbt`` is a codebook table (a column
+    or ONE parsed literal) — O(1) plan nodes at any centroid count. A
+    NULL ``vec`` gets a NULL code."""
+    return F.when(vec.isNotNull(), F.transform(
         cbt,
         lambda cb_s, s: F.array_sort(
             F.transform(
@@ -912,7 +935,7 @@ def _pq_code_expr_tbl(
                 ),
             )
         )[0]["cid"].cast("int"),
-    )
+    ))
 
 
 def _with_pq_codes(
@@ -1064,10 +1087,10 @@ def _lut_numpy(qv, codebooks: list[list[list[float]]]):
 
 def _probe_lut_entries(rows, cents, cbs, residual: bool):
     """ADC scan entries ``(query_id, cid, lut)``, one per (query, probed
-    cell), from collected ``(query_id, __qv, __cids)`` rows. Residual
-    codes get a LUT over ``q - centroid[cid]`` per cell; raw codes share
-    one query LUT across its cells. Queries with no probed cell score
-    nothing."""
+    cell), from ``(query_id, __qv, __cids)`` rows (:func:`_probe_rows`).
+    Residual codes get a LUT over ``q - centroid[cid]`` per cell; raw
+    codes share one query LUT across its cells. Queries with no probed
+    cell score nothing."""
     import numpy as np
 
     centd = {cid: np.asarray(cv, np.float64) for cid, cv in cents}
@@ -1086,25 +1109,78 @@ def _probe_lut_entries(rows, cents, cbs, residual: bool):
     return entries
 
 
+def _query_vectors(queries: DataFrame, id_col: str, vec_col: str):
+    """The (small-by-contract) query side on the driver, collected once:
+    ``[(query_id, vector)]`` with the vector as float64 NumPy (None for a
+    NULL vector), plus the query id's Spark type."""
+    import numpy as np
+
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("__qv"),
+    )
+    rows = [
+        (r["query_id"],
+         None if r["__qv"] is None else np.asarray(r["__qv"], np.float64))
+        for r in q.collect()
+    ]
+    return rows, q.schema["query_id"].dataType
+
+
+def _probe_rows(qrows, cents: list[tuple[int, list[float]]], n_probe: int):
+    """``(query_id, __qv, __cids)`` rows for :func:`_probe_lut_entries`:
+    each query's ``n_probe`` nearest cells by cosine, computed on the
+    driver with :func:`_nearest_ids_np` (the :func:`with_nearest_ids`
+    ids). A NULL or wrong-dim query vector probes no cell."""
+    import numpy as np
+
+    cids, C = _centroid_matrix(cents)
+    ok = [(q, v) for q, v in qrows if v is not None and len(v) == C.shape[1]]
+    if not ok:
+        return []
+    cells = _nearest_ids_np(np.stack([v for _, v in ok]), cids, C, n_probe)
+    return [{"query_id": q, "__qv": v, "__cids": c.tolist()}
+            for (q, v), c in zip(ok, cells)]
+
+
 def _adc_scan_topk_arrow(
-    codes_df: DataFrame,
+    df: DataFrame,
     entries: list[tuple[object, int | None, "object"]],
     per_q: int,
     id_col: str = "neighbor_id",
     code_col: str = "pq_code",
     cell_col: str | None = None,
     qid_type=None,
+    vec_col: str | None = None,
+    codebooks: list[list[list[float]]] | None = None,
+    cents: list[tuple[int, list[float]]] | None = None,
+    residual: bool = False,
+    qvecs: dict | None = None,
 ) -> DataFrame:
     """Arrow-batched ADC candidate scan: NumPy gather-adds over PQ codes
     against driver-shipped per-query LUTs, keeping only each batch's
-    top-``per_q`` candidates per query.
+    top-``per_q`` candidates per (query, cell).
 
     ``entries`` is the (small-by-contract) query side, collected on the
     driver: ``(query_id, cell_or_None, lut)`` with ``lut`` from
-    :func:`_lut_numpy`. With ``cell_col`` set, a query scores only the
-    batch rows in its probed cells (the IVFPQ shape — the probe join is a
-    closure lookup); without it every query scores every row (the flat PQ
+    :func:`_lut_numpy`. In by-cell mode a query scores only the batch
+    rows in its probed cells (the IVFPQ shape — the probe join is a
+    closure lookup); otherwise every query scores every row (the flat PQ
     shape — no crossJoin).
+
+    Two input shapes, one pass:
+
+    * stored codes — ``df`` carries (``id_col``, ``code_col``[,
+      ``cell_col``]), e.g. an IVF-PQ store; the scan reads no vector.
+    * inline — ``vec_col`` names the raw vector column. Each batch
+      computes its coarse cell (when ``cents`` is given, cosine via
+      :func:`_nearest_ids_np`) and its PQ code (:func:`_pq_codes_np`
+      over ``codebooks``, of ``v - centroid[cell]`` when ``residual``),
+      then scores as above, then the exact squared L2 of each survivor
+      against its query's raw vector (``qvecs[query_id]``, the
+      :func:`_l2sq` fold) from the vector it already holds. The output
+      gains ``exact`` = -squared L2, so the re-rank needs no join back
+      to the corpus and no second scan of it.
 
     Per pair the subspace terms accumulate left-to-right from 0.0
     (``sum_s lut[s][code[s]]``, subspace-major) — the order the DuckDB
@@ -1113,60 +1189,79 @@ def _adc_scan_topk_arrow(
     per-batch truncation is tournament-exact: the global top-``per_q``
     is invariant as long as every batch keeps ``per_q`` survivors.
 
-    At 100 TB this is the FAISS ADC scan shape: the scan reads
-    (id, code[, cell]) only — never a raw vector — each Arrow batch costs
-    ``n_sub`` vectorized gathers instead of interpreted per-row HOF
-    folds, and ~``per_q`` rows per (query, batch) leave the scan instead
-    of the full |queries| x |codes| pair blow-up.
-
-    Rows with a NULL code or (when ``cell_col`` is set) a NULL cell are
-    skipped: they have no distance and belong to no probed cell.
+    Rows with a NULL (or wrong-dim) vector, a NULL code or, with
+    ``cell_col``, a NULL cell are skipped: they have no distance and
+    belong to no probed cell.
     """
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
 
-    nid_field0 = next(f for f in codes_df.schema.fields if f.name == id_col)
+    inline = vec_col is not None
+    nid_type = df.schema[id_col].dataType
+    schema = T.StructType([
+        T.StructField("query_id", qid_type or nid_type),
+        T.StructField("neighbor_id", nid_type),
+        T.StructField("cos_sim", T.DoubleType()),
+    ] + ([T.StructField("exact", T.DoubleType())] if inline else []))
     if not entries:
-        empty = T.StructType([
-            T.StructField("query_id", qid_type or nid_field0.dataType),
-            T.StructField("neighbor_id", nid_field0.dataType),
-            T.StructField("cos_sim", T.DoubleType()),
-        ])
-        return codes_df.sparkSession.createDataFrame([], empty)
+        return df.sparkSession.createDataFrame([], schema)
     luts = np.stack([lut for _, _, lut in entries])
-    qids = [qid for qid, _, _ in entries]
+    qids = np.empty(len(entries), object)  # any id type, fancy-indexable
+    for i, (qid, _, _) in enumerate(entries):
+        qids[i] = qid
     n_sub = luts.shape[1]
-    by_cell = cell_col is not None
+    by_cell = cell_col is not None or cents is not None
     if by_cell:
         cell_entries: dict[int, list[int]] = {}
         for i, (_, cell, _) in enumerate(entries):
             cell_entries.setdefault(int(cell), []).append(i)
         cell_idx = {c: np.asarray(v, np.int64)
                     for c, v in cell_entries.items()}
+    if inline:
+        cb = np.asarray(codebooks, np.float64)  # (n_sub, n_cent, d_sub)
+        dim = cb.shape[0] * cb.shape[2]
+        qmat = np.stack([qvecs[qid] for qid in qids])  # per entry
+        if cents is not None:
+            cids, cmat = _centroid_matrix(cents)
+        cols = [id_col, vec_col]
+    else:
+        cols = [id_col, code_col] + ([cell_col] if by_cell else [])
 
-    schema = T.StructType([
-        T.StructField("query_id", qid_type or nid_field0.dataType),
-        T.StructField("neighbor_id", nid_field0.dataType),
-        T.StructField("cos_sim", T.DoubleType()),
-    ])
-    cols = [id_col, code_col] + ([cell_col] if by_cell else [])
+    def rows_of(pdf):
+        """(ids, codes, cells, vectors) of the batch's scorable rows."""
+        if not inline:
+            ok = pdf[code_col].notna()
+            if by_cell:
+                ok &= pdf[cell_col].notna()
+            pdf = pdf[ok]
+            codes = np.asarray(
+                [np.asarray(c, np.int64) for c in pdf[code_col]])
+            cells = pdf[cell_col].to_numpy() if by_cell else None
+            return pdf[id_col].to_numpy(), codes, cells, None
+        vecs = pdf[vec_col]
+        ok = np.fromiter(
+            (v is not None and len(v) == dim for v in vecs), bool, len(vecs))
+        if not ok.any():
+            return pdf[id_col].to_numpy()[:0], None, None, None
+        V = np.stack(vecs[ok].tolist()).astype(np.float64)
+        cells = None
+        X = V
+        if cents is not None:
+            cells = _nearest_ids_np(V, cids, cmat, 1)[:, 0]
+            if residual:
+                X = V - cmat[np.searchsorted(cids, cells)]
+        return pdf[id_col].to_numpy()[ok], _pq_codes_np(X, cb), cells, V
 
     def gen(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            ok = pdf[code_col].notna()
-            if by_cell:
-                ok &= pdf[cell_col].notna()
-            pdf = pdf[ok]
-            if not len(pdf):
+            ids, codes, cells, V = rows_of(pdf)
+            if not len(ids):
                 continue
-            codes = np.asarray(
-                [np.asarray(c, np.int64) for c in pdf[code_col]])
-            ids = pdf[id_col].to_numpy()
-            out_q, out_n, out_s = [], [], []
+            out_e, out_r, out_s = [], [], []
 
             def block(es, rows):
                 sub = codes[rows]
@@ -1176,27 +1271,32 @@ def _adc_scan_topk_arrow(
                     d += ls[:, s][:, sub[:, s]]
                 rid = ids[rows]
                 order_id = np.argsort(rid, kind="stable")
-                for ei in range(len(es)):
+                for ei, e in enumerate(es):
                     sel = order_id[np.argsort(d[ei][order_id],
                                               kind="stable")]
-                    qid = qids[int(es[ei])]
-                    sel = sel[rid[sel] != qid][:per_q]
-                    out_q.extend([qid] * len(sel))
-                    out_n.extend(rid[sel].tolist())
-                    out_s.extend((-d[ei][sel]).tolist())
+                    sel = sel[rid[sel] != qids[e]][:per_q]
+                    out_e.append(np.full(len(sel), e, np.int64))
+                    out_r.append(rows[sel])
+                    out_s.append(-d[ei][sel])
 
             if by_cell:
-                cells = pdf[cell_col].to_numpy()
                 for c in np.unique(cells):
                     es = cell_idx.get(int(c))
                     if es is not None:
                         block(es, np.nonzero(cells == c)[0])
             else:
-                block(np.arange(len(entries)), np.arange(len(pdf)))
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cos_sim": out_s})
+                block(np.arange(len(entries)), np.arange(len(ids)))
+            if not out_e:
+                continue
+            e = np.concatenate(out_e)
+            r = np.concatenate(out_r)
+            out = {"query_id": qids[e], "neighbor_id": ids[r],
+                   "cos_sim": np.concatenate(out_s)}
+            if inline:
+                out["exact"] = -_fold_sq_np(qmat[e] - V[r])
+            yield pd.DataFrame(out)
 
-    return codes_df.select(*cols).mapInPandas(gen, schema=schema)
+    return df.select(*cols).mapInPandas(gen, schema=schema)
 
 
 def pq_adc_scores(
@@ -1289,6 +1389,21 @@ def _exact_rerank_topk(
     return _per_query_topk(exact, k).select("query_id", "neighbor_id", "rank")
 
 
+def _rank_exact(cand: DataFrame, k: int) -> DataFrame:
+    """Rank an inline scan's surviving ``(query_id, neighbor_id, exact)``
+    rows by exact distance (``exact`` = -squared L2, desc; ties to the
+    smaller id) and keep ``k`` per query. The window partitions by
+    ``query_id`` like the tournament's last stage, so it adds a sort and
+    no shuffle. Output ``(query_id, neighbor_id, rank)``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("exact").desc(), F.col("neighbor_id").asc())
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank")
+    )
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1302,39 +1417,37 @@ def pq_topk(
     n_iters: int = 0,
 ) -> DataFrame:
     """PQ approximate top-k with exact re-rank (asymmetric distance via
-    per-query LUTs): each query row precomputes the ``n_sub x
-    n_centroids`` table of subspace squared-L2s once (:func:`_lut_numpy`
+    per-query LUTs): each query precomputes the ``n_sub x n_centroids``
+    table of subspace squared-L2s once on the driver (:func:`_lut_numpy`
     — Jégou et al. 2011 §III-B, FAISS's ADC scan), so scoring a candidate
-    is ``n_sub`` lookups + adds over its CODES — the scan phase reads
-    (id, pq_code) only, never raw vectors or O(dim) reconstructions.
-    Keep ``refine * k`` ADC candidates per query
-    (:func:`_adc_scan_topk_arrow`), then re-rank those few exactly.
-    Output (query_id, neighbor_id, rank) by ascending exact squared-L2.
+    is ``n_sub`` lookups + adds over its code.
 
-    At scale the corpus stores ``pq_code`` at ingest (pq_encode) and this
-    search touches ~n_sub bytes/row instead of the full vector — the
-    standard memory-bound ANN formulation alongside IVF's compute-bound one.
+    One Arrow pass over the corpus (:func:`_adc_scan_topk_arrow`, inline
+    shape) encodes each batch (:func:`_pq_codes_np`, the :func:`pq_encode`
+    codes), ADC-scores it, keeps each batch's ``refine * k`` best per
+    query and computes their exact squared L2 from the vectors the batch
+    already holds. The tournament (:func:`_per_query_topk`) keeps the
+    global ``refine * k`` by ADC, and one more ``row_number`` over the
+    same ``query_id`` partitioning keeps the ``k`` nearest exactly
+    (:func:`_rank_exact`): the corpus is read once, with no join back to
+    it. Output (query_id, neighbor_id, rank) by ascending exact
+    squared-L2. NULL vectors, on either side, are never scored.
+
+    A corpus that stores ``pq_code`` at ingest (:func:`pq_encode`) is
+    searched the same way from its codes (``sources.ivf_store``), reading
+    ~n_sub bytes/row instead of the vector until the re-rank.
     """
     cbs = pq_codebooks(corpus, id_col, vec_col, n_sub, n_centroids, n_iters)
-    encoded = pq_encode(corpus, cbs, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "pq_code"
+    dim = n_sub * len(cbs[0][0])
+    qrows, qid_type = _query_vectors(queries, id_col, vec_col)
+    qrows = [(q, v) for q, v in qrows if v is not None and len(v) == dim]
+    scan = _adc_scan_topk_arrow(
+        corpus.select(F.col(id_col).alias("neighbor_id"),
+                      F.col(vec_col).alias("__v")),
+        [(q, None, _lut_numpy(v, cbs)) for q, v in qrows], refine * k,
+        qid_type=qid_type, vec_col="__v", codebooks=cbs, qvecs=dict(qrows),
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    entries = [
-        (r["query_id"], None, _lut_numpy(r["__qv"], cbs))
-        for r in qv.collect()
-    ]
-    adc = _adc_scan_topk_arrow(
-        encoded, entries, refine * k,
-        qid_type=qv.schema["query_id"].dataType,
-    )
-    cand = _per_query_topk(adc, refine * k, partial_buckets).select(
-        "query_id", "neighbor_id"
-    )
-    return _exact_rerank_topk(cand, corpus, qv, k, id_col, vec_col)
+    return _rank_exact(_per_query_topk(scan, refine * k, partial_buckets), k)
 
 
 def srp_probe_buckets(
@@ -1620,8 +1733,8 @@ def quantize_embeddings(
     (:func:`quantized_topk`); reconstruction ``code * scale`` is within
     ``scale/2`` per component.
 
-    Everything is built-in HOF arithmetic (one codegen'd projection, zero
-    shuffle, no UDF) and IEEE-double deterministic, so a SQL oracle
+    Everything is built-in HOF arithmetic (one projection, zero shuffle,
+    no UDF; the HOF lambdas run interpreted) and IEEE-double deterministic, so a SQL oracle
     reproduces codes bit-for-bit.
     """
     code_col = code_col or f"{vec_col}_q"
@@ -1720,7 +1833,7 @@ def random_projection(
     codegen method limit, silently falling back to interpreted
     evaluation. The projection itself is one nested
     ``transform``/``zip_with``/``aggregate`` expression — O(1) plan
-    nodes, zero shuffle, codegen'd. Use before :func:`brute_force_topk` /
+    nodes, zero shuffle (its lambdas run interpreted). Use before :func:`brute_force_topk` /
     :func:`quantize_embeddings` to cut the dominant column's bytes by
     ``dim/out_dim``.
 
@@ -1905,13 +2018,24 @@ def ivfpq_topk(
 ) -> DataFrame:
     """IVF + PQ composed ANN — the standard billion-scale index shape
     (FAISS ``IVFx,PQy``; Jégou et al. 2011): the inverted file prunes
-    WHICH rows are scanned (each query touches ~n_probe/n_centroids of
-    the corpus) and product quantization prunes WHAT is read per row
-    (n_sub code bytes instead of the raw vector). ADC scoring runs
-    against per-query LUTs inside the probed cells only; the
-    ``refine * k`` survivors per query are re-ranked exactly. Output
-    (query_id, neighbor_id, rank) by ascending exact squared-L2 —
-    the same contract as :func:`pq_topk`.
+    WHICH rows are scored (each query scores ~n_probe/n_centroids of the
+    corpus) and product quantization makes each score ``n_sub`` LUT
+    lookups. The ``refine * k`` ADC survivors per query are re-ranked
+    exactly. Output (query_id, neighbor_id, rank) by ascending exact
+    squared-L2 — the same contract as :func:`pq_topk`.
+
+    The query side is collected once and its probe cells computed on the
+    driver. Then ONE Arrow pass over the corpus
+    (:func:`_adc_scan_topk_arrow`, inline shape) gives every batch its
+    coarse cell, its PQ code and its ADC scores against the probing
+    queries' LUTs, keeps each batch's ``refine * k`` best per (query,
+    cell), and computes their exact squared L2 from the vectors the batch
+    already holds. The tournament (:func:`_per_query_topk`) keeps the
+    global ``refine * k`` by ADC and one more ``row_number`` keeps the
+    ``k`` nearest exactly (:func:`_rank_exact`): no join back to the
+    corpus, no second scan of it. Cells and codes are bit-identical to
+    :func:`with_nearest_ids` and :func:`pq_encode`; NULL vectors, on
+    either side, are never scored.
 
     ``residual=False`` quantizes the raw vectors — the simplest
     replayable formulation. ``residual=True`` is FAISS's default IVFADC:
@@ -1923,10 +2047,10 @@ def ivfpq_topk(
     of one. Both variants are exactly replayable (deterministic seeding,
     HALF_UP-rounded refinement means, fixed fold orders).
 
-    At ingest the corpus would store ``centroid_id`` + ``pq_code``
-    (:func:`with_ivf_residuals` + :func:`pq_encode`) so the search never
-    touches raw vectors until the final re-rank of ~refine*k rows per
-    query.
+    A corpus searched repeatedly stores ``centroid_id`` + ``pq_code`` at
+    ingest instead (``sources.ivf_store``: :func:`with_ivf_residuals` +
+    :func:`pq_encode`), so its scans read codes and never a raw vector
+    until the final re-rank of ~refine*k rows per query.
     """
     # one seed scan serves both trainings (seed_vectors' prefix property);
     # the residual path still seeds its PQ on the residual frame itself
@@ -1935,13 +2059,6 @@ def ivfpq_topk(
     )
     cents = ivf_centroids(
         corpus, id_col, vec_col, n_centroids, n_iters, seeds=shared_seeds
-    )
-    probed0 = with_nearest_ids(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("__qv"),
-        ),
-        F.col("__qv"), cents, n_probe,
     )
     if residual:
         resid = with_ivf_residuals(
@@ -1953,33 +2070,20 @@ def ivfpq_topk(
         )
         cbs = pq_codebooks(resid, "neighbor_id", "__rv", n_sub,
                            pq_centroids, pq_iters)
-        c = pq_encode(resid, cbs, "__rv").select(
-            "neighbor_id", "pq_code", "__cid"
-        )
     else:
         cbs = pq_codebooks(corpus, id_col, vec_col, n_sub,
                            pq_centroids, pq_iters, seeds=shared_seeds)
-        c = with_nearest_ids(
-            pq_encode(corpus, cbs, vec_col).select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col("pq_code"),
-                F.col(vec_col).cast("array<double>").alias("__cv"),
-            ),
-            F.col("__cv"), cents, 1,
-        ).select("neighbor_id", "pq_code", F.col("__cids")[0].alias("__cid"))
 
-    # query side to the driver (small by contract): one LUT per (query,
-    # probed cell). Each corpus row lives in exactly ONE cell, so a
-    # (query, neighbor) pair is scored at most once; the probed scan reads
-    # only (id, pq_code, cid) — never a vector.
-    rows = probed0.select("query_id", "__qv", "__cids").collect()
-    adc = _adc_scan_topk_arrow(
-        c, _probe_lut_entries(rows, cents, cbs, residual), refine * k,
-        cell_col="__cid", qid_type=probed0.schema["query_id"].dataType,
+    # query side to the driver (small by contract): probe cells and one
+    # LUT per (query, probed cell). Each corpus row lives in exactly ONE
+    # cell, so a (query, neighbor) pair is scored at most once.
+    qrows, qid_type = _query_vectors(queries, id_col, vec_col)
+    entries = _probe_lut_entries(
+        _probe_rows(qrows, cents, n_probe), cents, cbs, residual)
+    scan = _adc_scan_topk_arrow(
+        corpus.select(F.col(id_col).alias("neighbor_id"),
+                      F.col(vec_col).alias("__v")),
+        entries, refine * k, qid_type=qid_type, vec_col="__v",
+        codebooks=cbs, cents=cents, residual=residual, qvecs=dict(qrows),
     )
-    cand = _per_query_topk(adc, refine * k).select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    return _exact_rerank_topk(cand, corpus, qv, k, id_col, vec_col)
+    return _rank_exact(_per_query_topk(scan, refine * k), k)

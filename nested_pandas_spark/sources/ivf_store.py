@@ -29,6 +29,8 @@ from ..pipeline.similarity import (
     _exact_rerank_topk,
     _per_query_topk,
     _probe_lut_entries,
+    _probe_rows,
+    _query_vectors,
     cosine,
     ivf_centroids,
     with_nearest_ids,
@@ -411,9 +413,9 @@ def ivfpq_search(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("__qv"),
     )
-    probed0 = with_nearest_ids(qv, F.col("__qv"), cents, n_probe)
-    rows = probed0.select("query_id", "__qv", "__cids").collect()
-    entries = _probe_lut_entries(rows, cents, cbs, bool(meta.get("residual")))
+    qrows, qid_type = _query_vectors(queries, id_col, vec_col)
+    entries = _probe_lut_entries(_probe_rows(qrows, cents, n_probe), cents,
+                                 cbs, bool(meta.get("residual")))
     probe_cids = sorted({int(cid) for _, cid, _ in entries})
     store = spark.read.parquet(path).where(F.col("__cid").isin(probe_cids))
 
@@ -427,7 +429,7 @@ def ivfpq_search(
     )
     adc = _adc_scan_topk_arrow(
         codes, entries, refine * k, cell_col="__cid",
-        qid_type=probed0.schema["query_id"].dataType,
+        qid_type=qid_type,
     )
     cand = _per_query_topk(adc, refine * k).select("query_id", "neighbor_id")
     return _exact_rerank_topk(cand, store, qv, k, id_col, vec_col)

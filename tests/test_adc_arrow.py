@@ -11,12 +11,20 @@ time here:
   right from 0.0
 - candidates ordered by (distance, id), the query's own id excluded
 - rows with a NULL code, or a NULL cell in by-cell mode, skipped
+- in the vector-carrying (inline) scan: each row's cell is its cosine
+  argmax, ``dot / (sqrt(sum v*v) * sqrt(sum c*c))`` folded left to right
+  (ties to the smaller id); its code is the per-subspace squared-L2 argmin
+  (first minimum) of the vector, or of ``v - centroid[cell]`` for residual
+  codes; each survivor carries ``-sum_j (q_j - v_j)^2`` folded left to
+  right; rows with a NULL vector are skipped
 
 Comparisons are ``==`` on doubles: the DuckDB oracles replay the same
 summation order, so any drift in association would break them too.
 End-to-end equality (store == inline, full-probe == ``pq_topk``) lives in
 ``test_pipeline.py``.
 """
+
+import math
 
 import numpy as np
 import pytest
@@ -170,6 +178,111 @@ def test_adc_scan_by_cell_matches_replay(codes_df, space, residual):
     assert all(exact[qid][nid] == d
                for qid, pairs in got.items() for nid, d in pairs)
     assert got_top == _topk(want)
+
+
+def _replay_cell(v, centroids):
+    best = None
+    for cid, c in sorted(centroids):
+        dot, nv, nc = 0.0, 0.0, 0.0
+        for x, y in zip(v, c):
+            dot = dot + x * y
+        for x in v:
+            nv = nv + x * x
+        for y in c:
+            nc = nc + y * y
+        cs = dot / (math.sqrt(nv) * math.sqrt(nc))
+        if best is None or cs > best[0]:
+            best = (cs, cid)
+    return best[1]
+
+
+def _replay_code(v, codebooks):
+    d_sub = len(codebooks[0][0])
+    code = []
+    for s, cb in enumerate(codebooks):
+        best = None
+        for cid, cvec in enumerate(cb):
+            acc = 0.0
+            for j in range(d_sub):
+                d = v[s * d_sub + j] - cvec[j]
+                acc = acc + d * d
+            if best is None or acc < best[0]:
+                best = (acc, cid)
+        code.append(best[1])
+    return code
+
+
+def _replay_l2sq(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + (x - y) * (x - y)
+    return acc
+
+
+@pytest.fixture(scope="module")
+def vectors(spark):
+    """(id, vector) rows with float32-exact values and a few NULL vectors."""
+    rng = np.random.default_rng(5)
+    rows = []
+    for i in range(200):
+        v = [float(np.float32(x)) for x in rng.normal(size=N_SUB * D_SUB)]
+        rows.append((i, None if i % 29 == 4 else v))
+    df = spark.createDataFrame(
+        rows, "neighbor_id long, embedding array<float>").repartition(3)
+    return rows, df
+
+
+@pytest.mark.parametrize("shape", ["flat", "cells", "residual"])
+def test_inline_scan_matches_replay(vectors, space, shape):
+    codebooks, queries, centroids, _ = space
+    rows, df = vectors
+    by_cell = shape != "flat"
+    cents = dict(centroids)
+    probes = {3: [0, 2], 17: [1], 42: [2, 1]}
+    if by_cell:
+        collected = [{"query_id": q, "__qv": queries[q], "__cids": probes[q]}
+                     for q in queries]
+        entries = sim._probe_lut_entries(
+            collected, centroids, codebooks, shape == "residual")
+    else:
+        entries = [(q, None, sim._lut_numpy(qv, codebooks))
+                   for q, qv in queries.items()]
+
+    want, exact = {}, {}
+    for nid, v in rows:
+        if v is None:
+            continue
+        cell = _replay_cell(v, centroids) if by_cell else None
+        x = v
+        if shape == "residual":
+            x = [a - b for a, b in zip(v, cents[cell])]
+        code = _replay_code(x, codebooks)
+        for qid, qv in queries.items():
+            if nid == qid or (by_cell and cell not in probes[qid]):
+                continue
+            lq = qv
+            if shape == "residual":
+                lq = [a - b for a, b in zip(qv, cents[cell])]
+            want.setdefault(qid, []).append(
+                (nid, _replay_dist(_replay_lut(lq, codebooks), code)))
+            exact[(qid, nid)] = -_replay_l2sq(qv, v)
+
+    out = sim._adc_scan_topk_arrow(
+        df.select("neighbor_id", "embedding"), entries, PER_Q,
+        vec_col="embedding", codebooks=codebooks,
+        cents=centroids if by_cell else None,
+        residual=shape == "residual",
+        qvecs={q: np.asarray(v) for q, v in queries.items()},
+    ).collect()
+    got = {}
+    for r in out:
+        got.setdefault(r["query_id"], []).append(
+            (r["neighbor_id"], -r["cos_sim"]))
+        assert r["exact"] == exact[(r["query_id"], r["neighbor_id"])]
+    adc = {qid: dict(pairs) for qid, pairs in want.items()}
+    assert all(adc[qid][nid] == d
+               for qid, pairs in got.items() for nid, d in pairs)
+    assert _topk(got) == _topk(want)
 
 
 def test_pq_adc_scores_matches_replay(emb):

@@ -1083,7 +1083,7 @@ def main() -> int:
         )[:400],
     ))
 
-    # -- 36. pq_topk ADC scan: LUT lookups over codes, no reconstruction ----
+    # -- 36. pq_topk: one Arrow pass (code, ADC, exact distance) ----------
     q36 = emb.where(F.col("vec_id") < 10)
     pq_df = sim.pq_topk(emb, q36, k=3, n_sub=4, n_centroids=8, refine=4)
     p36 = pq_df._jdf.queryExecution().analyzed().toString()
@@ -1097,21 +1097,32 @@ def main() -> int:
         "__lut" not in p36 and "Join Cross" not in p36,
         "expected no __lut column and no cross join in the analyzed plan",
     )
+    check(
+        "pq_topk reads the corpus once, with no join back to it",
+        p36.count("Relation ") == 1 and "Join" not in p36,
+        f"expected one corpus relation and no join; got "
+        f"{p36.count('Relation ')} relation(s)",
+    )
     sections.append((
-        "PQ top-k: ADC scan reads codes only (per-query LUT)",
-        "pq_topk's candidate scan scores each corpus row with n_sub "
-        "lookups into a per-query LUT over its pq_code (Jégou 2011 ADC, "
-        "same machinery as ivfpq_topk) — the scan never materializes an "
-        "O(dim) reconstruction per (query, candidate) pair, so at 100 TB "
-        "it touches ~n_sub bytes per corpus row. Raw vectors are read "
-        "only for the refine*k exact re-rank per query. The scan is one "
-        "Arrow-batched NumPy kernel (MapInPandas: driver-built LUTs ride "
-        "in the closure, gather-adds per batch, per-batch tournament "
-        "truncation), so the plan carries no LUT column and no "
-        "codes x queries crossJoin.",
+        "PQ top-k: one Arrow pass — code, ADC and exact distance per batch",
+        "pq_topk reads the corpus once. Each Arrow batch of the one "
+        "MapInPandas kernel computes its PQ codes in NumPy (the "
+        "pq_encode fold, bit for bit), scores them with n_sub lookups "
+        "into each query's driver-built LUT (Jégou 2011 ADC, the same "
+        "kernel as ivfpq_topk, which also computes each row's coarse "
+        "cell there), keeps the batch's refine*k best per query and "
+        "computes their exact squared L2 from the vectors the batch "
+        "already holds. The tournament then keeps the global refine*k "
+        "by ADC, and one more row_number over the same query_id "
+        "partitioning ranks them exactly. So the plan has one corpus "
+        "relation, no LUT column, no codes x queries crossJoin and no "
+        "join back to the corpus for the re-rank. A stored IVF-PQ index "
+        "(ivf_store.ivfpq_search) scans codes only and keeps the join "
+        "re-rank.",
         "\n".join(
-            ln.strip() for ln in p36.splitlines() if "MapInPandas" in ln
-        )[:300],
+            ln.strip() for ln in p36.splitlines()
+            if "MapInPandas" in ln or "Relation " in ln
+        )[:400],
     ))
 
     # -- 37. eTLD+1 lookup: zero shuffle, one literal map, codegen-sized ----

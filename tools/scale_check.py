@@ -427,9 +427,8 @@ def main() -> int:
             from nested_pandas_spark.pipeline.wordpiece import (
                 wordpiece_train,
             )
-            m, v = wordpiece_train(t(d, "documents"), 8)
+            m, _ = wordpiece_train(t(d, "documents"), 8)
             m.count()
-            v.unpersist()
 
         def wp_encode():
             from nested_pandas_spark.pipeline.wordpiece import (
