@@ -515,9 +515,8 @@ def main() -> None:
     def x_ivf():
         emb = t("embeddings")
         q = emb.where(F.col("vec_id") < 10)
-        # q31's configuration; at this toy embedding count the time is
-        # dominated by codegen of the plan-literal centroid matrix, which
-        # amortizes at scale
+        # q31's configuration: two Lloyd rounds, then the corpus and
+        # query assignment passes and the probe join
         return sim.ivf_topk(emb, q, k=5, n_centroids=8, n_probe=3,
                             n_iters=2).count()
 
@@ -634,9 +633,9 @@ def main() -> None:
 
     def x_ivf_largek():
         # the large-centroid-count path: 256 centroids exceeds
-        # _HOF_CENTROID_MAX, so assignment runs as Arrow-batched NumPy
-        # matmul (one BLAS call per batch, O(1) plan nodes) — the regime
-        # a real 100 TB IVF (10^4-10^5 centroids) lives in
+        # _HOF_CENTROID_MAX, so the assignment pass scores with one BLAS
+        # product per batch instead of the fold — the regime a real
+        # 100 TB IVF (10^4-10^5 centroids) lives in
         emb = t("embeddings")
         q = emb.where(F.col("vec_id") < 10)
         return sim.ivf_topk(emb, q, k=5, n_centroids=256, n_probe=16,

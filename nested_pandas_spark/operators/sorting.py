@@ -3,8 +3,10 @@
 Reference: ``NestedFrame.sort_values`` (``core.py:1851-1975``): sorting by
 ``"nested.t"`` reorders elements inside each cell (explode -> stable sort ->
 repack in the reference). In Spark this is a per-row ``array_sort`` with a
-multi-key comparator lambda — NO explode, NO shuffle, fully codegen'd; the
-reference's offset-repack trick becomes a free array rewrite.
+multi-key comparator lambda — NO explode, NO shuffle; the reference's
+offset-repack trick becomes a free array rewrite. The comparator lambda is
+evaluated interpreted (Spark HOFs are ``CodegenFallback``), not in
+generated code.
 """
 
 from __future__ import annotations

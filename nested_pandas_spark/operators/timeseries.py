@@ -8,8 +8,9 @@ such light curves are (1) **rebinning** — aggregate the measurements of each
 object into fixed-width time bins — and (2) **phase folding** — map each
 timestamp onto its phase within a known period. The reference leaves both to
 user ``map_rows`` lambdas; here they are first-class, expressed entirely with
-higher-order functions so they run per-row inside whole-stage codegen with
-**zero shuffle**.
+higher-order functions so they run per-row in the JVM with **zero shuffle**
+(Spark evaluates HOF lambdas interpreted, ``CodegenFallback``, not in
+generated code).
 
 Scale notes (100 TB):
 
@@ -247,8 +248,9 @@ def rebin(
     Implementation: per-cell HOFs only — ``array_sort(array_distinct(
     transform(...)))`` enumerates the cell's occupied bins, then a
     ``transform`` over those bins computes each stat with ``filter`` +
-    ``aggregate``. No shuffle, no UDF; the whole thing is one codegen'd
-    projection. See module docstring for the O(bins x elements) trade.
+    ``aggregate``. No shuffle, no UDF; the whole thing is one projection
+    (its HOF lambdas run interpreted, ``CodegenFallback``). See module
+    docstring for the O(bins x elements) trade.
 
     Examples
     --------
@@ -370,7 +372,8 @@ def phase_fold(
     precision is lost (epoch nanos themselves never touch a double).
 
     Pure per-element ``transform`` rebuilding the struct with one extra
-    field — zero shuffle, codegen'd. Classic use: fold a variable star's
+    field — zero shuffle, no UDF (the lambda runs interpreted,
+    ``CodegenFallback``). Classic use: fold a variable star's
     light curve on its known period before binning with :func:`rebin`.
     """
     fields = nested_field_names(df, nest)
@@ -413,9 +416,10 @@ def nest_diff(
     series — meaningful when elements are time-ordered (pack with
     ``sort_within=`` or ``sort_values("nest.t")`` first).
 
-    Pure indexed ``transform`` over the array — zero shuffle, codegen'd;
-    the CASE guard keeps the ``[i-1]`` subscript from ever evaluating at
-    i=0 (ANSI mode raises on invalid array subscripts).
+    Pure indexed ``transform`` over the array — zero shuffle, no UDF (the
+    lambda runs interpreted, ``CodegenFallback``); the CASE guard keeps
+    the ``[i-1]`` subscript from ever evaluating at i=0 (ANSI mode raises
+    on invalid array subscripts).
 
     Examples
     --------

@@ -907,11 +907,14 @@ def semantic_dedup(
     practice far more because only same-topic vectors ever meet. The
     within-cluster comparison is a plain equi-join on ``cid`` — hash
     partitioned, combinable map-side, and AQE splits a skewed mega-cluster
-    automatically. Centroids ride the plan as literals
-    (:func:`~nested_pandas_spark.pipeline.similarity.ivf_centroids` —
-    md5-seeded + deterministic Lloyd rounds), so assignment is a zero
-    shuffle projection and the DuckDB oracle can replay the entire
-    pipeline, clustering included, to the digit. At 100 TB you'd raise
+    automatically. Centroids come from
+    :func:`~nested_pandas_spark.pipeline.similarity.ivf_centroids`
+    (md5-seeded + deterministic Lloyd rounds) and ship inside the task of
+    the Arrow-batched assignment pass
+    (:func:`~nested_pandas_spark.pipeline.similarity.with_nearest_ids`),
+    a zero-shuffle map whose scores are the Spark cosine fold bit for bit,
+    so the DuckDB oracle can replay the entire pipeline, clustering
+    included, to the digit. At 100 TB you'd raise
     ``n_centroids`` so that E[|C|] keeps the per-cluster join bounded
     (sqrt(N) clusters is the classic balance point) and write the corpus
     partitioned by ``cid`` so reruns skip the assignment scan.

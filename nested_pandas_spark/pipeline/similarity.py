@@ -10,10 +10,13 @@
   bucket, then exact re-rank. Sub-linear candidate generation at 100 TB; the
   planes are pseudo-random but fully deterministic (seeded by plane index),
   so results are reproducible and oracle-checkable.
-* PQ / IVF-PQ — one Arrow-batched NumPy pass per corpus scan
+* IVF / PQ / IVF-PQ — one assignment engine: cells, codes and residuals
+  come from Arrow-batched NumPy passes (``with_nearest_ids``,
+  ``pq_encode``, ``with_ivf_residuals``, the Lloyd rounds) whose folds are
+  bit-identical to the Spark HOF expressions (``cosine``, ``_l2sq``); the
+  search itself is one such pass per corpus scan
   (``_adc_scan_topk_arrow``): cell, code, ADC score and exact re-rank
-  distance per batch, with NumPy folds bit-identical to the Spark HOF
-  expressions (``with_nearest_ids``, ``pq_encode``, ``_l2sq``).
+  distance per batch.
 """
 
 from __future__ import annotations
@@ -137,16 +140,6 @@ def _lit_double_array(values) -> Column:
     F.lit formulation."""
     return F.expr(
         "array(" + ",".join(repr(float(v)) + "D" for v in values) + ")")
-
-
-def _lit_double_matrix(rows) -> Column:
-    """Literal ``array<array<double>>`` in one py4j call (see
-    :func:`_lit_double_array`)."""
-    return F.expr(
-        "array(" + ",".join(
-            "array(" + ",".join(repr(float(v)) + "D" for v in row) + ")"
-            for row in rows
-        ) + ")")
 
 
 def plane_component(plane: int, dim_idx: int) -> float:
@@ -320,8 +313,8 @@ def ivf_centroids(
 
     ``n_iters>0`` refines the seeds with that many Lloyd k-means rounds
     (:func:`kmeans_refine`, cosine assignment — the search metric): each
-    round is one plan-literal assignment projection + one partial-agg
-    shuffle of per-centroid dimension sums. Deterministic (HALF_UP-rounded
+    round is one Arrow-batched assignment pass + one partial-agg shuffle
+    of per-centroid dimension sums. Deterministic (HALF_UP-rounded
     means), so oracles can replay the refinement exactly.
 
     ``seeds``: pre-fetched :func:`seed_vectors` rows (a prefix slice is
@@ -358,13 +351,14 @@ def kmeans_refine(
 ) -> list[tuple[int, list[float]]]:
     """Lloyd's k-means refinement of seed centroids, the Spark-native way.
 
-    Each round is (a) nearest-centroid assignment as a plan-literal
-    projection — zero shuffle at any corpus size — and (b) per-centroid
-    means via ONE partial-aggregated shuffle: ``groupBy(cid).agg(count,
-    sum(v[0]) .. sum(v[dim-1]))`` combines map-side, so only
-    ``n_centroids x (dim+1)`` doubles per input partition cross the wire,
-    never vectors. The n_centroids result rows collect to the driver and
-    become the next round's plan literals.
+    Each round is (a) nearest-centroid assignment in one Arrow-batched
+    pass (:func:`with_nearest_ids`) — zero shuffle at any corpus size —
+    and (b) per-centroid means via ONE partial-aggregated shuffle:
+    ``groupBy(cid).agg(count, sum(v[0]) .. sum(v[dim-1]))`` combines
+    map-side, so only ``n_centroids x (dim+1)`` doubles per input
+    partition cross the wire, never vectors. The n_centroids result rows
+    collect to the driver and become the next round's centroids. A NULL
+    or wrong-dim vector has no cell and counts into no centroid.
 
     Determinism contract: means are rounded HALF_UP to ``decimals`` places
     each round, so the refinement is reproducible to the digit in any
@@ -399,7 +393,8 @@ def kmeans_refine(
         for _ in range(n_iters):
             assigned = with_nearest_ids(
                 base, F.col("__v"), cents, 1, "__cids", metric
-            ).withColumn("__cid", F.col("__cids")[0])
+            ).where(F.col("__cids").isNotNull()).withColumn(
+                "__cid", F.col("__cids")[0])
             rows = (
                 assigned
                 .groupBy("__cid")
@@ -421,85 +416,14 @@ def kmeans_refine(
     return cents
 
 
-# Above this many centroids (per codebook, for PQ) the plan-literal
-# assignment expressions switch to a broadcast centroid TABLE: a literal
-# F.array of n_centroids struct(vector) entries means O(n_centroids x dim)
-# Column nodes — at the 10^4-10^5 centroids a real 100 TB IVF needs, the
-# plan alone is tens of MB and whole-stage codegen overflows the JVM's
-# 64KB method limit (the same failure random_projection hit with a literal
-# out_dim x dim matrix). Below the threshold the literal path wins: the
-# constants fold straight into codegen with no extra join node.
-_LITERAL_CENTROID_MAX = 32
-
-
-def _centroid_tbl_literal(centroids: list[tuple[int, list[float]]]) -> Column:
-    """The centroid table (``array<struct<cid: long, v: array<double>>>``)
-    as ONE parsed literal expression — the plan-literal twin of
-    :func:`_centroid_table_df`'s broadcast row."""
-    return F.expr(
-        "array(" + ",".join(
-            f"named_struct('cid', {int(cid)}L, 'v', array("
-            + ",".join(repr(float(x)) + "D" for x in cv) + "))"
-            for cid, cv in centroids
-        ) + ")")
-
-
-def _centroid_table_df(spark, centroids: list[tuple[int, list[float]]]):
-    """ONE-row frame carrying the centroid table as
-    ``array<struct<cid: long, v: array<double>>>`` — crossJoined broadcast
-    (a BroadcastNestedLoopJoin of one row, i.e. a constant), so assignment
-    stays a per-row projection with O(1) plan nodes at any centroid count.
-    """
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField(
-            "__cent_tbl",
-            T.ArrayType(T.StructType([
-                T.StructField("cid", T.LongType()),
-                T.StructField("v", T.ArrayType(T.DoubleType())),
-            ])),
-        )
-    ])
-    data = [([(int(cid), [float(x) for x in cv]) for cid, cv in centroids],)]
-    return spark.createDataFrame(data, schema)
-
-
 def _l2sq(a: Column, b: Column) -> Column:
-    """Squared L2 as the same left fold every assignment path uses, so the
-    literal and broadcast-table paths are bit-identical per centroid."""
+    """Squared L2 as a Spark left fold: from 0.0, one add per element, left
+    to right — the order :func:`_fold_l2sq_np` replays."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0).cast("double"),
         lambda acc, v: acc + v,
     )
-
-
-def _nearest_ids_tbl(vec: Column, tbl: Column, n: int, metric: str) -> Column:
-    """``array<long>`` of the n nearest centroid ids where ``tbl`` is a
-    centroid table (``array<struct<cid, v>>``, a column or ONE parsed
-    literal): squared-L2 asc or cosine desc, ties to the smaller id. A
-    NULL ``vec`` gets a NULL id array (no made-up cell)."""
-    if metric == "l2":
-        scored = F.transform(
-            tbl,
-            lambda c: F.struct(
-                _l2sq(vec, c["v"]).alias("d2"), c["cid"].alias("cid")
-            ),
-        )
-        ids = F.transform(
-            F.slice(F.array_sort(scored), 1, n), lambda s: s["cid"]
-        )
-    else:
-        scored = F.transform(
-            tbl,
-            lambda c: F.struct(
-                cosine(vec, c["v"]).alias("cs"), (-c["cid"]).alias("ncid")
-            ),
-        )
-        top = F.slice(F.reverse(F.array_sort(scored)), 1, n)
-        ids = F.transform(top, lambda s: -s["ncid"])
-    return F.when(vec.isNotNull(), ids)
 
 
 def _fold_sq_np(D):
@@ -553,16 +477,25 @@ def _cosine_np(V, C):
     return dots / den
 
 
-def _nearest_ids_np(V, cids, C, n: int, metric: str = "cosine"):
-    """NumPy twin of :func:`with_nearest_ids` for a ``(rows, dim)`` float64
-    batch against :func:`_centroid_matrix` output: ``(rows, min(n, k))``
-    int64 ids, ties to the smaller id.
+# Up to this many centroids the scores are the Spark folds replayed
+# element by element (bit-identical to ``cosine``/``_l2sq``). Above, the
+# fold's k x dim Python-level adds per batch lose to one BLAS product
+# (the FAISS assignment shape); BLAS sums in another order, so an exact
+# tie between centroids could in principle break differently
+# (measure-zero on real embeddings; the tie rule is still smallest-cid on
+# exact float ties).
+_HOF_CENTROID_MAX = 128
 
-    Up to ``_HOF_CENTROID_MAX`` centroids the distances are the HOF tiers'
-    folds replayed element by element (:func:`_cosine_np`,
-    :func:`_fold_l2sq_np`), so the ids are bit-identical to the literal and
-    broadcast-table tiers. Above, the matmul tier's BLAS scores (zero
-    norms read as 1)."""
+
+def _nearest_ids_np(V, cids, C, n: int, metric: str = "cosine"):
+    """The ``n`` nearest centroids of each row of a ``(rows, dim)`` float64
+    batch against :func:`_centroid_matrix` output: ``(rows, min(n, k))``
+    int64 ids, cosine desc or squared-L2 asc, ties to the smaller id.
+
+    Up to ``_HOF_CENTROID_MAX`` centroids the scores are the Spark folds
+    replayed element by element (:func:`_cosine_np`,
+    :func:`_fold_l2sq_np`), bit-identical to :func:`cosine` and
+    :func:`_l2sq`. Above, BLAS scores (zero norms read as 1)."""
     import numpy as np
 
     if len(C) > _HOF_CENTROID_MAX:
@@ -583,12 +516,11 @@ def _nearest_ids_np(V, cids, C, n: int, metric: str = "cosine"):
 
 
 def _pq_codes_np(X, codebooks):
-    """NumPy twin of :func:`pq_encode` for a ``(rows, dim)`` float64 batch
-    and a ``(n_sub, n_cent, d_sub)`` float64 codebook array: ``(rows,
-    n_sub)`` int64 codes. Per subspace the squared-L2 to each entry is the
-    :func:`_l2sq` fold over the slice, and the code is the first minimum
-    (ties to the smaller id), as the HOF's ``array_sort(struct(d2,
-    cid))[0]`` picks it."""
+    """PQ codes of a ``(rows, dim)`` float64 batch against a ``(n_sub,
+    n_cent, d_sub)`` float64 codebook array: ``(rows, n_sub)`` int64.
+    Per subspace the squared-L2 to each entry is the :func:`_l2sq` fold
+    over the slice, and the code is the first minimum (ties to the
+    smaller id)."""
     import numpy as np
 
     n_sub, _, d_sub = codebooks.shape
@@ -599,63 +531,68 @@ def _pq_codes_np(X, codebooks):
     return codes
 
 
-# Above this many centroids the broadcast-table HOF fold (interpreted
-# per element: n_centroids x dim lambda evaluations PER ROW) becomes the
-# CPU bottleneck — the third tier switches to Arrow-batched NumPy matmul
-# (BLAS, the FAISS assignment shape): one (batch x dim) @ (dim x k) per
-# batch. The HOF tier stays the default in 33..128 because it is
-# bit-identical to the literal path (same fold order); the matmul tier is
-# mathematically identical but sums in a different order, so exact ties
-# between centroids could in principle break differently (measure-zero on
-# real embeddings; tie rule is still smallest-cid on EXACT float ties).
-_HOF_CENTROID_MAX = 128
-
-
-def _with_nearest_ids_matmul(
-    df: DataFrame,
-    vec: Column,
-    centroids: list[tuple[int, list[float]]],
-    n: int,
-    out: str,
-    metric: str,
-) -> DataFrame:
-    """Vectorized nearest-centroid assignment: the centroid matrix ships
-    once inside the serialized task (O(1) plan nodes, like the broadcast
-    table) and every Arrow batch is one :func:`_nearest_ids_np` call — a
-    NumPy matmul + argsort in the 10^4-10^5-centroid regime where
-    interpreted HOF folds would burn n_centroids x dim lambda evaluations
-    per row. NULL/wrong-dim vectors get a NULL id array."""
+def _valid_vectors(vecs, dim: int):
+    """``(ok, V)`` for one batch's vector column, given as per-row arrays
+    (None for NULL): ``ok`` marks the rows whose vector is non-NULL with
+    ``dim`` entries and ``V`` stacks those as ``(ok.sum(), dim)`` float64.
+    Every other row has no cell, code or distance: it gets NULL outputs
+    (:func:`_vector_pass`) or is skipped (:func:`_adc_scan_topk_arrow`)."""
     import numpy as np
+
+    ok = np.fromiter(
+        (v is not None and len(v) == dim for v in vecs), bool, len(vecs))
+    if not ok.any():
+        return ok, np.empty((0, dim), np.float64)
+    return ok, np.stack(vecs[ok].tolist()).astype(np.float64)
+
+
+def _vector_pass(df: DataFrame, vec: Column, dim: int, fields, fn):
+    """``df`` plus the columns ``fields`` (``[(name, Spark type)]``, each
+    replacing a same-named column in place, as ``withColumn`` does),
+    computed in ONE Arrow-batched pass: ``fn(V)`` maps a batch's valid
+    ``vec`` values (:func:`_valid_vectors`) to one NumPy array per field,
+    and every other row gets NULL. Whatever ``fn`` closes over (centroid
+    matrix, codebooks) ships once inside the serialized task, so the plan
+    holds no coordinate and its size is O(1) in the centroid count. The
+    other columns pass through as the Arrow arrays Spark hands over, never
+    converted (a pandas round trip would turn a nullable long into a
+    double)."""
+    import numpy as np
+    import pyarrow as pa
 
     from pyspark.sql import types as T
 
-    tagged = df.withColumn("__mmv", vec.cast("array<double>"))
-    cids, mat = _centroid_matrix(centroids)
-    keep = [f for f in tagged.schema.fields if f.name != "__mmv"]
+    def null_fill(ok, M):
+        # one entry per batch row: M's next row where ok, NULL elsewhere
+        if M.ndim == 1:
+            full = np.zeros(len(ok), M.dtype)
+            full[ok] = M
+            return pa.array(full, mask=~ok)
+        offsets = np.zeros(len(ok) + 1, np.int32)
+        np.cumsum(np.where(ok, M.shape[1], 0), out=offsets[1:])
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(M.reshape(-1)), mask=pa.array(~ok))
+
+    new = dict(fields)
+    have = df.columns
     schema = T.StructType(
-        keep + [T.StructField(out, T.ArrayType(T.LongType()))]
+        [T.StructField(f.name, new[f.name]) if f.name in new else f
+         for f in df.schema.fields]
+        + [T.StructField(name, t) for name, t in fields if name not in have]
     )
-    names = [f.name for f in keep]
+    order = schema.fieldNames()
 
     def gen(batches):
-        for pdf in batches:
-            res = [None] * len(pdf)
-            vecs = pdf["__mmv"]
-            ok = [
-                i for i, v in enumerate(vecs)
-                if v is not None and len(v) == mat.shape[1]
-            ]
-            if ok:
-                V = np.stack([np.asarray(vecs.iloc[i], np.float64)
-                              for i in ok])
-                picked = _nearest_ids_np(V, cids, mat, n, metric)
-                for j, i in enumerate(ok):
-                    res[i] = picked[j].tolist()
-            o = pdf[names].copy()
-            o[out] = res
-            yield o
+        for b in batches:
+            ok, V = _valid_vectors(
+                b.column("__vp").to_numpy(zero_copy_only=False), dim)
+            outs = dict(zip(new, (null_fill(ok, M) for M in fn(V))))
+            yield pa.RecordBatch.from_arrays(
+                [outs[c] if c in outs else b.column(c) for c in order],
+                names=order)
 
-    return tagged.mapInPandas(gen, schema=schema)
+    return df.withColumn("__vp", vec.cast("array<double>")).mapInArrow(
+        gen, schema)
 
 
 def with_nearest_ids(
@@ -667,41 +604,22 @@ def with_nearest_ids(
     metric: str = "cosine",
 ) -> DataFrame:
     """Add ``out`` = ``array<long>`` of the ``n`` nearest centroid ids to
-    ``vec`` (cosine desc or squared-L2 asc; ties to the smaller id).
+    ``vec`` (cosine desc or squared-L2 asc; ties to the smaller id) — the
+    assignment step of the whole ANN family.
 
-    The scale switch of the whole ANN family, three tiers:
-
-    * <= ``_LITERAL_CENTROID_MAX`` (32): plan-literal projection —
-      constants fold into codegen, zero extra plan nodes.
-    * <= ``_HOF_CENTROID_MAX`` (128): the centroid matrix rides as ONE
-      broadcast single-row table and the argmin is a HOF over that array
-      column — O(1) plan nodes, bit-identical to the literal path (same
-      fold order).
-    * above: Arrow-batched NumPy matmul assignment
-      (:func:`_with_nearest_ids_matmul`) — the FAISS shape; interpreted
-      HOF folds would cost n_centroids x dim lambda evaluations per row,
-      which at 10^4+ centroids dominates the whole scan.
+    One Arrow-batched pass (:func:`_vector_pass`): each batch is one
+    :func:`_nearest_ids_np` call, whose scores equal the Spark
+    :func:`cosine` / :func:`_l2sq` folds bit for bit up to
+    ``_HOF_CENTROID_MAX`` centroids and are one BLAS product above. The
+    centroid matrix ships inside the task, not the plan. A NULL or
+    wrong-dim vector gets a NULL id array.
     """
-    if len(centroids) <= _LITERAL_CENTROID_MAX:
-        # literal tier through the SAME HOF expression as the broadcast
-        # tier, with the centroid table as ONE parsed literal — unrolled
-        # per-centroid Column expressions cost a py4j round trip per node
-        # to BUILD (~2-8 ms each; dozens of centroids = seconds of driver
-        # time per query construction)
-        return df.withColumn(
-            out, _nearest_ids_tbl(vec, _centroid_tbl_literal(centroids),
-                                  n, metric)
-        )
-    if len(centroids) <= _HOF_CENTROID_MAX:
-        tbl = _centroid_table_df(df.sparkSession, centroids)
-        return (
-            df.crossJoin(F.broadcast(tbl))
-            .withColumn(
-                out, _nearest_ids_tbl(vec, F.col("__cent_tbl"), n, metric)
-            )
-            .drop("__cent_tbl")
-        )
-    return _with_nearest_ids_matmul(df, vec, centroids, n, out, metric)
+    from pyspark.sql import types as T
+
+    cids, C = _centroid_matrix(centroids)
+    return _vector_pass(
+        df, vec, C.shape[1], [(out, T.ArrayType(T.LongType()))],
+        lambda V: [_nearest_ids_np(V, cids, C, n, metric)])
 
 
 def ivf_topk(
@@ -767,15 +685,16 @@ def _pq_refine_fused(
     decimals: int = 6,
 ) -> list[list[list[float]]]:
     """Lloyd refinement of ALL PQ subspace codebooks in ONE Spark job per
-    iteration: each row explodes into ``n_sub`` (subspace, assigned-cid,
+    iteration: one :func:`pq_encode` pass gives every row its
+    per-subspace codes, each row explodes into ``n_sub`` (subspace, code,
     subvector) entries and a single ``groupBy(s, cid)`` partial-agg
     shuffle carries ``n_sub * n_centroids * (d_sub + 1)`` doubles per
-    input partition. Numerically identical to refining each subspace
-    with :func:`kmeans_refine` (same literal assignment expressions,
-    same HALF_UP-rounded means) — the sequential form costs ``n_sub``
-    full corpus scans per iteration instead of one, which at small data
-    is pure job-count overhead and at 100 TB is ``n_sub`` extra reads of
-    the entire vector column."""
+    input partition. Per subspace this is :func:`kmeans_refine` with the
+    ``l2`` metric (same first-minimum codes, same HALF_UP-rounded means)
+    — the sequential form costs ``n_sub`` full corpus scans per iteration
+    instead of one, which at small data is pure job-count overhead and at
+    100 TB is ``n_sub`` extra reads of the entire vector column. Rows with
+    a NULL or wrong-dim vector get a NULL code and count nowhere."""
     n_sub = len(books)
     base = corpus.select(vec.alias("__v"))
     with cached(base) if n_iters > 1 else nullcontext(base) as base:
@@ -783,17 +702,15 @@ def _pq_refine_fused(
             entries = F.array(*[
                 F.struct(
                     F.lit(s).alias("s"),
-                    _nearest_ids_tbl(
-                        F.slice(F.col("__v"), s * d_sub + 1, d_sub),
-                        _centroid_tbl_literal(list(enumerate(books[s]))),
-                        1, "l2",
-                    )[0].alias("cid"),
+                    F.col("__code")[s].alias("cid"),
                     F.slice(F.col("__v"), s * d_sub + 1, d_sub).alias("sv"),
                 )
                 for s in range(n_sub)
             ])
             rows = (
-                base.select(F.explode(entries).alias("e"))
+                pq_encode(base, books, "__v", "__code")
+                .where(F.col("__code").isNotNull())
+                .select(F.explode(entries).alias("e"))
                 .select(
                     F.col("e.s").alias("s"),
                     F.col("e.cid").alias("cid"),
@@ -849,9 +766,7 @@ def pq_codebooks(
     (:func:`_pq_refine_fused`): a single partial-agg shuffle of
     ``n_sub x n_centroids x (d_sub+1)`` doubles per input partition —
     the sequential per-subspace form would re-scan the corpus ``n_sub``
-    times per round. Above the plan-literal centroid tier the
-    per-subspace :func:`kmeans_refine` fallback keeps plan size bounded.
-    The code layout is unchanged either way.
+    times per round. The code layout is unchanged either way.
 
     ``seeds``: pre-fetched :func:`seed_vectors` (prefix slice fine).
     """
@@ -868,36 +783,10 @@ def pq_codebooks(
         for s in range(n_sub)
     ]
     if n_iters > 0:
-        vec = F.col(vec_col).cast("array<double>")
-        if n_centroids <= _LITERAL_CENTROID_MAX:
-            books = _pq_refine_fused(corpus, books, n_iters, vec, d_sub)
-        else:
-            for s in range(n_sub):
-                sub_seeds = list(enumerate(books[s]))
-                refined = kmeans_refine(
-                    corpus, sub_seeds, n_iters,
-                    vec_expr=F.slice(vec, s * d_sub + 1, d_sub),
-                    metric="l2",
-                )
-                books[s] = [cv for _, cv in refined]
+        books = _pq_refine_fused(
+            corpus, books, n_iters, F.col(vec_col).cast("array<double>"),
+            d_sub)
     return books
-
-
-def _codebook_table_df(spark, codebooks: list[list[list[float]]]):
-    """ONE-row frame carrying the PQ codebooks as
-    ``array<array<array<double>>>`` (``[subspace][centroid][dim]``) — the
-    broadcast twin of the plan-literal codebook, same rationale as
-    :func:`_centroid_table_df`."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField(
-            "__cb_tbl",
-            T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))),
-        )
-    ])
-    data = [([[list(map(float, cv)) for cv in cb] for cb in codebooks],)]
-    return spark.createDataFrame(data, schema)
 
 
 def _cb_literal(codebooks: list[list[list[float]]]) -> Column:
@@ -915,90 +804,6 @@ def _cb_literal(codebooks: list[list[list[float]]]) -> Column:
     )
 
 
-def _pq_code_expr_tbl(
-    vec: Column, cbt: Column, n_sub: int, d_sub: int
-) -> Column:
-    """``array<int>`` of per-subspace nearest-centroid ids (squared-L2,
-    ties to the smaller id) where ``cbt`` is a codebook table (a column
-    or ONE parsed literal) — O(1) plan nodes at any centroid count. A
-    NULL ``vec`` gets a NULL code."""
-    return F.when(vec.isNotNull(), F.transform(
-        cbt,
-        lambda cb_s, s: F.array_sort(
-            F.transform(
-                cb_s,
-                lambda cvec, c: F.struct(
-                    _l2sq(
-                        F.slice(vec, s * d_sub + 1, F.lit(d_sub)), cvec
-                    ).alias("d2"),
-                    c.cast("long").alias("cid"),
-                ),
-            )
-        )[0]["cid"].cast("int"),
-    ))
-
-
-def _with_pq_codes(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec: Column,
-    out: str,
-) -> DataFrame:
-    """Threshold switch for PQ code assignment: plan-literal codebooks at
-    or below ``_LITERAL_CENTROID_MAX`` centroids per codebook, ONE
-    broadcast single-row codebook table above (see
-    :func:`with_nearest_ids` for why)."""
-    n_sub = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    if len(codebooks[0]) <= _LITERAL_CENTROID_MAX:
-        # same HOF expression as the broadcast tier over a ONE-call
-        # parsed codebook literal (see with_nearest_ids' literal tier) —
-        # bit-identical codes, O(py4j calls) = O(1) instead of
-        # O(n_sub * n_centroids)
-        return df.withColumn(
-            out, _pq_code_expr_tbl(vec, _cb_literal(codebooks),
-                                   n_sub, d_sub))
-    tbl = _codebook_table_df(df.sparkSession, codebooks)
-    return (
-        df.crossJoin(F.broadcast(tbl))
-        .withColumn(out, _pq_code_expr_tbl(vec, F.col("__cb_tbl"), n_sub, d_sub))
-        .drop("__cb_tbl")
-    )
-
-
-def _with_centroid_vec(
-    df: DataFrame,
-    cid: Column,
-    centroids: list[tuple[int, list[float]]],
-    out: str,
-) -> DataFrame:
-    """Add ``out`` = the centroid VECTOR for the id in ``cid`` — the
-    lookup residual quantization needs (``v - centroid[cid]``). Centroid
-    ids from :func:`ivf_centroids` are dense 0..n-1, so the lookup is one
-    ``element_at(ordered_vectors, cid + 1)``: O(1) per row at any
-    centroid count. Tiered like every other centroid access: plan-literal
-    array at or below ``_LITERAL_CENTROID_MAX``, ONE broadcast single-row
-    table above."""
-    ordered = sorted(centroids, key=lambda c: c[0])
-    if [c for c, _ in ordered] != list(range(len(ordered))):
-        raise ValueError("centroid ids must be dense 0..n-1")
-    idx = (cid + 1).cast("int")
-    if len(ordered) <= _LITERAL_CENTROID_MAX:
-        lit = _lit_double_matrix([cv for _, cv in ordered])
-        return df.withColumn(out, F.element_at(lit, idx))
-    tbl = _centroid_table_df(df.sparkSession, ordered)
-    return (
-        df.crossJoin(F.broadcast(tbl))
-        .withColumn(
-            out,
-            F.element_at(
-                F.transform(F.col("__cent_tbl"), lambda c: c["v"]), idx
-            ),
-        )
-        .drop("__cent_tbl")
-    )
-
-
 def with_ivf_residuals(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -1011,14 +816,25 @@ def with_ivf_residuals(
     (``v - centroid[cid]``) to every corpus row. This is what a 100 TB
     pipeline persists once so that residual-PQ search
     (:func:`ivfpq_topk` with ``residual=True``) never touches raw
-    vectors in the scan phase. Pure per-row projection — zero shuffle."""
-    vec = F.col(vec_col).cast("array<double>")
-    assigned = with_nearest_ids(corpus, vec, centroids, 1, out="__cids")
-    assigned = assigned.withColumn(cid_col, F.col("__cids")[0]).drop("__cids")
-    assigned = _with_centroid_vec(assigned, F.col(cid_col), centroids, "__cv0")
-    return assigned.withColumn(
-        residual_col, F.zip_with(vec, F.col("__cv0"), lambda a, b: a - b)
-    ).drop("__cv0")
+    vectors in the scan phase. Cell and residual come from the same
+    Arrow-batched pass (:func:`_vector_pass`, the cell as in
+    :func:`with_nearest_ids`); one IEEE subtraction per element, so the
+    residual equals Spark's ``a - b``. Zero shuffle. A NULL or wrong-dim
+    vector gets a NULL cell and residual."""
+    import numpy as np
+
+    from pyspark.sql import types as T
+
+    cids, C = _centroid_matrix(centroids)
+
+    def cell_and_residual(V):
+        cells = _nearest_ids_np(V, cids, C, 1)[:, 0]
+        return [cells, V - C[np.searchsorted(cids, cells)]]
+
+    return _vector_pass(
+        corpus, F.col(vec_col), C.shape[1],
+        [(cid_col, T.LongType()), (residual_col, T.ArrayType(T.DoubleType()))],
+        cell_and_residual)
 
 
 def pq_encode(
@@ -1029,12 +845,20 @@ def pq_encode(
 ) -> DataFrame:
     """Compress each vector to ``n_sub`` small ints — the 100 TB storage
     story: a 64-dim float vector (256 B) becomes 4-16 code bytes, and search
-    runs against codes + codebooks without touching raw vectors. Above
-    ``_LITERAL_CENTROID_MAX`` centroids per codebook the assignment runs
-    against a broadcast codebook table instead of plan literals."""
-    return _with_pq_codes(
-        corpus, codebooks, F.col(vec_col).cast("array<double>"), code_col
-    )
+    runs against codes + codebooks without touching raw vectors. One
+    Arrow-batched pass (:func:`_vector_pass`) of :func:`_pq_codes_np`: per
+    subspace the entry with the smallest :func:`_l2sq` fold, ties to the
+    smaller id; the codebooks ship inside the task, not the plan. A NULL
+    or wrong-dim vector gets a NULL code."""
+    import numpy as np
+
+    from pyspark.sql import types as T
+
+    cb = np.asarray(codebooks, np.float64)  # (n_sub, n_cent, d_sub)
+    return _vector_pass(
+        corpus, F.col(vec_col), cb.shape[0] * cb.shape[2],
+        [(code_col, T.ArrayType(T.IntegerType()))],
+        lambda V: [_pq_codes_np(V, cb).astype(np.int32)])
 
 
 def pq_decode(
@@ -1240,12 +1064,9 @@ def _adc_scan_topk_arrow(
                 [np.asarray(c, np.int64) for c in pdf[code_col]])
             cells = pdf[cell_col].to_numpy() if by_cell else None
             return pdf[id_col].to_numpy(), codes, cells, None
-        vecs = pdf[vec_col]
-        ok = np.fromiter(
-            (v is not None and len(v) == dim for v in vecs), bool, len(vecs))
-        if not ok.any():
+        ok, V = _valid_vectors(pdf[vec_col], dim)
+        if not len(V):
             return pdf[id_col].to_numpy()[:0], None, None, None
-        V = np.stack(vecs[ok].tolist()).astype(np.float64)
         cells = None
         X = V
         if cents is not None:

@@ -122,8 +122,8 @@ def _default_psl_path() -> str:
 PUBLIC_SUFFIXES: list[str] = load_psl_rules(_default_psl_path())
 
 # Above this many rules the plan-literal map would bloat the query plan
-# (same rationale as similarity._LITERAL_CENTROID_MAX) — the frame-level
-# API switches to ONE broadcast single-row map table.
+# (O(rules) literal nodes to analyze and ship with every task) — the
+# frame-level API switches to ONE broadcast single-row map table.
 _LITERAL_SUFFIX_MAX = 1024
 
 

@@ -104,7 +104,9 @@ def write_ivf_index(
 ) -> list[tuple[int, list[float]]]:
     """Write ``corpus`` as an IVF-partitioned parquet index at ``path``.
 
-    The centroid assignment is a plan-literal projection (zero shuffle);
+    The centroid assignment is one Arrow-batched map
+    (:func:`~nested_pandas_spark.pipeline.similarity.with_nearest_ids`,
+    zero shuffle);
     the write adds one hash repartition on the centroid id so each
     partition directory is a few well-sized files instead of
     one-per-input-task fragments. Returns the centroids (also persisted in
@@ -149,8 +151,8 @@ def append_ivf_index(
 ) -> list[tuple[int, int]]:
     """Append ``new_vectors`` to an existing :func:`write_ivf_index`
     store WITHOUT re-training: each vector is assigned to its nearest
-    STORED centroid (sidecar) by the same plan-literal projection the
-    writer used, and the rows are appended into exactly the matching
+    STORED centroid (sidecar) by the same assignment pass the writer
+    used, and the rows are appended into exactly the matching
     ``__cid=`` partition directories (``mode("append")`` +
     ``partitionBy`` touch only directories that receive data — the
     plan-audit proof checks no other partition gains files). Search

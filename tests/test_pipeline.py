@@ -2556,8 +2556,7 @@ def test_ivfpq_store_residual_matches_inline(spark, tmp_path):
 def test_with_ivf_residuals_reconstruction(spark):
     """residual + centroid[cid] must reconstruct the original vector
     exactly (pure double arithmetic), and cids must match the IVF
-    assignment rule. Exercises both lookup tiers (literal <=32 and
-    broadcast table >32 centroids)."""
+    assignment rule, at 8 and 40 centroids."""
     from nested_pandas_spark.pipeline import similarity as sim
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2829,46 +2828,30 @@ def test_chunk_documents_param_grid(spark):
         assert got == want, (mx, st)
 
 
-def test_broadcast_assignment_matches_literal(spark, monkeypatch):
-    """The broadcast centroid-table path (used above _LITERAL_CENTROID_MAX
-    centroids) is bit-identical to the plan-literal path across the whole
-    ANN family — ivf (q31 shape), pq (q39 shape), ivfpq (q138 shape), and
-    kmeans refinement — because both paths compute the same per-centroid
-    fold; only plan representation differs."""
-    rng = np.random.RandomState(3)
-    rows = [(i, rng.randn(8).astype(float).tolist()) for i in range(30)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = emb.where(F.col("vec_id") < 4)
+def test_vector_pass_keeps_passthrough_columns(spark):
+    """The assignment pass hands every other column back exactly: a
+    nullable long above 2**53 next to a NULL in the same batch (a pandas
+    round trip makes it a double), a struct, a timestamp; an output name
+    that already exists is replaced in place, as withColumn does."""
+    import datetime
 
-    def run_all():
-        ivf = sorted(
-            (r["query_id"], r["neighbor_id"], r["rank"])
-            for r in sim.ivf_topk(
-                emb, q, k=3, n_centroids=4, n_probe=2, n_iters=2
-            ).collect()
-        )
-        pq = sorted(
-            tuple(r)
-            for r in sim.pq_topk(
-                emb, q, k=3, n_sub=2, n_centroids=4, refine=4, n_iters=1
-            ).collect()
-        )
-        ivfpq = sorted(
-            tuple(r)
-            for r in sim.ivfpq_topk(
-                emb, q, k=3, n_centroids=4, n_probe=2, n_sub=2,
-                pq_centroids=4, refine=4,
-            ).collect()
-        )
-        cents = sim.kmeans_refine(
-            emb, sim.ivf_centroids(emb, n_centroids=4), n_iters=2, metric="l2"
-        )
-        return ivf, pq, ivfpq, cents
-
-    lit = run_all()
-    monkeypatch.setattr(sim, "_LITERAL_CENTROID_MAX", 0)
-    bc = run_all()
-    assert lit == bc
+    big = 2**60 + 1
+    df = spark.createDataFrame(
+        [(big, (big, "a"), datetime.datetime(2020, 1, 2, 3, 4, 5, 6),
+          [1.0, 0.0], [9]),
+         (None, None, None, [0.0, 1.0], None)],
+        "id long, s struct<a: long, b: string>, ts timestamp, "
+        "v array<double>, __cids array<long>",
+    ).coalesce(1)
+    # the fold (2 centroids) and the BLAS scores (150)
+    far = [(c, [-1.0, -1.0 - c]) for c in range(2, 150)]
+    for cents in ([(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+                  [(0, [1.0, 0.0]), (1, [0.0, 1.0])] + far):
+        out = sim.with_nearest_ids(df, F.col("v"), cents, 1)
+        assert out.columns == df.columns
+        rows = out.collect()
+        assert [r["__cids"] for r in rows] == [[0], [1]]
+        assert [r[:4] for r in rows] == [r[:4] for r in df.collect()]
 
 
 def test_large_centroid_count_is_not_plan_literal(spark):
@@ -3385,38 +3368,40 @@ def test_decode_wav_variants():
         decode_wav(wav(2, 4, b"\x00" * 8))  # ADPCM
 
 
-def test_matmul_assignment_matches_hof_tier(spark):
-    """The Arrow-matmul assignment tier (>_HOF_CENTROID_MAX centroids)
-    returns the same nearest-ids as the broadcast-HOF tier for both
-    metrics (ties are measure-zero on random data; tie rule is still
-    smallest-cid), and NULL/wrong-dim vectors yield NULL."""
+def test_blas_assignment_matches_fold_reference(spark):
+    """Above _HOF_CENTROID_MAX centroids the assignment scores are one BLAS
+    product, not the Spark folds: the ids must still be the ones the
+    Spark ``cosine`` / ``_l2sq`` values rank first (ties to the smaller
+    id; exact ties are measure-zero on random data), for both metrics,
+    and NULL/wrong-dim vectors yield NULL."""
     rng = np.random.RandomState(11)
     emb = spark.createDataFrame(
         [(i, rng.randn(8).tolist()) for i in range(120)],
         "vec_id long, embedding array<double>",
     )
     cents = [(i, rng.randn(8).tolist()) for i in range(150)]
-    for metric in ("cosine", "l2"):
-        mm = {
+    folds = {
+        (r["vec_id"], r["cid"]): (r["cs"], r["d2"])
+        for r in emb.crossJoin(
+            spark.createDataFrame(cents, "cid long, c array<double>")
+        ).select(
+            "vec_id", "cid",
+            sim.cosine(F.col("embedding"), F.col("c")).alias("cs"),
+            sim._l2sq(F.col("embedding"), F.col("c")).alias("d2"),
+        ).collect()
+    }
+    keys = {"cosine": lambda i, c: (-folds[i, c][0], c),
+            "l2": lambda i, c: (folds[i, c][1], c)}
+    for metric, key in keys.items():
+        got = {
             r["vec_id"]: r["__cids"]
-            for r in sim._with_nearest_ids_matmul(
+            for r in sim.with_nearest_ids(
                 emb, F.col("embedding"), cents, 3, "__cids", metric
             ).collect()
         }
-        tbl = sim._centroid_table_df(spark, cents)
-        hof = {
-            r["vec_id"]: r["__cids"]
-            for r in emb.crossJoin(F.broadcast(tbl))
-            .withColumn(
-                "__cids",
-                sim._nearest_ids_tbl(
-                    F.col("embedding"), F.col("__cent_tbl"), 3, metric
-                ),
-            )
-            .select("vec_id", "__cids")
-            .collect()
-        }
-        assert mm == hof, metric
+        want = {i: sorted(range(150), key=lambda c: key(i, c))[:3]
+                for i in range(120)}
+        assert got == want, metric
     nulls = spark.createDataFrame(
         [(1, None), (2, [0.5, 0.5]), (3, [0.0] * 8)],
         "vec_id long, embedding array<double>",
@@ -3432,8 +3417,8 @@ def test_matmul_assignment_matches_hof_tier(spark):
 
 
 def test_matmul_tier_end_to_end_ivf(spark):
-    """ivf_topk at a matmul-tier centroid count returns sane ranked
-    neighbors (the three tiers share everything downstream)."""
+    """ivf_topk above _HOF_CENTROID_MAX centroids (BLAS assignment
+    scores) returns sane ranked neighbors: a full probe is exact."""
     rng = np.random.RandomState(12)
     emb = spark.createDataFrame(
         [(i, rng.randn(8).tolist()) for i in range(400)],

@@ -1,14 +1,18 @@
-"""NumPy twins of the Spark HOF folds, and NULL vectors across the tiers.
+"""The NumPy assignment kernels against the Spark HOF folds, and vectors
+that have no cell.
 
-The inline PQ / IVF-PQ scan computes cells, codes and exact distances in
-NumPy (``similarity._nearest_ids_np``, ``_pq_codes_np``, ``_fold_sq_np``).
-They must give exactly what the Spark expressions give — ``with_nearest_ids``
-(cosine and l2), ``pq_encode`` and ``_l2sq`` — compared with ``==`` on
-doubles and ids, no tolerance, including exact ties between duplicated
+Cells, codes and exact distances are computed in NumPy
+(``similarity._nearest_ids_np``, ``_pq_codes_np``, ``_fold_sq_np``) by
+``with_nearest_ids``, ``pq_encode``, ``with_ivf_residuals`` and the inline
+PQ / IVF-PQ scan. They must give exactly what the Spark expressions give:
+the expected ids and codes are ranked in Python from the ``cosine`` /
+``_l2sq`` values Spark computes per (row, centroid) pair, and compared
+with ``==``, no tolerance, including exact ties between duplicated
 centroids, which go to the smaller id.
 
-A NULL vector has no cell and no code in every tier, is never scored, and
-is not counted into any k-means centroid.
+A NULL vector, or one of the wrong dimension, has no cell and no code at
+every centroid count, is never scored, and is not counted into any
+k-means centroid.
 """
 
 import numpy as np
@@ -19,6 +23,8 @@ from nested_pandas_spark.pipeline import similarity as sim
 
 SF = "/root/testdata/sf0.01"
 NULL_IDS = (3, 77, 200)
+SHORT_ID, LONG_ID = 11, 150  # 32-d and 80-d vectors among the 64-d ones
+BAD_IDS = NULL_IDS + (SHORT_ID, LONG_ID)
 
 
 @pytest.fixture(scope="module")
@@ -38,6 +44,48 @@ def _col(df, name):
     return [r[name] for r in df.orderBy("vec_id").select(name).collect()]
 
 
+def _spark_folds(df, vcol, table, d_sub=None):
+    """{(vec_id, s, cid): (cosine, squared L2)} as Spark's ``cosine`` and
+    ``_l2sq`` folds compute them for every (row, table entry) pair. Table
+    rows are ``(s, cid, vector)``; with ``d_sub`` the row vector is its
+    subspace-``s`` slice and only the squared L2 is computed."""
+    t = df.sparkSession.createDataFrame(
+        table, "s int, cid long, c array<double>")
+    v, c = F.col(vcol), F.col("c")
+    if d_sub is None:
+        cs = sim.cosine(v, c)
+    else:
+        v, cs = F.slice(v, F.col("s") * d_sub + 1, d_sub), F.lit(None)
+    return {
+        (r["vec_id"], r["s"], r["cid"]): (r["cs"], r["d2"])
+        for r in df.crossJoin(t).select(
+            "vec_id", "s", "cid", cs.alias("cs"),
+            sim._l2sq(v, c).alias("d2")).collect()
+    }
+
+
+def _ref_ids(folds, ids, cids, metric, n):
+    """Per row, the ``n`` best centroid ids by the Spark fold values:
+    cosine desc or squared L2 asc, exact ties to the smaller id."""
+    if metric == "cosine":
+        return [sorted(cids, key=lambda c: (-folds[i, 0, c][0], c))[:n]
+                for i in ids]
+    return [sorted(cids, key=lambda c: (folds[i, 0, c][1], c))[:n]
+            for i in ids]
+
+
+def _ref_codes(df, vcol, books, ids):
+    """Per row, each subspace's codebook entry with the smallest Spark
+    ``_l2sq`` fold over the row's slice, ties to the smaller id."""
+    d_sub = len(books[0][0])
+    folds = _spark_folds(df, vcol, [
+        (s, c, cv) for s, cb in enumerate(books) for c, cv in enumerate(cb)
+    ], d_sub)
+    k = range(len(books[0]))
+    return [[min(k, key=lambda c: (folds[i, s, c][1], c))
+             for s in range(len(books))] for i in ids]
+
+
 def test_numpy_twins_equal_spark_folds(emb, local):
     ids, V = local
     cents = sim.ivf_centroids(emb, n_centroids=8)
@@ -46,50 +94,59 @@ def test_numpy_twins_equal_spark_folds(emb, local):
     wide = [(c, V[c].tolist()) for c in range(40)] + [(40, V[5].tolist())]
     base = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    got = base
     cases = []
     for name, cs in (("c8", cents), ("dup", dup), ("wide", wide)):
         for metric in ("cosine", "l2"):
             for n in (1, 3):
                 out = f"{name}_{metric}_{n}"
-                base = sim.with_nearest_ids(
-                    base, F.col("v"), cs, n, out=out, metric=metric)
+                got = sim.with_nearest_ids(
+                    got, F.col("v"), cs, n, out=out, metric=metric)
                 cases.append((out, cs, metric, n))
-    got = base.orderBy("vec_id").collect()
-    # the fold values themselves, not just the ids they rank
-    C = np.asarray([cv for _, cv in cents])
-    cdf = emb.sparkSession.createDataFrame(
-        cents, "cid long, c array<double>")
-    folds = base.crossJoin(cdf).select(
-        "vec_id", "cid", sim.cosine(F.col("v"), F.col("c")).alias("cs"),
-        sim._l2sq(F.col("v"), F.col("c")).alias("d2")).collect()
-    cs_np, d2_np = sim._cosine_np(V, C), sim._fold_l2sq_np(V, C)
-    row = {vid: i for i, vid in enumerate(ids)}
-    assert all(r["cs"] == cs_np[row[r["vec_id"]], r["cid"]] and
-               r["d2"] == d2_np[row[r["vec_id"]], r["cid"]] for r in folds)
+    got = got.orderBy("vec_id").collect()
+    folds = {name: _spark_folds(base, "v", [(0, c, cv) for c, cv in cs])
+             for name, cs in (("c8", cents), ("dup", dup), ("wide", wide))}
     for out, cs, metric, n in cases:
-        want = sim._nearest_ids_np(V, *sim._centroid_matrix(cs), n, metric)
-        assert [r[out] for r in got] == want.tolist(), out
-    ties = sim._nearest_ids_np(
-        V, *sim._centroid_matrix(dup), 3, "cosine").tolist()
+        want = _ref_ids(folds[out.split("_")[0]], ids,
+                        sorted(c for c, _ in cs), metric, n)
+        assert [r[out] for r in got] == want, out
+    ties = [r["dup_cosine_3"] for r in got]
     assert any(t[:2] in ([3, 8], [0, 9]) for t in ties)
     assert not any(t[0] in (8, 9) for t in ties)
+    # the NumPy folds themselves equal the Spark fold values
+    cs_np = sim._cosine_np(V, np.asarray([cv for _, cv in cents]))
+    d2_np = sim._fold_l2sq_np(V, np.asarray([cv for _, cv in cents]))
+    row = {vid: i for i, vid in enumerate(ids)}
+    assert all(cs_ == cs_np[row[i], c] and d2 == d2_np[row[i], c]
+               for (i, _, c), (cs_, d2) in folds["c8"].items())
 
     cbs = sim.pq_codebooks(emb, n_sub=4, n_centroids=8)
     cbs_dup = [cb + [cb[2]] for cb in cbs]
     for books in (cbs, cbs_dup):
         codes = _col(sim.pq_encode(emb, books), "pq_code")
-        assert codes == sim._pq_codes_np(V, np.asarray(books)).tolist()
+        assert codes == _ref_codes(base, "v", books, ids)
+    assert any(2 in c for c in codes)  # the tie was in play
+    assert not any(8 in c for c in codes)
 
     resid = sim.with_ivf_residuals(emb, cents).orderBy("vec_id").collect()
-    cells = sim._nearest_ids_np(V, *sim._centroid_matrix(cents), 1)[:, 0]
-    assert [r["centroid_id"] for r in resid] == cells.tolist()
-    R = V - np.asarray([cv for _, cv in cents])[cells]
-    assert [r["residual"] for r in resid] == R.tolist()
+    cells = [c[0] for c in _ref_ids(folds["c8"], ids, range(8), "cosine", 1)]
+    assert [r["centroid_id"] for r in resid] == cells
+    spark_resid = _col(
+        base.join(emb.sparkSession.createDataFrame(
+            list(zip(ids, cells)), "vec_id long, cid long"), "vec_id")
+        .join(emb.sparkSession.createDataFrame(
+            cents, "cid long, c array<double>"), "cid")
+        .select("vec_id", F.zip_with("v", "c", lambda a, b: a - b).alias("r")),
+        "r")
+    assert [r["residual"] for r in resid] == spark_resid
+    R = np.asarray(spark_resid)
     rcbs = [[list(map(float, R[i, s * 16:(s + 1) * 16])) for i in range(8)]
             for s in range(4)]
     rcodes = _col(sim.pq_encode(
         sim.with_ivf_residuals(emb, cents), rcbs, "residual"), "pq_code")
-    assert rcodes == sim._pq_codes_np(R, np.asarray(rcbs)).tolist()
+    rbase = emb.sparkSession.createDataFrame(
+        list(zip(ids, spark_resid)), "vec_id long, v array<double>")
+    assert rcodes == _ref_codes(rbase, "v", rcbs, ids)
 
     q = base.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"))
@@ -106,29 +163,34 @@ def test_numpy_twins_equal_spark_folds(emb, local):
 
 def test_null_vectors_have_no_cell_code_or_neighbor(spark, emb, local):
     ids, V = local
+    e = F.col("embedding")
     nulled = emb.withColumn(
         "embedding",
-        F.when(~F.col("vec_id").isin(*NULL_IDS), F.col("embedding")))
-    kept = emb.where(~F.col("vec_id").isin(*NULL_IDS))
+        F.when(F.col("vec_id") == SHORT_ID, F.slice(e, 1, 32))
+        .when(F.col("vec_id") == LONG_ID, F.concat(e, F.slice(e, 1, 16)))
+        .when(~F.col("vec_id").isin(*NULL_IDS), e))
+    kept = emb.where(~F.col("vec_id").isin(*BAD_IDS))
     vec = F.col("embedding").cast("array<double>")
-    # literal (<= 32), broadcast table (<= 128) and matmul tiers
+    # the fold (<= 128 centroids) and BLAS (> 128) scores
     for n_cent in (8, 40, 150):
         cents = [(c, V[c + 10].tolist()) for c in range(n_cent)]
         out = {r["vec_id"]: r["__cids"] for r in sim.with_nearest_ids(
             nulled, vec, cents, 2).select("vec_id", "__cids").collect()}
-        assert all((out[i] is None) == (i in NULL_IDS) for i in ids), n_cent
+        assert all((out[i] is None) == (i in BAD_IDS) for i in ids), n_cent
     for n_cent in (8, 40):
         cbs = sim.pq_codebooks(emb, n_sub=4, n_centroids=n_cent)
         codes = {r["vec_id"]: r["pq_code"]
                  for r in sim.pq_encode(nulled, cbs).collect()}
-        assert all((codes[i] is None) == (i in NULL_IDS) for i in ids)
+        assert all((codes[i] is None) == (i in BAD_IDS) for i in ids)
 
-    # NULL rows no longer count into centroid 0's mean
+    # NULL and wrong-dim rows count into no centroid's mean
     seeds = sim.seed_vectors(emb, n=6)
     assert sim.kmeans_refine(nulled, seeds, 1) == \
         sim.kmeans_refine(kept, seeds, 1)
+    assert sim.pq_codebooks(nulled, n_iters=1) == \
+        sim.pq_codebooks(kept, n_iters=1)
 
-    # a NULL-vector query probes nothing; a NULL-vector row is never
+    # a NULL-vector query probes nothing; a NULL or wrong-dim row is never
     # scored, so the answer equals the one without those rows
     q = nulled.where(F.col("vec_id").isin(0, 1, 2, 3, 5))
     calls = [
@@ -140,5 +202,5 @@ def test_null_vectors_have_no_cell_code_or_neighbor(spark, emb, local):
     for call in calls:
         got = sorted(tuple(r) for r in call(nulled).collect())
         assert got == sorted(tuple(r) for r in call(kept).collect())
-        assert got and {r[1] for r in got}.isdisjoint(NULL_IDS)
+        assert got and {r[1] for r in got}.isdisjoint(BAD_IDS)
         assert {r[0] for r in got} == {0, 1, 2, 5}

@@ -42,6 +42,33 @@ def explain_str(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+@contextlib.contextmanager
+def snapshot_plans():
+    """Collect the explain text of every frame ``pipeline.corpus`` hands to
+    ``snapshot`` inside the block. The prefix-sum operators materialize
+    their range-partitioned projection eagerly, so the explained result
+    only reads the checkpoint: the partitioning and window claims are
+    checked on the frame that the checkpoint materialized."""
+    from nested_pandas_spark.pipeline import corpus
+
+    seen, orig = [], corpus.snapshot
+
+    def record(df):
+        seen.append(explain_str(df))
+        return orig(df)
+
+    corpus.snapshot = record
+    try:
+        yield seen
+    finally:
+        corpus.snapshot = orig
+
+
+def range_prefix_sum(plan: str) -> bool:
+    """A range-partitioned exchange feeding a per-partition window."""
+    return "rangepartitioning" in plan and "Window" in plan
+
+
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from nested_pandas_spark import NestedFrame, get_spark, read_parquet
@@ -249,12 +276,18 @@ def main() -> int:
     ))
 
     # -- 9. pack_sequences: no single-task global window --------------------
-    p9 = explain_str(pack_sequences(docs, capacity=1024))
+    with snapshot_plans() as snap9:
+        p9 = explain_str(pack_sequences(docs, capacity=1024))
+    p9 = "".join(snap9) + p9
     check(
         "pack_sequences parallel prefix sum",
-        "Exchange SinglePartition" not in p9
-        and "SinglePartition" not in p9,
+        "SinglePartition" not in p9,
         "global window funnels through one task",
+    )
+    check(
+        "pack_sequences range-partitioned prefix sum",
+        any(range_prefix_sum(p) for p in snap9),
+        "the snapshotted prefix-sum frame is not range-partitioned",
     )
     sections.append((
         "Sequence packing: two-stage prefix sum, no SinglePartition exchange",
@@ -262,7 +295,9 @@ def main() -> int:
         "partitioning + per-partition windows + broadcast partition offsets. "
         "The naive `SUM() OVER (ORDER BY id)` plan would contain `Exchange "
         "SinglePartition` — this plan must not (and the oracle for q43 IS "
-        "the naive form, so equivalence is hash-checked).",
+        "the naive form, so equivalence is hash-checked). The range "
+        "exchange and window are checked on the frame the eager "
+        "`snapshot` materializes; the result reads that checkpoint.",
         "\n".join(
             ln.strip()
             for ln in p9.splitlines()
@@ -301,11 +336,18 @@ def main() -> int:
     # -- 11. assign_shards: prefix sum stays parallel -----------------------
     from nested_pandas_spark.pipeline.corpus import assign_shards
 
-    p11 = explain_str(assign_shards(docs, 64000, tokens_col="n_chars"))
+    with snapshot_plans() as snap11:
+        p11 = explain_str(assign_shards(docs, 64000, tokens_col="n_chars"))
+    p11 = "".join(snap11) + p11
     check(
         "assign_shards parallel prefix sum",
         "SinglePartition" not in p11,
         "global window funnels through one task",
+    )
+    check(
+        "assign_shards range-partitioned prefix sum",
+        any(range_prefix_sum(p) for p in snap11),
+        "the snapshotted prefix-sum frame is not range-partitioned",
     )
     sections.append((
         "Balanced sharding: hash-shuffled prefix sum, no SinglePartition",
@@ -363,9 +405,10 @@ def main() -> int:
     )
     sections.append((
         "Semantic dedup: clustered pairwise pass, never all-pairs",
-        "semantic_dedup assigns every vector to a plan-literal centroid "
-        "(pure projection) and compares pairs through an equi-join on the "
-        "cluster id — the plan must contain no CartesianProduct / "
+        "semantic_dedup assigns every vector to a centroid in one "
+        "Arrow-batched pass (no shuffle) and compares pairs through an "
+        "equi-join on the cluster id — the plan must contain no "
+        "CartesianProduct / "
         "BroadcastNestedLoopJoin. The quadratic cost is bounded per "
         "cluster, the dropped-id side of the final anti-style join is "
         "id-only, and AQE splits a skewed mega-cluster.",
@@ -700,7 +743,9 @@ def main() -> int:
     # -- 26. quality_bins: global ntile WITHOUT a single-task window --------
     scored = docs.where(F.col("text").isNotNull()).select(
         "doc_id", F.length("text").cast("double").alias("score"))
-    p26 = explain_str(quality_bins(scored, "score", 5))
+    with snapshot_plans() as snap26:
+        p26 = explain_str(quality_bins(scored, "score", 5))
+    p26 = "".join(snap26) + p26
     check(
         "quality_bins no global window",
         "Exchange SinglePartition" not in p26,
@@ -708,9 +753,8 @@ def main() -> int:
     )
     check(
         "quality_bins range partitioning",
-        "rangepartitioning" in p26 or "REPARTITION_BY_NUM" in p26
-        or "Exchange range" in p26,
-        "prefix sum not range-partitioned",
+        any(range_prefix_sum(p) for p in snap26),
+        "the snapshotted prefix-sum frame is not range-partitioned",
     )
     sections.append((
         "quality_bins: exact global ntile via distributed prefix sum",
@@ -718,7 +762,9 @@ def main() -> int:
         "running counts plus broadcast driver offsets — no `ntile() OVER "
         "(ORDER BY ...)` single-task Exchange anywhere in the plan; only "
         "(id, score) pairs shuffle. The join back to the input is id-keyed "
-        "(broadcast at this toy scale; a co-partitioned hash join at 100 TB).",
+        "(broadcast at this toy scale; a co-partitioned hash join at 100 TB). "
+        "The range-partitioned window runs in the eager `snapshot` of the "
+        "prefix-sum frame, so its lines come from that frame's plan.",
         "\n".join(
             ln.strip() for ln in p26.splitlines()
             if "Exchange" in ln or "Window" in ln or "Join" in ln
@@ -774,64 +820,40 @@ def main() -> int:
         )[:600],
     ))
 
-    # -- 28. ANN assignment above the literal threshold ---------------------
+    # -- 28. ANN assignment: one Arrow pass at every centroid count -------
     from nested_pandas_spark.pipeline import similarity as sim
 
-    # mid tier (33..128): broadcast table + HOF, bit-identical to literal
-    mid_cents = [
-        (i, [123.456789 + i] + [float(i % 7)] * 63) for i in range(100)
-    ]
-    p28 = explain_str(
-        sim.with_nearest_ids(
-            emb, F.col("embedding").cast("array<double>"), mid_cents, 4
+    p28 = []
+    for n_cent in (8, 100, 256):
+        cents = [
+            (i, [123.456789 + i] + [float(i % 7)] * 63) for i in range(n_cent)
+        ]
+        a28 = sim.with_nearest_ids(
+            emb, F.col("embedding").cast("array<double>"), cents, 4
         )
-    )
-    p28a = sim.with_nearest_ids(
-        emb, F.col("embedding").cast("array<double>"), mid_cents, 4
-    )._jdf.queryExecution().analyzed().toString()
-    check(
-        "mid-tier centroid assignment not plan-literal",
-        "123.456" not in p28a and len(p28a) < 20000,
-        f"centroid coordinates leaked into the plan (len={len(p28a)})",
-    )
-    check(
-        "mid-tier centroid assignment broadcasts the table",
-        "BroadcastNestedLoopJoin" in p28 or "BroadcastExchange" in p28,
-        "centroid table not broadcast",
-    )
-    # top tier (>128): Arrow matmul — no join at all, still no literals
-    big_cents = [
-        (i, [123.456789 + i] + [float(i % 7)] * 63) for i in range(256)
-    ]
-    big_df = sim.with_nearest_ids(
-        emb, F.col("embedding").cast("array<double>"), big_cents, 4
-    )
-    p28b = big_df._jdf.queryExecution().analyzed().toString()
-    p28bp = explain_str(big_df)
-    check(
-        "matmul-tier centroid assignment not plan-literal",
-        "123.456" not in p28b and len(p28b) < 20000,
-        f"centroid coordinates leaked into the plan (len={len(p28b)})",
-    )
-    check(
-        "matmul-tier assignment is Arrow-batched (MapInPandas), no join",
-        "MapInPandas" in p28bp and "Join" not in p28bp,
-        "expected a join-free MapInPandas plan for the matmul tier",
-    )
+        analyzed = a28._jdf.queryExecution().analyzed().toString()
+        p28.append(explain_str(a28))
+        check(
+            f"centroid assignment at {n_cent} centroids is one Arrow pass",
+            "MapInArrow" in p28[-1] and "Join" not in p28[-1]
+            and "123.456" not in analyzed and len(analyzed) < 20000,
+            f"expected a join-free MapInArrow plan with no centroid "
+            f"coordinate (analyzed len={len(analyzed)})",
+        )
     sections.append((
-        "ANN centroid assignment above 32 centroids: O(1) plan, three tiers",
-        "Above `_LITERAL_CENTROID_MAX` (32) the centroid/codebook matrix "
-        "never appears as plan literals: up to `_HOF_CENTROID_MAX` (128) "
-        "it rides as ONE broadcast single-row table with a HOF argmin "
-        "(bit-identical to the literal fold); above that the assignment is "
-        "an Arrow-batched NumPy matmul (the FAISS shape) — one BLAS call "
-        "per batch instead of n_centroids x dim interpreted lambda "
-        "evaluations per row, which is what a 10^4-10^5-centroid 100 TB "
-        "IVF needs. All tiers: no centroid coordinate in the plan, "
-        "constant plan size in n_centroids.",
+        "ANN centroid assignment: one Arrow pass, O(1) plan at any count",
+        "`with_nearest_ids`, `pq_encode`, `with_ivf_residuals` and the "
+        "k-means / PQ Lloyd rounds assign in ONE Arrow-batched pass "
+        "(`similarity._vector_pass`): the centroid matrix or codebooks ship "
+        "inside the task, so at 8, 100 and 256 centroids the plan is a "
+        "MapInArrow with no join and no centroid coordinate, and its size "
+        "does not grow with n_centroids. Up to `_HOF_CENTROID_MAX` (128) "
+        "the scores replay the Spark `cosine` / `_l2sq` folds bit for "
+        "bit; above, one BLAS product per batch (the FAISS shape) — what a "
+        "10^4-10^5-centroid 100 TB IVF needs.",
         "\n".join(
-            ln.strip() for ln in (p28 + p28bp).splitlines()
-            if "Join" in ln or "Exchange" in ln or "MapInPandas" in ln
+            ln.strip() for ln in "".join(p28).splitlines()
+            if "Join" in ln or "Exchange" in ln or "MapInArrow" in ln
         )[:600],
     ))
 
