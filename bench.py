@@ -182,6 +182,7 @@ def main() -> None:
     from nested_pandas_spark import NestedFrame, get_spark, read_parquet
     from nested_pandas_spark.pipeline import dedup as dd
     from nested_pandas_spark.pipeline import similarity as sim
+    from nested_pandas_spark.plans.inspect import plan_nodes
 
     spark = get_spark("bench", cpus=cpus)
 
@@ -992,7 +993,7 @@ def main() -> None:
                .df.select(F.sum(F.size("items"))))
         d["plan_build"] = round(time.perf_counter() - t0, 4)
         t0 = time.perf_counter()
-        dfq._jdf.queryExecution().executedPlan()
+        next(plan_nodes(dfq))  # forces physical planning
         d["catalyst_compile"] = round(time.perf_counter() - t0, 4)
         t0 = time.perf_counter()
         dfq.collect()

@@ -284,12 +284,14 @@ def seed_vectors(
     extra shuffle, even over a 100 TB corpus. A PREFIX property holds:
     the first k of ``seed_vectors(n)`` equal ``seed_vectors(k)``, so one
     scan can seed both the IVF and the PQ codebooks (see
-    :func:`ivfpq_topk`)."""
+    :func:`ivfpq_topk`). Rows whose vector is NULL are skipped: they have
+    no coordinates to seed from."""
     rows = (
         corpus.select(
             F.col(vec_col).cast("array<double>").alias("__v"),
             F.md5(F.col(id_col).cast("string")).alias("__h"),
         )
+        .where(F.col("__v").isNotNull())
         .orderBy("__h")
         .limit(n)
         .collect()
@@ -495,15 +497,16 @@ def _nearest_ids_np(V, cids, C, n: int, metric: str = "cosine"):
     Up to ``_HOF_CENTROID_MAX`` centroids the scores are the Spark folds
     replayed element by element (:func:`_cosine_np`,
     :func:`_fold_l2sq_np`), bit-identical to :func:`cosine` and
-    :func:`_l2sq`. Above, BLAS scores (zero norms read as 1)."""
+    :func:`_l2sq`. Above, BLAS scores. At every size a zero-norm vector or
+    centroid has no cosine and raises, as :func:`_cosine_np` does."""
     import numpy as np
 
     if len(C) > _HOF_CENTROID_MAX:
         if metric == "cosine":
             cn = np.linalg.norm(C, axis=1)
-            cn[cn == 0] = 1.0
             vn = np.linalg.norm(V, axis=1)
-            vn[vn == 0] = 1.0
+            if len(V) and not (cn.all() and vn.all()):
+                raise ZeroDivisionError("cosine of a zero-norm vector")
             key = -((V / vn[:, None]) @ (C / cn[:, None]).T)
         else:
             key = (V * V).sum(1)[:, None] - 2.0 * (V @ C.T) + (C * C).sum(1)

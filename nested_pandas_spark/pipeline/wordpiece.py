@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..nestedframe.expr import _sql_literal
+from ..plans.inspect import plan_nodes
 from ..session import FrameChain, snapshot
 from .text import words
 
@@ -278,10 +279,8 @@ def wordpiece_pieces(merges, vocab: DataFrame) -> list[str]:
     # cluster job re-deriving an alphabet from rows that already live in
     # driver memory. Python twin of _WP_SYMS_SQL: first char bare, later
     # chars ##-prefixed (both sides index by code point).
-    is_local = False
     try:
-        plan = vocab._jdf.queryExecution().optimizedPlan()
-        is_local = plan.getClass().getSimpleName() == "LocalRelation"
+        is_local = next(plan_nodes(vocab, "optimized")).name == "LocalRelation"
     except Exception:
         is_local = False
     if is_local:

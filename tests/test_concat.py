@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nested_pandas_spark import NestedFrame
+from nested_pandas_spark.plans.inspect import find_nodes
 
 
 @pytest.fixture()
@@ -57,8 +58,7 @@ def test_concat_validation(spark, ab):
 def test_concat_no_shuffle(ab):
     # a union is plan concatenation: the physical plan must not shuffle
     a, b = ab
-    plan = NestedFrame.concat([a, b]).df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert not find_nodes(NestedFrame.concat([a, b]).df, "Exchange")
 
 
 def test_concat_mixed_plain_dataframe(spark, ab):

@@ -10,6 +10,7 @@ from nested_pandas_spark.pipeline.embeddings import (
     pca_fit,
     pca_transform,
 )
+from nested_pandas_spark.plans.inspect import find_nodes, plan_nodes
 
 
 @pytest.fixture(scope="module")
@@ -85,15 +86,9 @@ def test_transform_plan_is_broadcast_no_shuffle(spark, vecs, vecs_np):
         [(i, v.tolist()) for i, v in enumerate(vecs_np)],
         "id long, embedding array<double>",
     )  # no repartition: any Exchange in the plan is the operator's own
-    plan = pca_transform(flat, model, "embedding")._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    shuffles = [
-        l for l in plan.splitlines()
-        if l.startswith("(") and l.split(") ")[1].startswith("Exchange")
-    ]
-    assert shuffles == []
+    nodes = list(plan_nodes(pca_transform(flat, model, "embedding")))
+    assert find_nodes(nodes, "BroadcastNestedLoopJoin", "BroadcastExchange")
+    assert find_nodes(nodes, "ShuffleExchange") == []
 
 
 def test_k_validation(spark, vecs):

@@ -12,6 +12,7 @@ tests pin down that the rewrites never change what the eager path computes:
 import pytest
 
 from nested_pandas_spark import NestedFrame
+from nested_pandas_spark.plans.inspect import find_nodes
 
 
 @pytest.fixture()
@@ -70,8 +71,7 @@ def test_flatten_keeps_registered_aggs(pending):
     erows = sorted(map(tuple, eager.df.select(*cols).collect()))
     assert lrows == erows
     # the rewrite must still avoid building any array
-    plan = lazy.df._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in plan
+    assert not find_nodes(lazy.df, text="collect_list")
 
 
 def test_explode_keeps_registered_aggs(pending):
@@ -112,8 +112,7 @@ def test_fillna_pushdown_keeps_pack_pending(spark, objects):
     filled = ndf.fillna({"nested.flux": -1.0})
     # still lazy: a subsequent count prunes the collect_list entirely
     out = filled.count_nested("nested").df.select("id", "n_nested")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in plan
+    assert not find_nodes(out, text="collect_list")
     # values match the eager path
     lazy_cells = {r["id"]: r["nested"] for r in filled.df.collect()}
     eager = NestedFrame(ndf.df).fillna({"nested.flux": -1.0})
@@ -152,6 +151,5 @@ def test_base_dropna_stays_lazy(spark, sources):
     out = ndf.dropna(subset="a")
     # count through the pending agg path still prunes collect_list
     counted = out.count_nested("nested").df.select("id", "n_nested")
-    plan = counted._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in plan
+    assert not find_nodes(counted, text="collect_list")
     assert sorted(r["id"] for r in out.df.collect()) == [0, 2]

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nested_pandas_spark import NestedFrame, read_parquet
+from nested_pandas_spark.plans.inspect import find_nodes
 
 
 def test_map_rows_scalar_output(packed):
@@ -211,8 +212,7 @@ def test_numpy_reducer_routes_to_hof(spark, packed):
 
     out = packed.map_rows(np.mean, columns=["nested.flux"], output_names=["m"],
                           append_columns=True)
-    plan = out.df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan  # pure JVM higher-order function
+    assert not find_nodes(out.df, "MapInPandas")  # pure JVM higher-order function
     got = {r["id"]: r["m"] for r in out.df.collect()}
     # UDF path on the same input must agree
     udf = packed.map_rows(
@@ -256,8 +256,8 @@ def test_to_parquet_partition_by_prunes(tmp_path, packed):
     packed.to_parquet(p, partition_by="id")
     spark = packed.df.sparkSession
     back = read_parquet(spark, p).where("id = 1")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "id" in plan.split("PartitionFilters")[1][:80]
+    assert any("id" in n.meta.get("PartitionFilters", "")
+               for n in find_nodes(back, "Scan"))
     assert back.count() == 1
 
 

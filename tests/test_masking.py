@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nested_pandas_spark.pipeline.masking import span_corrupt
+from nested_pandas_spark.plans.inspect import find_nodes
 
 
 def _py_span_corrupt(doc_id, text, p=0.15, seed=42):
@@ -102,13 +103,7 @@ def test_zero_exchange_plan(spark, docs):
     # round 10: the explode + window + collect_list plan (1 Exchange
     # carrying the corpus's full token volume) became array-HOF
     # projections — nothing shuffles at all
-    plan = span_corrupt(docs, "text")._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    n = len([l for l in plan.splitlines() if l.startswith("(") and l.split(") ")[1].startswith("Exchange")])
-    assert n == 0
+    assert not find_nodes(span_corrupt(docs, "text"), "ShuffleExchange")
 
 
 def test_density_validation(spark, docs):
@@ -165,8 +160,7 @@ def test_prefix_lm_both_sides_nonempty(spark, docs):
 def test_prefix_lm_no_shuffle_plan(spark, docs):
     from nested_pandas_spark.pipeline.masking import prefix_lm_split
 
-    plan = prefix_lm_split(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert not find_nodes(prefix_lm_split(docs), "Exchange")
 
 
 def test_prefix_lm_validates_args(spark, docs):

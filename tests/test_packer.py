@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from nested_pandas_spark import NestedFrame
 from nested_pandas_spark.operators.packer import join_nested, pack, from_flat, from_lists
+from nested_pandas_spark.plans.inspect import find_nodes
 
 
 def test_pack_groups(spark, sources):
@@ -84,9 +85,9 @@ def test_from_lists_auto_detect(spark):
 def test_pack_shuffle_reuse(spark, objects, sources):
     """pack+join on the same key must reuse one exchange (scale invariant)."""
     out = join_nested(objects, sources, "nested", on="id")
-    plan = out._jdf.queryExecution().executedPlan().toString()
     # the packed side shuffles once; base side may shuffle for the sort-merge
-    assert plan.count("Exchange") <= 3
+    assert len(find_nodes(out, "ShuffleExchange")) <= 2
+    assert len(find_nodes(out, "Exchange")) <= 3
 
 
 def test_from_seq(spark):
@@ -118,8 +119,7 @@ def test_bucketed_pack_no_exchange(spark, tmp_path, sources):
                    sort_by="id", path=str(tmp_path / "bucketed_sources"))
     src = read_bucketed(spark, "bucketed_sources")
     packed_df = pack(src, "nested", on="id")
-    plan = packed_df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert not find_nodes(packed_df, "Exchange")
     assert packed_df.count() == 3
 
 

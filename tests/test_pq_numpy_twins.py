@@ -204,3 +204,45 @@ def test_null_vectors_have_no_cell_code_or_neighbor(spark, emb, local):
         assert got == sorted(tuple(r) for r in call(kept).collect())
         assert got and {r[1] for r in got}.isdisjoint(BAD_IDS)
         assert {r[0] for r in got} == {0, 1, 2, 5}
+
+
+def test_null_seed_vector_is_skipped(spark):
+    """A NULL vector at seed rank 0 (the md5-smallest id) is not a seed:
+    seeding, PQ codebooks and both searches equal their answers on the
+    frame without that row."""
+    import hashlib
+
+    rng = np.random.RandomState(3)
+    rows = [(i, rng.randn(8).tolist()) for i in range(60)]
+    first = min(range(60), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    schema = "vec_id long, embedding array<double>"
+    nulled = spark.createDataFrame(
+        [(i, None if i == first else v) for i, v in rows], schema)
+    dropped = spark.createDataFrame([r for r in rows if r[0] != first], schema)
+    assert sim.seed_vectors(nulled, n=8) == sim.seed_vectors(dropped, n=8)
+    assert sim.pq_codebooks(nulled, n_sub=2, n_centroids=8) == \
+        sim.pq_codebooks(dropped, n_sub=2, n_centroids=8)
+    q = dropped.where(F.col("vec_id") < 4)
+    calls = [
+        lambda c: sim.pq_topk(c, q, k=3, n_sub=2, n_centroids=8),
+        lambda c: sim.ivf_topk(c, q, k=3, n_centroids=4, n_probe=2),
+    ]
+    for call in calls:
+        got = sorted(tuple(r) for r in call(nulled).collect())
+        assert got and got == sorted(tuple(r) for r in call(dropped).collect())
+
+
+@pytest.mark.parametrize("n_cent", [8, 150])
+def test_zero_norm_vector_raises_at_every_size(spark, n_cent):
+    """A zero-norm vector has no cosine: the fold (<= 128 centroids) and
+    the BLAS branch (> 128) both fail the job; squared L2 still assigns
+    it."""
+    df = spark.createDataFrame([(1, [1.0, 2.0]), (2, [0.0, 0.0])],
+                               "vec_id long, embedding array<double>")
+    cents = [(i, [1.0 + i, 1.0]) for i in range(n_cent)]
+    vec = F.col("embedding")
+    with pytest.raises(Exception, match="cosine of a zero-norm vector"):
+        sim.with_nearest_ids(df, vec, cents, 1).collect()
+    l2 = {r["vec_id"]: r["__cids"]
+          for r in sim.with_nearest_ids(df, vec, cents, 1, metric="l2").collect()}
+    assert l2 == {1: [0], 2: [0]}

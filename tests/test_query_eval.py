@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from nested_pandas_spark import NestedFrame
 from nested_pandas_spark.nestedframe.expr import QueryCompileError
+from nested_pandas_spark.plans.inspect import find_nodes, plan_nodes
 
 
 def test_base_query(packed):
@@ -121,11 +122,14 @@ def test_query_pushdown_through_pack(spark, objects, sources):
     q = ndf.query("nested.flux > 11.0")
     import re
 
-    plan = q.df._jdf.queryExecution().executedPlan().toString()
+    plan = list(plan_nodes(q.df))
     # the predicate must appear as a flat-child Filter (below the pack),
     # not as a post-pack HOF lambda
-    assert re.search(r"flux#\d+ > 11\.0", plan)
-    assert "lambdafunction" not in plan
+    filters = [n for n in find_nodes(plan, "Filter")
+               if re.search(r"flux#\d+ > 11\.0", n.text)]
+    assert filters
+    assert all(any("Aggregate" in a for a in n.ancestors) for n in filters)
+    assert not find_nodes(plan, text="lambdafunction")
     # and the results are identical to the post-pack filter path
     eager = NestedFrame(objects).join_nested(sources, "nested", on="id", how="inner")
     eager = NestedFrame(eager.df).query("nested.flux > 11.0")

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import PythonException
 
 from nested_pandas_spark import NestedFrame
+from nested_pandas_spark.plans.inspect import find_nodes
 
 
 def test_to_flat(packed):
@@ -111,8 +112,7 @@ def test_to_flat_pending_skips_aggregation(spark, objects, sources):
     (no collect_list) and produce identical rows."""
     ndf = NestedFrame(objects).join_nested(sources, "nested", on="id")
     flat = ndf.to_flat("nested")
-    plan = flat.df._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in plan
+    assert not find_nodes(flat.df, text="collect_list")
     got = sorted((r["id"], r["t"], r["flux"]) for r in flat.select("id", "t", "flux").collect())
     # eager path for comparison
     eager = NestedFrame(
@@ -134,12 +134,11 @@ def test_select_nested_fields_pending_narrows_pack(spark, objects, sources):
     ndf = NestedFrame(objects).join_nested(sources, "nested", on="id")
     narrow = ndf.select_nested_fields("nested", ["t"])
     assert narrow.nested_fields("nested") == ["t"]
-    plan = narrow.df._jdf.queryExecution().executedPlan().toString()
     # the collect_list struct must carry only the selected field (with a
     # parquet source the scan ReadSchema would prune too; the in-memory test
     # source always lists every column in its scan line)
-    agg_lines = [l for l in plan.splitlines() if "collect_list" in l]
-    assert agg_lines and all("flux" not in l for l in agg_lines)
+    aggs = find_nodes(narrow.df, text="collect_list")
+    assert aggs and all("flux" not in n.text for n in aggs)
 
 
 def test_non_identifier_columns_end_to_end(spark):

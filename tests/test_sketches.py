@@ -13,6 +13,7 @@ from nested_pandas_spark.pipeline.sketches import (
     hll_merge,
     hll_registers,
 )
+from nested_pandas_spark.plans.inspect import find_nodes, plan_nodes
 
 
 @pytest.fixture(scope="module")
@@ -461,6 +462,6 @@ def test_topk_global_plan_has_no_single_partition_window(spark):
 
     df = spark.createDataFrame([(f"v{i % 5}",) for i in range(50)],
                                "s string")
-    plan = topk_frequent(df, "s", 3)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert "Window" not in plan
+    plan = list(plan_nodes(topk_frequent(df, "s", 3)))
+    assert find_nodes(plan, "TakeOrderedAndProject")
+    assert not find_nodes(plan, "Window")

@@ -11,6 +11,8 @@ driver path, so comparing the two runs both."""
 
 import pytest
 
+from nested_pandas_spark.plans.inspect import plan_nodes
+
 TEXTS = [
     "low lower lowest low low",
     "newer newest new low wide",
@@ -94,7 +96,7 @@ def test_threshold_boundary_forces_distributed(spark, docs):
     from nested_pandas_spark.pipeline.text import bpe_train
 
     m, v = bpe_train(docs, 2, driver_threshold=1)
-    assert v._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+    assert next(plan_nodes(v, "analyzed")).name == "LogicalRDD"
     assert v.storageLevel == StorageLevel.NONE
     assert m.count() == 2
 

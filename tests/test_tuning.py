@@ -1,6 +1,7 @@
 """Sizing-heuristic tests — pure math, no session needed (plus one live
 conf-application check)."""
 
+from nested_pandas_spark.plans.inspect import plan_nodes
 from nested_pandas_spark.tuning import (
     GiB,
     MiB,
@@ -70,9 +71,10 @@ def test_ensure_parallelism_rescue_decision(spark, tmp_path):
     df = spark.read.parquet(one)
     (part,) = df.inputFiles()
     size = os.path.getsize(part.removeprefix("file:"))
-    plan = _ensure_parallelism(df)._jdf.queryExecution().analyzed()
-    assert plan.nodeName() == "Repartition" and plan.shuffle()
-    assert plan.numPartitions() == rescue_width_for(size, cores)
+    root = next(plan_nodes(_ensure_parallelism(df), "analyzed"))
+    # a shuffling repartition to the data-sized width
+    assert root.name == "Repartition"
+    assert root.text == f"Repartition {rescue_width_for(size, cores)}, true"
 
     many = str(tmp_path / "many")
     rows.repartition(max(2, cores // 2)).write.parquet(many)

@@ -1,4 +1,4 @@
-"""Dump .explain("formatted") for declared queries and bench-shaped queries.
+"""Dump the formatted explain output of declared queries and bench-shaped queries.
 
 Usage:
   python tools/dump_plans.py <outdir> [--sf DIR] [--only name1,name2] [--bench]
@@ -16,13 +16,6 @@ import sys
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def explain_formatted(df) -> str:
-    qe = df._jdf.queryExecution()
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return qe.explainString(mode)
 
 
 def bench_queries(spark, sf_dir: str, cpus: int):
@@ -105,6 +98,7 @@ def main() -> None:
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
     from nested_pandas_spark import get_spark
+    from nested_pandas_spark.plans.inspect import explain_text
     spark = get_spark("dump-plans", cpus=cpus)
     tag = f"_{args.tag}" if args.tag else ""
 
@@ -125,7 +119,7 @@ def main() -> None:
     for name, (kind, obj) in targets.items():
         try:
             df = obj(spark, args.sf) if kind == "declared" else obj
-            text = explain_formatted(df)
+            text = explain_text(df, "formatted")
             with open(os.path.join(args.outdir, f"{name}{tag}.txt"), "w") as f:
                 f.write(text)
             n_ok += 1
