@@ -7,27 +7,22 @@ table of objects, each owning a nested table of time-stamped measurements
 such light curves are (1) **rebinning** — aggregate the measurements of each
 object into fixed-width time bins — and (2) **phase folding** — map each
 timestamp onto its phase within a known period. The reference leaves both to
-user ``map_rows`` lambdas; here they are first-class, expressed entirely with
-higher-order functions so they run per-row in the JVM with **zero shuffle**
-(Spark evaluates HOF lambdas interpreted, ``CodegenFallback``, not in
-generated code).
+user ``map_rows`` lambdas; here they are first-class and run per row with
+**zero shuffle**: phase folding as a higher-order function in the JVM (Spark
+evaluates HOF lambdas interpreted, ``CodegenFallback``, not in generated
+code), rebinning as an Arrow-batched NumPy pass (see the scale notes).
 
 Scale notes (100 TB):
 
-* ``rebin`` is O(bins x elements) per cell — a deliberate trade: the explode
-  -> groupBy(key, bin) -> repack alternative costs TWO shuffles of the full
-  measurement volume, while the HOF form costs none. Nested cells are small
-  by construction (thousands of elements, tens of bins); the quadratic term
-  is bounded per row and embarrassingly parallel across rows. For extreme
-  cells (~10^4+ elements) pass ``engine='explode'`` on ``rebin`` /
-  ``nest_rolling`` / ``nest_cum`` / ``nest_ewm``: the same operator routed
-  through explode -> window/groupBy -> order-preserving repack, linear per
-  cell, result-identical (use ``pack`` + ``count_nested`` to find the mega
-  cells first). The explode engine stamps rows with
-  ``monotonically_increasing_id`` and reads the stamp from two plan branches
-  (the exploded side and the join-back side); the id is deterministic only
-  for one physical execution, so the stamped frame is a ``snapshot``
-  (``session.py``) taken before branching.
+* The per-cell sequential operators (``rebin``, ``nest_rolling``,
+  ``nest_cum``, ``nest_ewm``, ``nest_dedup``, ``nest_align``) run as one
+  Arrow-batched ``mapInArrow`` pass (``_cell_pass``) over NumPy kernels:
+  the nested layout already keeps each cell's elements together, so each
+  cell is folded where it sits — linear or n log n per cell (rolling:
+  n x window), zero shuffle, no row id and nothing cached, at any cell
+  size. Folds run left to right from the same seed and with the same
+  flops as the SQL definitions (never pairwise), so results are
+  bit-identical to the oracle replays.
 * ``phase_fold`` is a pure per-element ``transform`` — one pass, no shuffle.
 * Integer (int64-nanosecond) timestamps never pass through ``double``:
   epoch-nano magnitudes (~1.7e18) exceed double's 2^53 exact range, so all
@@ -37,13 +32,17 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.nested import nested_field_names, quote, struct_sql
 from ..nestedframe.expr import _sql_literal
-from ..session import snapshot
 
 __all__ = ["rebin", "phase_fold", "nest_diff", "nest_rolling", "sigma_clip",
            "trend_slope", "nest_zscore", "nest_topk", "nest_wmean", "nest_interp",
@@ -111,114 +110,193 @@ def _floor_bin_sql(expr: str, width, origin, integral: bool) -> str:
     return f"CAST(floor((({expr}) - CAST({origin} AS DOUBLE)) / CAST({width} AS DOUBLE)) AS BIGINT)"
 
 
-def _check_engine(engine: str) -> None:
-    if engine not in ("hof", "explode"):
-        raise ValueError(f"engine must be 'hof' or 'explode', got {engine!r}")
+class _Cells(NamedTuple):
+    """One Arrow batch of a nested column, as the kernels read it: the
+    list offsets rebased to 0 (``off``, one more than the rows), the cell
+    validity (``ok``) and the element structs (``elems``)."""
+
+    off: np.ndarray
+    ok: np.ndarray
+    elems: pa.StructArray
+
+    @classmethod
+    def of(cls, arr: pa.ListArray) -> "_Cells":
+        off = arr.offsets.to_numpy().astype(np.int64)
+        elems = arr.values.slice(off[0], off[-1] - off[0])
+        return cls(off - off[0], arr.is_valid().to_numpy(zero_copy_only=False),
+                   elems)
+
+    def rows(self) -> np.ndarray:
+        """The row of every element."""
+        return np.repeat(np.arange(len(self.off) - 1), np.diff(self.off))
+
+    def field(self, name: str) -> pa.Array:
+        """Element field ``name``, NULL wherever the element is NULL."""
+        return self.elems.flatten()[self.elems.type.get_field_index(name)]
+
+    def with_fields(self, new: dict) -> pa.ListArray:
+        """The cells with the ``new`` per-element Arrow arrays appended to
+        every element struct (a NULL element becomes a struct of NULL
+        fields, as a SQL ``struct(...)`` rebuild makes it)."""
+        names = [f.name for f in self.elems.type] + list(new)
+        return _list(self.off, self.ok, pa.StructArray.from_arrays(
+            self.elems.flatten() + list(new.values()), names=names))
 
 
-def _repack_elements(flat, fields: list[str], out_field, val_col) -> "DataFrame":
-    """(__rid, __pos, __e, <val_col>) -> (__rid, __packed): the original
-    element structs with ``out_field`` appended, re-assembled in element
-    order (array_sort on the unique ``__pos`` key)."""
-    newe = F.struct(
-        *[F.col("__e").getField(f).alias(f) for f in fields],
-        val_col.alias(out_field),
-    )
-    return (
-        flat.select(
-            "__rid",
-            F.struct(F.col("__pos").alias("p"), newe.alias("e")).alias("__pe"),
-        )
-        .groupBy("__rid")
-        .agg(F.array_sort(F.collect_list("__pe")).alias("__arr"))
-        .select(
-            "__rid", F.expr("transform(__arr, __s -> __s.e)").alias("__packed")
-        )
-    )
+def _list(off: np.ndarray, ok: np.ndarray, values: pa.Array) -> pa.ListArray:
+    """A list array of ``values`` cut at ``off``, NULL where ``ok`` is not."""
+    return pa.ListArray.from_arrays(
+        pa.array(off.astype(np.int32)), values, mask=pa.array(~ok))
 
 
-def _join_back_elements(
-    stamped: DataFrame, packed: DataFrame, nest: str, fields: list[str],
-    out_field: str,
-) -> DataFrame:
-    """Re-attach per-row packed arrays; NULL cells stay NULL and empty
-    cells come back empty (with the new field) — posexplode dropped both,
-    so they fall through to the typed fallback."""
-    qn = quote(nest)
-    keep = {f: f"__x.{quote(f)}" for f in fields}
-    keep[out_field] = "CAST(NULL AS DOUBLE)"
-    fallback = (
-        f"CASE WHEN {qn} IS NULL THEN NULL "
-        f"ELSE transform({qn}, __x -> {struct_sql(keep)}) END"
-    )
-    return (
-        stamped.join(packed, "__rid", "left")
-        .withColumn(nest, F.coalesce(F.col("__packed"), F.expr(fallback)))
-        .drop("__rid", "__packed")
-    )
+def _num(a: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray]:
+    """(values as ``dtype``, validity) of a numeric, boolean or TIMESTAMP
+    Arrow array, with the SQL casts' values: a number converts as
+    ``CAST(.. AS DOUBLE)`` does and a TIMESTAMP is its epoch microseconds
+    (``unix_micros``; a TIMESTAMP_NTZ reads as its wall clock, which is
+    the same instant under the engine's UTC session). NULL slots hold 0."""
+    ok = a.is_valid().to_numpy(zero_copy_only=False)
+    if pa.types.is_timestamp(a.type):
+        a = a.cast(pa.int64())
+    elif pa.types.is_boolean(a.type):
+        a = a.cast(pa.int8())
+    return a.fill_null(0).to_numpy(zero_copy_only=False).astype(dtype), ok
 
 
-def _rebin_explode(
-    df, nest, time_field, width, value_fields, origin, stats, out,
-    kind, integral,
-) -> DataFrame:
-    """Mega-cell path for :func:`rebin`: explode -> groupBy(row, bin) ->
-    repack. Two shuffles of element rows + a snapshot of the stamped
-    input, but O(n) work per cell instead of O(bins x elements) — wins
-    when cells hold ~10^4+ elements. Bit-identical to the HOF engine:
-    a single row's elements never split across input partitions, so the
-    partial aggregate folds values in array order, exactly like the HOF
-    fold (0.0 + v1 + ... with the same final division for the mean)."""
-    stamped = snapshot(
-        df.withColumn("__rid", F.monotonically_increasing_id()))
-    if kind == "timestamp":
-        t_sql = f"unix_micros(CAST(__e.{quote(time_field)} AS TIMESTAMP))"
-    else:
-        t_sql = f"__e.{quote(time_field)}"
-    flat = (
-        stamped.select("__rid", F.explode(F.col(nest)).alias("__e"))
-        .where(F.expr(f"{t_sql} IS NOT NULL"))
-        .withColumn(
-            "__bin",
-            F.expr(_floor_bin_sql(t_sql, width, origin, integral)).cast("long"),
-        )
-    )
-    aggs = [F.count("*").cast("long").alias("n")]
-    names: list[str] = []
+def _sql_min(s: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """One step of SQL ``array_min``: NaN sorts above every number and the
+    first of equal values (0.0 and -0.0 are equal) stays."""
+    return np.where((x < s) | (np.isnan(s) & ~np.isnan(x)), x, s)
+
+
+def _sql_max(s: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """One step of SQL ``array_max`` (see :func:`_sql_min`)."""
+    return np.where((x > s) | (np.isnan(x) & ~np.isnan(s)), x, s)
+
+
+_STEP = {"sum": np.add, "min": _sql_min, "max": _sql_max}
+
+
+def _scan(off: np.ndarray, v: np.ndarray, ok: np.ndarray, step,
+          seed: float | None = None) -> np.ndarray:
+    """Running left fold ``s = step(s, x)`` over the valid (``ok``) values
+    of each cell ``off`` delimits, in element order, from ``seed`` or else
+    from the cell's first valid value. Returns the state after every
+    element (an invalid one carries it unchanged). The fold advances one
+    element position at a time across all cells (longest first), so each
+    state sees the same flops in the same order as a per-cell loop — never
+    a pairwise sum — in O(elements) work and O(longest cell) steps."""
+    lens = np.diff(off)
+    order = np.argsort(-lens, kind="stable")
+    starts, neg = off[:-1][order], -lens[order]
+    s = np.full(len(order), 0.0 if seed is None else seed)
+    has = np.full(len(order), seed is not None)
+    out = np.zeros(len(v))
+    with np.errstate(all="ignore"):
+        for p in range(-int(neg[0]) if len(neg) else 0):
+            k = int(np.searchsorted(neg, -p))  # the cells longer than p
+            i, sk = starts[:k] + p, s[:k]
+            s[:k] = np.where(ok[i], np.where(has[:k], step(sk, v[i]), v[i]), sk)
+            has[:k] |= ok[i]
+            out[i] = s[:k]
+    return out
+
+
+def _floor_long(x: np.ndarray) -> np.ndarray:
+    """``floor(x)`` as Spark's FLOOR returns it for a DOUBLE (the Java
+    ``(long) Math.floor``): NaN -> 0, saturating at the int64 range."""
+    f = np.floor(x)
+    out = np.zeros(len(f), np.int64)
+    inside = np.abs(f) < 2.0 ** 63  # False for NaN and +-inf
+    out[inside] = f[inside]
+    out[f >= 2.0 ** 63] = np.iinfo(np.int64).max
+    out[f <= -2.0 ** 63] = np.iinfo(np.int64).min
+    return out
+
+
+def _cell_pass(df: DataFrame, nests: list[str], out: str,
+               out_type: T.DataType, kernel) -> DataFrame:
+    """``df`` with column ``out`` (replacing a same-named column in place,
+    as ``withColumn`` does) of type ``out_type``, computed in ONE
+    Arrow-batched pass: per batch, ``kernel(*cells)`` gets each of the
+    ``nests`` columns as :class:`_Cells` and returns ``out``'s Arrow
+    array. The nested layout already keeps each cell's elements together,
+    so a kernel folds every cell where it sits: no explode, no shuffle, no
+    row id, nothing cached. The other columns pass through as the Arrow
+    arrays Spark hands over, never converted (a pandas round trip would
+    turn a nullable long into a double)."""
+    schema = T.StructType(
+        [T.StructField(out, out_type) if f.name == out else f
+         for f in df.schema.fields]
+        + ([] if out in df.columns else [T.StructField(out, out_type)]))
+    order = schema.fieldNames()
+
+    def gen(batches):
+        for b in batches:
+            new = kernel(*(_Cells.of(b.column(n)) for n in nests))
+            yield pa.RecordBatch.from_arrays(
+                [new if c == out else b.column(c) for c in order], names=order)
+
+    return df.mapInArrow(gen, schema)
+
+
+def _with_element_fields(df: DataFrame, nest: str, *fields: T.StructField
+                         ) -> T.ArrayType:
+    """The type of ``nest`` with ``fields`` appended to its element struct."""
+    t = df.schema[nest].dataType
+    return T.ArrayType(T.StructType(t.elementType.fields + list(fields)),
+                       t.containsNull)
+
+
+def _append_double(df: DataFrame, nest: str, field: str, out_field: str,
+                   fn) -> DataFrame:
+    """``nest`` with a DOUBLE ``out_field`` appended to every element, in
+    one :func:`_cell_pass`: ``fn(cells, v, ok)`` maps the elements'
+    ``field`` values (as doubles) and validity to the new values and
+    their NULL mask."""
+    def kernel(c: _Cells) -> pa.ListArray:
+        val, null = fn(c, *_num(c.field(field), np.float64))
+        return c.with_fields({out_field: pa.array(val, mask=null)})
+
+    out_type = _with_element_fields(
+        df, nest, T.StructField(out_field, T.DoubleType()))
+    return _cell_pass(df, [nest], nest, out_type, kernel)
+
+
+def _rebin_cells(c: _Cells, time_field: str, integral: bool, width, origin,
+                 value_fields: list[str], stats) -> pa.ListArray:
+    """:func:`rebin`'s kernel: one ``(bin, n, stats...)`` list per cell."""
+    t, timed = _num(c.field(time_field), np.int64 if integral else np.float64)
+    idx = np.flatnonzero(timed)
+    rows, t = c.rows()[idx], t[idx]
+    bins = (np.floor_divide(t - origin, width) if integral
+            else _floor_long((t - origin) / width))
+    order = np.lexsort((bins, rows))  # stable: element order inside a bin
+    idx, rows, bins = idx[order], rows[order], bins[order]
+    new = np.ones(len(idx), bool)  # the first element of each (cell, bin)
+    new[1:] = (rows[1:] != rows[:-1]) | (bins[1:] != bins[:-1])
+    starts = np.flatnonzero(new)
+    goff = np.append(starts, len(idx))
+    last = goff[1:] - 1
+    cols = {"bin": pa.array(bins[starts]), "n": pa.array(np.diff(goff))}
     for vf in value_fields:
-        v = F.col("__e").getField(vf).cast("double")
+        v, ok = _num(c.field(vf), np.float64)
+        v, ok = v[idx], ok[idx]
+        cnt = np.diff(np.concatenate([[0], np.cumsum(ok)])[goff])
+        if {"mean", "sum"} & set(stats):
+            total = _scan(goff, v, ok, np.add, seed=0.0)[last]
         for stat in stats:
-            name = f"{vf}_{stat}"
-            names.append(name)
             if stat == "mean":
-                aggs.append((F.sum(v) / F.count(v)).alias(name))
+                with np.errstate(all="ignore"):
+                    val = total / cnt
             elif stat == "sum":
-                aggs.append(F.sum(v).alias(name))
-            elif stat == "min":
-                aggs.append(F.min(v).alias(name))
+                val = total
             else:
-                aggs.append(F.max(v).alias(name))
-    per_bin = flat.groupBy("__rid", "__bin").agg(*aggs)
-    bin_struct = F.struct(
-        F.col("__bin").alias("bin"), F.col("n"),
-        *[F.col(n) for n in names],
-    )
-    packed = (
-        per_bin.groupBy("__rid")
-        .agg(F.array_sort(F.collect_list(bin_struct)).alias("__binned"))
-    )
-    ddl = "array<struct<bin: bigint, n: bigint, " + ", ".join(
-        f"`{n}`: double" for n in names
-    ) + ">>"
-    qn = quote(nest)
-    fallback = F.when(
-        F.col(nest).isNull(), F.lit(None).cast(ddl)
-    ).otherwise(F.expr("array()").cast(ddl))
-    return (
-        stamped.join(packed, "__rid", "left")
-        .withColumn(out, F.coalesce(F.col("__binned"), fallback))
-        .drop("__rid", "__binned")
-    )
+                val = _scan(goff, v, ok, _STEP[stat])[last]
+            cols[f"{vf}_{stat}"] = pa.array(val, mask=cnt == 0)
+    per_row = np.bincount(rows[starts], minlength=len(c.off) - 1)
+    return _list(np.concatenate([[0], np.cumsum(per_row)]), c.ok,
+                 pa.StructArray.from_arrays(list(cols.values()), names=list(cols)))
 
 
 def rebin(
@@ -230,7 +308,6 @@ def rebin(
     origin=0,
     stats: tuple[str, ...] = ("mean", "min", "max"),
     out: str | None = None,
-    engine: str = "hof",
 ) -> DataFrame:
     """Aggregate each nested cell's elements into fixed-width time bins.
 
@@ -245,12 +322,11 @@ def rebin(
     the bin has none), matching SQL aggregate semantics so results are
     oracle-checkable against ``explode -> GROUP BY (key, bin)``.
 
-    Implementation: per-cell HOFs only — ``array_sort(array_distinct(
-    transform(...)))`` enumerates the cell's occupied bins, then a
-    ``transform`` over those bins computes each stat with ``filter`` +
-    ``aggregate``. No shuffle, no UDF; the whole thing is one projection
-    (its HOF lambdas run interpreted, ``CodegenFallback``). See module
-    docstring for the O(bins x elements) trade.
+    Implementation: one Arrow-batched pass (:func:`_cell_pass`). Per
+    batch, a stable sort on (cell, bin) groups each cell's timed elements
+    by bin in element order, and every sum is the SQL fold ``0.0 + v1 +
+    v2 + ...`` in that order (:func:`_scan`), so results are bit-identical
+    to the aggregate replay. O(n log n) per cell, no shuffle.
 
     Examples
     --------
@@ -267,7 +343,6 @@ def rebin(
     bad = set(stats) - allowed
     if bad:
         raise ValueError(f"Unsupported stats {sorted(bad)}; allowed: {sorted(allowed)}")
-    _check_engine(engine)
     fields = nested_field_names(df, nest)
     if time_field not in fields:
         raise KeyError(f"Nested column '{nest}' has no field '{time_field}'")
@@ -277,82 +352,23 @@ def rebin(
     if missing:
         raise KeyError(f"Nested column '{nest}' has no fields {missing}")
     out = out or f"{nest}_binned"
-
-    kind = _time_kind(df, nest, time_field)
-    integral = kind != "float"
-    if engine == "explode":
-        return _rebin_explode(df, nest, time_field, width, value_fields,
-                              origin, stats, out, kind, integral)
-    qn = quote(nest)
-    if kind == "timestamp":
-        t_of = lambda var: f"unix_micros(CAST({var}.{quote(time_field)} AS TIMESTAMP))"  # noqa: E731
+    integral = _time_kind(df, nest, time_field) != "float"
+    if integral:
+        width = _int_param("width", width, positive=True)
+        origin = _int_param("origin", origin)
     else:
-        t_of = lambda var: f"{var}.{quote(time_field)}"  # noqa: E731
-    bin_of = lambda var: _floor_bin_sql(t_of(var), width, origin, integral)  # noqa: E731
-
-    # Staged through temp columns: HOF lambdas defeat Spark's codegen
-    # common-subexpression elimination, so a single inlined expression
-    # re-evaluates the per-bin filter once PER STAT (measured ~6x slower at
-    # sf0.1). Each stage materializes its array once; later stages only
-    # walk already-materialized (small) per-bin arrays.
-    timed_c, groups_c, vals_c = "__rb_timed", "__rb_groups", "__rb_vals"
-    staged = df.withColumn(
-        timed_c, F.expr(f"filter({qn}, __x -> {t_of('__x')} IS NOT NULL)")
-    )
-    # 1. occupied bins (ascending) -> 2. one (bin, elements) group per bin:
-    # the O(bins x elements) filter runs exactly once per bin here.
-    bins = (
-        f"array_sort(array_distinct(transform({quote(timed_c)}, "
-        f"__x -> {bin_of('__x')})))"
-    )
-    staged = staged.withColumn(
-        groups_c,
-        F.expr(
-            f"transform({bins}, __b -> struct(__b AS bin, "
-            f"filter({quote(timed_c)}, __x -> {bin_of('__x')} = __b) AS es))"
-        ),
-    )
-    # 3. per value field, the non-NULL doubles of each bin — materialized
-    # once so every stat below is a pass over a small double array.
-    val_fields: dict[str, str] = {
-        "bin": "__g.bin",
-        "n": "CAST(size(__g.es) AS BIGINT)",
-    }
-    for vf in value_fields:
-        val_fields[f"v_{vf}"] = (
-            f"transform(filter(__g.es, __x -> __x.{quote(vf)} IS NOT NULL), "
-            f"__x -> CAST(__x.{quote(vf)} AS DOUBLE))"
-        )
-    staged = staged.withColumn(
-        vals_c,
-        F.expr(f"transform({quote(groups_c)}, __g -> {struct_sql(val_fields)})"),
-    )
-    # 4. stats from the materialized per-bin value arrays.
-    struct_fields: dict[str, str] = {"bin": "__g.bin", "n": "__g.n"}
-    for vf in value_fields:
-        vals = f"__g.{quote(f'v_{vf}')}"
-        cnt = f"size({vals})"
-        total = (
-            f"aggregate({vals}, CAST(0.0 AS DOUBLE), "
-            f"(__acc, __v) -> __acc + __v)"
-        )
-        for stat in stats:
-            name = f"{vf}_{stat}"
-            if stat == "mean":
-                struct_fields[name] = f"CASE WHEN {cnt} > 0 THEN {total} / {cnt} END"
-            elif stat == "sum":
-                struct_fields[name] = f"CASE WHEN {cnt} > 0 THEN {total} END"
-            elif stat == "min":
-                struct_fields[name] = f"array_min({vals})"
-            else:  # max
-                struct_fields[name] = f"array_max({vals})"
-    out_expr = (
-        f"transform({quote(vals_c)}, __g -> {struct_sql(struct_fields)})"
-    )
-    return (
-        staged.withColumn(out, F.expr(out_expr))
-        .drop(timed_c, groups_c, vals_c)
-    )
+        width, origin = float(width), float(origin)
+        if width == 0:
+            raise ValueError("width must be non-zero")
+    stats = tuple(stats)
+    out_type = T.ArrayType(T.StructType(
+        [T.StructField("bin", T.LongType()), T.StructField("n", T.LongType())]
+        + [T.StructField(f"{vf}_{stat}", T.DoubleType())
+           for vf in value_fields for stat in stats]))
+    return _cell_pass(
+        df, [nest], out, out_type,
+        lambda c: _rebin_cells(c, time_field, integral, width, origin,
+                               value_fields, stats))
 
 
 def phase_fold(
@@ -456,6 +472,33 @@ def nest_diff(
     return df.withColumn(nest, F.expr(f"transform({qn}, (__x, __i) -> {body})"))
 
 
+def _rolling(c: _Cells, v: np.ndarray, ok: np.ndarray, window: int,
+             stat: str) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`nest_rolling`'s kernel: one vectorized pass per window lag,
+    the oldest first, so each window folds its values in element order
+    (a sum from 0.0, as the SQL ``aggregate`` does; adding 0.0 for a
+    skipped value leaves every sum bit-identical)."""
+    n = len(v)
+    pos = np.arange(n) - np.repeat(c.off[:-1], np.diff(c.off))
+    lags = range(min(window, int(pos.max(initial=-1)) + 1) - 1, -1, -1)
+    if stat in ("mean", "sum"):
+        total, cnt = np.zeros(n), np.zeros(n, np.int64)
+        vz = np.where(ok, v, 0.0)
+        for k in lags:
+            inside = pos[k:] >= k
+            total[k:] += np.where(inside, vz[:n - k], 0.0)
+            cnt[k:] += inside & ok[:n - k]
+        with np.errstate(all="ignore"):
+            return (total / cnt if stat == "mean" else total), cnt == 0
+    s, has = np.zeros(n), np.zeros(n, bool)
+    for k in lags:
+        m = (pos[k:] >= k) & ok[:n - k]
+        x = v[:n - k]
+        s[k:] = np.where(m, np.where(has[k:], _STEP[stat](s[k:], x), x), s[k:])
+        has[k:] |= m
+    return s, ~has
+
+
 def nest_rolling(
     df: DataFrame,
     nest: str,
@@ -463,25 +506,17 @@ def nest_rolling(
     window: int,
     stat: str = "mean",
     out_field: str | None = None,
-    engine: str = "hof",
 ) -> DataFrame:
     """Per-cell trailing rolling statistic: element i gets ``stat`` of
     ``field`` over the last ``window`` elements ending at i (fewer at the
     start — pandas ``rolling(window, min_periods=1)`` semantics). NULL
     values inside the window are ignored; an all-NULL window yields NULL.
 
-    ``stat``: 'mean' | 'min' | 'max' | 'sum'. Zero shuffle: an indexed
-    ``transform`` whose body aggregates a ``slice`` of the same array —
-    O(n x window) per cell, the right trade against exploding the corpus
-    into a shuffled window function (see :func:`rebin`'s module note).
-
-    ``engine='explode'``: the mega-cell escape hatch — posexplode ->
-    sliding ROWS window partitioned by row id -> repack in element order.
-    Costs one snapshot + two shuffles of element rows, but O(n x window)
-    total work spread across tasks instead of concentrated per row; use
-    it when cells hold ~10^4+ elements. Bit-identical results: the
-    sliding window frame folds the same non-NULL doubles in the same
-    order as the HOF slice.
+    ``stat``: 'mean' | 'min' | 'max' | 'sum'. One Arrow-batched pass
+    (:func:`_cell_pass`), no shuffle: O(n x window) vectorized work per
+    cell, each window folded oldest-first from 0.0 like the SQL
+    ``aggregate`` over a ``slice`` (so results equal that replay bit for
+    bit).
 
     Examples
     --------
@@ -498,60 +533,14 @@ def nest_rolling(
         raise ValueError(f"stat must be one of {sorted(allowed)}")
     if window < 1:
         raise ValueError("window must be >= 1")
-    _check_engine(engine)
     fields = nested_field_names(df, nest)
     if field not in fields:
         raise KeyError(f"Nested column '{nest}' has no field '{field}'")
     out_field = out_field or f"{field}_roll_{stat}"
     if out_field in fields:
         raise ValueError(f"Nested column '{nest}' already has field '{out_field}'")
-    if engine == "explode":
-        from pyspark.sql import Window as W
-
-        stamped = snapshot(
-            df.withColumn("__rid", F.monotonically_increasing_id()))
-        flat = stamped.select(
-            "__rid", F.posexplode(F.col(nest)).alias("__pos", "__e")
-        )
-        v = F.col("__e").getField(field).cast("double")
-        w = (
-            W.partitionBy("__rid").orderBy("__pos")
-            .rowsBetween(-(window - 1), 0)
-        )
-        if stat == "mean":
-            cnt = F.count(v).over(w)
-            val = F.when(cnt > 0, F.sum(v).over(w) / cnt)
-        elif stat == "sum":
-            val = F.when(F.count(v).over(w) > 0, F.sum(v).over(w))
-        elif stat == "min":
-            val = F.min(v).over(w)
-        else:
-            val = F.max(v).over(w)
-        packed = _repack_elements(flat, fields, out_field, val)
-        return _join_back_elements(stamped, packed, nest, fields, out_field)
-    qn, qf = quote(nest), quote(field)
-    # 1-based slice of the last `window` elements ending at 0-based index i
-    start = f"greatest(1, __i + 2 - {window})"
-    length = f"(__i + 1) - {start} + 1"
-    sl = f"slice({qn}, {start}, {length})"
-    present = f"filter({sl}, __e -> __e.{qf} IS NOT NULL)"
-    cnt = f"size({present})"
-    total = (
-        f"aggregate({present}, CAST(0.0 AS DOUBLE), "
-        f"(__acc, __e) -> __acc + CAST(__e.{qf} AS DOUBLE))"
-    )
-    if stat == "mean":
-        val = f"CASE WHEN {cnt} > 0 THEN {total} / {cnt} END"
-    elif stat == "sum":
-        val = f"CASE WHEN {cnt} > 0 THEN {total} END"
-    elif stat == "min":
-        val = f"array_min(transform({present}, __e -> CAST(__e.{qf} AS DOUBLE)))"
-    else:
-        val = f"array_max(transform({present}, __e -> CAST(__e.{qf} AS DOUBLE)))"
-    keep = {f: f"__x.{quote(f)}" for f in fields}
-    keep[out_field] = val
-    body = struct_sql(keep)
-    return df.withColumn(nest, F.expr(f"transform({qn}, (__x, __i) -> {body})"))
+    return _append_double(df, nest, field, out_field,
+                          lambda c, v, ok: _rolling(c, v, ok, window, stat))
 
 
 def sigma_clip(
@@ -1035,72 +1024,12 @@ def nest_describe(
     return staged.drop(vals_c)
 
 
-def _ewm_explode(
-    df: DataFrame, nest: str, field: str, a: float, out_field: str,
-    fields: list[str],
-) -> DataFrame:
-    """Mega-cell path for :func:`nest_ewm`: per-cell (pos, value) rows ->
-    applyInPandas O(n) fold -> pos-aligned array -> rebuild the nest with
-    ``element_at``. See nest_ewm's docstring for the parity contract."""
-    import pandas as pd
-
-    onema = 1.0 - a
-    stamped = snapshot(
-        df.withColumn("__rid", F.monotonically_increasing_id()))
-    flat = (
-        stamped.select("__rid", F.posexplode(F.col(nest)).alias("__pos", "__e"))
-        .select(
-            "__rid", "__pos",
-            F.col("__e").getField(field).cast("double").alias("__v"),
-        )
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__pos")
-        s = None
-        outv = []
-        for v in pdf["__v"]:
-            if pd.isna(v):
-                outv.append(None)
-            else:
-                v = float(v)
-                s = v if s is None else a * v + onema * s
-                outv.append(s)
-        pdf = pdf[["__rid", "__pos"]].copy()
-        pdf["__ewm"] = outv
-        return pdf
-
-    ew = flat.groupBy("__rid").applyInPandas(
-        fold, schema="__rid long, __pos int, __ewm double"
-    )
-    packed = ew.groupBy("__rid").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("__pos").alias("p"),
-                                    F.col("__ewm").alias("v")))
-        ).alias("__evals")
-    )
-    keep = {f: f"__x.{quote(f)}" for f in fields}
-    keep[out_field] = "element_at(__evals, __i + 1).v"
-    body = struct_sql(keep)
-    qn = quote(nest)
-    rebuilt = (
-        f"CASE WHEN {qn} IS NULL THEN NULL "
-        f"ELSE transform({qn}, (__x, __i) -> {body}) END"
-    )
-    return (
-        stamped.join(packed, "__rid", "left")
-        .withColumn(nest, F.expr(rebuilt))
-        .drop("__rid", "__evals")
-    )
-
-
 def nest_ewm(
     df: DataFrame,
     nest: str,
     field: str,
     alpha: float,
     out_field: str | None = None,
-    engine: str = "hof",
 ) -> DataFrame:
     """Per-cell exponentially weighted mean trail — pandas
     ``groupby(...).ewm(alpha, adjust=False, ignore_na=True).mean()``
@@ -1108,60 +1037,29 @@ def nest_ewm(
     over the cell's NON-NULL values in element order (NULL elements keep
     a NULL ewm and do not advance the state — ``ignore_na=True``).
 
-    Implemented as the LITERAL recursion: per element, a sequential
-    ``aggregate`` fold ``s = a*v + (1-a)*s`` over the preceding non-NULL
-    values (init = first value) — O(n^2) per cell like
-    :func:`nest_rolling`, zero shuffle, and bit-identical to a recursive
-    SQL replay (same two flops per step, same order), so the oracle
-    needs no fp tolerance.
-
-    ``engine='explode'``: the mega-cell escape hatch — the recursion has
-    no windowed-SQL form, so each cell's (pos, value) rows run through an
-    ``applyInPandas`` group that replays the identical fold in an O(n)
-    Python loop with the same IEEE double operations (``a*v + (1-a)*s``),
-    then repacks in element order. Bit-identical to the HOF engine except
-    for genuine NaN inputs (Arrow transports SQL NULL as NaN, so the
-    explode engine treats NaN values as missing, like pandas; the HOF
-    engine folds them like SQL).
+    Implemented as the LITERAL recursion in one Arrow-batched pass
+    (:func:`_cell_pass`, :func:`_scan`): ``s = a*v + (1-a)*s`` from the
+    cell's first value, the same two products and sum per step, in the
+    same order, as a recursive SQL replay, so the oracle needs no fp
+    tolerance. Linear per cell, no shuffle. A NaN value folds like SQL
+    (it is a value, not a NULL, and every later state is NaN).
     """
     if not 0 < alpha <= 1:
         raise ValueError("alpha must be in (0, 1]")
-    _check_engine(engine)
     fields = nested_field_names(df, nest)
     if field not in fields:
         raise KeyError(f"Nested column '{nest}' has no field '{field}'")
     out_field = out_field or f"{field}_ewm"
     if out_field in fields:
         raise ValueError(f"Nested column '{nest}' already has field '{out_field}'")
-    if engine == "explode":
-        return _ewm_explode(df, nest, field, float(alpha), out_field, fields)
-    qn, qf = quote(nest), quote(field)
     a = float(alpha)
-    # non-NULL values among elements 0..i (inclusive), in order
-    prior = (
-        f"transform(filter(slice({qn}, 1, __i + 1), "
-        f"__e -> __e.{qf} IS NOT NULL), __e -> CAST(__e.{qf} AS DOUBLE))"
-    )
-    vals_of = "__w.vs"
-    m = f"(size({vals_of}) - 1)"
-    # the literal recursion: fold s = a*v + (1-a)*s over values 2..k with
-    # init = value 1 (aggregate evaluates the array strictly in order)
-    ewm_val = (
-        f"CASE WHEN size({vals_of}) = 0 THEN CAST(NULL AS DOUBLE) "
-        f"ELSE aggregate(slice({vals_of}, 2, greatest({m}, 0)), "
-        f"element_at({vals_of}, 1), "
-        f"(__acc, __v) -> {a}D * __v + {1 - a}D * __acc) END"
-    )
-    keep = {f: f"__w.__x.{quote(f)}" for f in fields}
-    keep[out_field] = (
-        f"CASE WHEN __w.__x.{qf} IS NOT NULL THEN {ewm_val} END"
-    )
-    body = struct_sql(keep)
-    staged = (
-        f"transform(transform({qn}, (__x, __i) -> "
-        f"struct(__x AS __x, {prior} AS vs)), __w -> {body})"
-    )
-    return df.withColumn(nest, F.expr(staged))
+    onema = 1 - a  # the (1-alpha) constant the SQL replay folds with
+
+    def step(s, x):
+        return a * x + onema * s
+
+    return _append_double(df, nest, field, out_field,
+                          lambda c, v, ok: (_scan(c.off, v, ok, step), ~ok))
 
 
 def nest_cum(
@@ -1170,74 +1068,75 @@ def nest_cum(
     field: str,
     stat: str = "sum",
     out_field: str | None = None,
-    engine: str = "hof",
 ) -> DataFrame:
     """Per-cell cumulative trail — pandas ``groupby(...).cumsum/cummin/
     cummax`` semantics: element i gets the running ``stat`` of the cell's
     non-NULL values through position i (NULL elements keep NULL and do
     not advance the state).
 
-    A sequential ``aggregate`` fold per element (O(n^2) per cell, zero
-    shuffle). The left-to-right fold makes cumulative sums bit-identical
-    to a ``ROWS UNBOUNDED PRECEDING`` window replay — which is exactly
-    what ``engine='explode'`` runs (posexplode -> running window ->
-    repack): the mega-cell escape hatch, O(n) total work per cell at the
-    cost of a snapshot + two element shuffles. Results are bit-identical
-    between engines (same additions in the same order).
+    One Arrow-batched pass (:func:`_cell_pass`), linear per cell, no
+    shuffle: a sequential left fold from the cell's first value
+    (:func:`_scan`), so cumulative sums are bit-identical to a ``ROWS
+    UNBOUNDED PRECEDING`` window replay (same additions in the same
+    order), and min/max follow SQL ordering (NaN above every number).
     """
     allowed = {"sum", "min", "max"}
     if stat not in allowed:
         raise ValueError(f"stat must be one of {sorted(allowed)}")
-    _check_engine(engine)
     fields = nested_field_names(df, nest)
     if field not in fields:
         raise KeyError(f"Nested column '{nest}' has no field '{field}'")
     out_field = out_field or f"{field}_cum{stat}"
     if out_field in fields:
         raise ValueError(f"Nested column '{nest}' already has field '{out_field}'")
-    if engine == "explode":
-        from pyspark.sql import Window as W
+    return _append_double(
+        df, nest, field, out_field,
+        lambda c, v, ok: (_scan(c.off, v, ok, _STEP[stat]), ~ok))
 
-        stamped = snapshot(
-            df.withColumn("__rid", F.monotonically_increasing_id()))
-        flat = stamped.select(
-            "__rid", F.posexplode(F.col(nest)).alias("__pos", "__e")
-        )
-        v = F.col("__e").getField(field).cast("double")
-        w = (
-            W.partitionBy("__rid").orderBy("__pos")
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        run = {"sum": F.sum, "min": F.min, "max": F.max}[stat](v).over(w)
-        val = F.when(v.isNotNull(), run)
-        packed = _repack_elements(flat, fields, out_field, val)
-        return _join_back_elements(stamped, packed, nest, fields, out_field)
-    qn, qf = quote(nest), quote(field)
-    prior = (
-        f"transform(filter(slice({qn}, 1, __i + 1), "
-        f"__e -> __e.{qf} IS NOT NULL), __e -> CAST(__e.{qf} AS DOUBLE))"
-    )
-    vals = "__w.vs"
-    if stat == "sum":
-        val = (
-            f"aggregate(slice({vals}, 2, greatest(size({vals}) - 1, 0)), "
-            f"element_at({vals}, 1), (__acc, __v) -> __acc + __v)"
-        )
-    elif stat == "min":
-        val = f"array_min({vals})"
-    else:
-        val = f"array_max({vals})"
-    keep = {f: f"__w.__x.{quote(f)}" for f in fields}
-    keep[out_field] = (
-        f"CASE WHEN __w.__x.{qf} IS NOT NULL AND size({vals}) > 0 "
-        f"THEN {val} END"
-    )
-    body = struct_sql(keep)
-    staged = (
-        f"transform(transform({qn}, (__x, __i) -> "
-        f"struct(__x AS __x, {prior} AS vs)), __w -> {body})"
-    )
-    return df.withColumn(nest, F.expr(staged))
+
+def _codes(a: pa.Array) -> np.ndarray:
+    """Dense int codes of ``a``, equal exactly where SQL ``IS NOT DISTINCT
+    FROM`` holds: NULL = NULL, NaN = NaN and -0.0 = 0.0."""
+    if pa.types.is_nested(a.type):
+        seen: dict = {}
+        return np.array([seen.setdefault(_sql_key(x), len(seen))
+                         for x in a.to_pylist()], np.int64)
+    if pa.types.is_floating(a.type):
+        v, ok = _num(a, np.float64)
+        a = pa.array(np.where(np.isnan(v), np.nan, v + 0.0), mask=~ok)
+    return pc.dictionary_encode(a, null_encoding="encode").indices.to_numpy(
+        ).astype(np.int64)
+
+
+_NAN = object()
+
+
+def _sql_key(x):
+    """A hashable stand-in for a nested value that compares like SQL
+    equality: structs and lists become tuples, NaN one shared token (a
+    Python -0.0 already equals and hashes as 0.0)."""
+    if isinstance(x, float) and x != x:
+        return _NAN
+    if isinstance(x, dict):
+        x = list(x.values())
+    if isinstance(x, (list, tuple)):
+        return tuple(_sql_key(y) for y in x)
+    return x
+
+
+def _dedup_cells(c: _Cells, keys: list[str]) -> pa.ListArray:
+    """:func:`nest_dedup`'s kernel: each cell's first element per key."""
+    rows = c.rows()
+    key = rows
+    for j, k in enumerate(keys):
+        if j:  # re-densify, so the next product stays inside int64
+            key = np.unique(key, return_inverse=True)[1]
+        code = _codes(c.field(k))
+        key = key * (int(code.max(initial=0)) + 1) + code
+    first = np.sort(np.unique(key, return_index=True)[1])  # stable: 1st seen
+    kept = np.bincount(rows[first], minlength=len(c.off) - 1)
+    return _list(np.concatenate([[0], np.cumsum(kept)]), c.ok,
+                 c.elems.take(pa.array(first)))
 
 
 def nest_dedup(
@@ -1245,25 +1144,19 @@ def nest_dedup(
     nest: str,
     by: str | list[str] | None = None,
     out: str | None = None,
-    engine: str = "hof",
 ) -> DataFrame:
     """Per-cell element deduplication: keep each cell's FIRST element for
     every distinct value of ``by`` (one field, several, or None = the
     whole element) — pandas ``drop_duplicates(keep='first')`` at element
     grain. Classic use: collapse repeated measurements before fitting.
 
-    An indexed ``filter`` keeps element i iff no earlier element shares
-    its key (``exists`` over the preceding slice) — O(n^2) per cell, zero
-    shuffle, order-preserving. NULL keys deduplicate like any other value
-    (SQL ``IS NOT DISTINCT FROM``).
-
-    ``engine='explode'``: the mega-cell escape hatch — posexplode ->
-    ``row_number`` per (row, key) -> keep the first -> order-preserving
-    repack. Linear per cell (snapshot + two element shuffles, as with
-    :func:`nest_rolling`); identical results (window PARTITION BY groups
-    NULL keys together, matching ``IS NOT DISTINCT FROM``).
+    One Arrow-batched pass (:func:`_cell_pass`), order-preserving, no
+    shuffle: each key field becomes dense codes, and a stable
+    ``np.unique`` over (cell, codes) keeps every first occurrence —
+    O(n log n) per cell. Keys compare like SQL ``IS NOT DISTINCT FROM``:
+    NULL keys deduplicate like any other value, NaN equals NaN and -0.0
+    equals 0.0.
     """
-    _check_engine(engine)
     fields = nested_field_names(df, nest)
     if by is None:
         keys = list(fields)
@@ -1273,46 +1166,8 @@ def nest_dedup(
         if missing:
             raise KeyError(f"Nested column '{nest}' has no fields {missing}")
     out = out or nest
-    if engine == "explode":
-        from pyspark.sql import Window as W
-
-        stamped = snapshot(
-            df.withColumn("__rid", F.monotonically_increasing_id()))
-        flat = stamped.select(
-            "__rid", F.posexplode(F.col(nest)).alias("__pos", "__e")
-        )
-        w = W.partitionBy(
-            "__rid", *[F.col("__e").getField(k) for k in keys]
-        ).orderBy("__pos")
-        kept = flat.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") == 1
-        )
-        packed = (
-            kept.select(
-                "__rid",
-                F.struct(F.col("__pos").alias("p"),
-                         F.col("__e").alias("e")).alias("__pe"),
-            )
-            .groupBy("__rid")
-            .agg(F.array_sort(F.collect_list("__pe")).alias("__arr"))
-            .select("__rid",
-                    F.expr("transform(__arr, __s -> __s.e)").alias("__packed"))
-        )
-        return (
-            stamped.join(packed, "__rid", "left")
-            .withColumn(out, F.coalesce(F.col("__packed"), F.col(nest)))
-            .drop("__rid", "__packed")
-        )
-    qn = quote(nest)
-    same = " AND ".join(
-        f"(__p.{quote(k)} IS NOT DISTINCT FROM __x.{quote(k)})" for k in keys
-    )
-    dup_before = (
-        f"exists(slice({qn}, 1, __i), __p -> {same})"
-    )
-    return df.withColumn(
-        out, F.expr(f"filter({qn}, (__x, __i) -> NOT {dup_before})")
-    )
+    return _cell_pass(df, [nest], out, df.schema[nest].dataType,
+                      lambda c: _dedup_cells(c, keys))
 
 
 def nest_decimate(
@@ -1796,8 +1651,7 @@ def structure_function(
     O(n^2) pairs (+ bins x pairs for the per-bin reduction). Fine for
     the reference domain's cells (hundreds-to-thousands of points);
     for mega-cells, explode the pairs yourself (explode -> self-join on
-    the cell key with AQE -> groupBy (key, bin)) — the docstring trade
-    documented for the other quadratic per-cell operators applies.
+    the cell key with AQE -> groupBy (key, bin)).
     """
     fields = nested_field_names(df, nest)
     for f_ in (time_field, value_field):
@@ -2070,99 +1924,51 @@ def lightcurve_features(
     return staged.drop(s_c, v_c, m_c, sd_c, med_c)
 
 
-def _nest_align_explode(
-    df, left_nest, right_nest, time_field, rt, rv, tolerance, out_field,
-    lkind, rkind, t_type, v_type, lfields,
-) -> DataFrame:
-    """Mega-cell path for :func:`nest_align`: posexplode both series and
-    route the per-cell nearest match through
-    :func:`~nested_pandas_spark.operators.asof.asof_join`
-    (direction='nearest', keyed on the row id), then repack in element
-    order. Linear per cell (snapshot + element shuffles) instead of the
-    HOF engine's O(n_left x n_right) — wins on ~10^4+ element cells.
-
-    Bit-identical to the HOF engine: right elements sharing one time
-    collapse to the FIRST in array order (the HOF argmin's tie rule)
-    before the as-of join, whose 'nearest' tie rule (backward wins) is
-    exactly the HOF's earlier-time-wins."""
-    from .asof import asof_join  # function-level: asof imports this module
-
-    ql = quote(left_nest)
-    qlt, qrt, qrv = quote(time_field), quote(rt), quote(rv)
-
-    def t_sql(kind: str, var: str, field: str) -> str:
-        if kind == "timestamp":
-            return f"unix_micros(CAST({var}.{field} AS TIMESTAMP))"
-        return f"{var}.{field}"
-
-    stamped = snapshot(
-        df.withColumn("__rid", F.monotonically_increasing_id()))
-    lflat = stamped.select(
-        "__rid", F.posexplode(F.col(left_nest)).alias("__pos", "__x")
-    ).withColumn("__t", F.expr(f"CAST({t_sql(lkind, '__x', qlt)} AS {t_type})"))
-    rflat = (
-        stamped.select(
-            "__rid", F.posexplode(F.col(right_nest)).alias("__rpos", "__y")
-        )
-        .where(F.expr(f"__y.{qrt} IS NOT NULL"))
-        .select(
-            "__rid",
-            F.expr(f"CAST({t_sql(rkind, '__y', qrt)} AS {t_type})").alias("__t"),
-            F.expr(f"__y.{qrv}").alias("__v"),
-            F.col("__rpos"),
-        )
-        # HOF tie rule among equal right times: first in array order wins
-        .groupBy("__rid", "__t")
-        .agg(F.min(F.struct("__rpos", "__v")).alias("__m"))
-        .select("__rid", "__t", F.col("__m").getField("__v").alias("__v"))
-    )
-    matched = asof_join(
-        lflat.where(F.col("__t").isNotNull()),
-        rflat,
-        on="__rid",
-        ts="__t",
-        right_cols=["__v"],
-        suffix="_r",
-        tolerance=tolerance,
-        direction="nearest",
-    ).select("__rid", "__pos", "__x", "__t", "__v_r", "__t_r")
-    unmatched = lflat.where(F.col("__t").isNull()).select(
-        "__rid",
-        "__pos",
-        "__x",
-        "__t",
-        F.expr(f"CAST(NULL AS {v_type})").alias("__v_r"),
-        F.expr(f"CAST(NULL AS {t_type})").alias("__t_r"),
-    )
-    allrows = matched.unionByName(unmatched)
-    newe = F.struct(
-        *[F.col("__x").getField(f).alias(f) for f in lfields],
-        F.col("__v_r").alias(out_field),
-        F.expr("__t_r - __t").alias(f"{out_field}_dt"),
-    )
-    packed = (
-        allrows.select(
-            "__rid",
-            F.struct(F.col("__pos").alias("p"), newe.alias("e")).alias("__pe"),
-        )
-        .groupBy("__rid")
-        .agg(F.array_sort(F.collect_list("__pe")).alias("__arr"))
-        .select(
-            "__rid", F.expr("transform(__arr, __s -> __s.e)").alias("__packed")
-        )
-    )
-    keep_null = {f: f"__x.{quote(f)}" for f in lfields}
-    keep_null[out_field] = f"CAST(NULL AS {v_type})"
-    keep_null[f"{out_field}_dt"] = f"CAST(NULL AS {t_type})"
-    fallback = (
-        f"CASE WHEN {ql} IS NULL THEN NULL ELSE "
-        f"transform({ql}, __x -> {struct_sql(keep_null)}) END"
-    )
-    return (
-        stamped.join(packed, "__rid", "left")
-        .withColumn(left_nest, F.coalesce(F.col("__packed"), F.expr(fallback)))
-        .drop("__rid", "__packed")
-    )
+def _align_cells(left: _Cells, right: _Cells, time_field: str, rt: str,
+                 rv: str, integral: bool, tolerance, out_field: str
+                 ) -> pa.ListArray:
+    """:func:`nest_align`'s kernel: a binary search of each left time among
+    its cell's sorted right times, O((n_left + n_right) log n_right)."""
+    dtype = np.int64 if integral else np.float64
+    lt, lok = _num(left.field(time_field), dtype)
+    t, ok = _num(right.field(rt), dtype)
+    # candidates: the timed right elements by (cell, time); of equal times
+    # the stable sort keeps the first in array order, and only it stays
+    ci = np.flatnonzero(ok)
+    crow = right.rows()[ci]
+    o = np.lexsort((t[ci], crow))
+    ci, crow, ct = ci[o], crow[o], t[ci[o]]
+    dup = np.zeros(len(ci), bool)
+    dup[1:] = (crow[1:] == crow[:-1]) & (
+        (ct[1:] == ct[:-1]) | (np.isnan(ct[1:]) & np.isnan(ct[:-1])))
+    ci, crow, ct = ci[~dup], crow[~dup], ct[~dup]
+    cells, row = np.arange(len(right.off) - 1), left.rows()
+    lo = np.searchsorted(crow, cells)[row]
+    hi = np.searchsorted(crow, cells, side="right")[row]
+    live = lok & (hi > lo)
+    # u: the first candidate later than the left time (NaN sorts last)
+    u, end = lo.copy(), hi.copy()
+    while (m := u < end).any():
+        mid = (u + end) // 2
+        later = np.ones(len(u), bool)
+        later[m] = ~(ct[mid[m]] <= lt[m])
+        u, end = np.where(m & ~later, mid + 1, u), np.where(m & later, mid, end)
+    ci, ct = np.append(ci, 0), np.append(ct, ct.dtype.type(0))  # safe ct[-1]
+    with np.errstate(all="ignore"):
+        dl, dh = np.abs(ct[u - 1] - lt), np.abs(ct[u] - lt)
+        # nearest wins, an equidistant earlier time wins (NaN is farthest)
+        lower = (u > lo) & ((u == hi) | (dl <= dh) | np.isnan(dh))
+        j, d = np.where(lower, u - 1, u), np.where(lower, dl, dh)
+        # earlier times that round to the same distance win too
+        run = lower & (j > lo)
+        while run.any():
+            run[run] = np.abs(ct[j[run] - 1] - lt[run]) == d[run]
+            j = j - run
+            run &= j > lo
+        hit = live if tolerance is None else live & (d <= tolerance)
+    near = right.field(rv).take(pa.array(np.where(hit, ci[j], 0), mask=~hit))
+    dt = pa.array(np.where(hit, ct[j] - lt, 0), mask=~hit)
+    return left.with_fields({out_field: near, f"{out_field}_dt": dt})
 
 
 def nest_align(
@@ -2175,7 +1981,6 @@ def nest_align(
     right_value_field: str | None = None,
     tolerance=None,
     out_field: str | None = None,
-    engine: str = "hof",
 ) -> DataFrame:
     """Per-cell NEAREST-TIME alignment of two nested series in the same
     row — the in-row as-of join astronomers run to build color curves
@@ -2184,7 +1989,8 @@ def nest_align(
 
     For every element of ``left_nest``, find the ``right_nest`` element
     whose time is nearest (ties: the EARLIER right time wins —
-    deterministic); append its value as ``out_field`` (default
+    deterministic; of right elements sharing one time, the first in array
+    order); append its value as ``out_field`` (default
     ``{right_value_field}_near``) and the signed time delta
     ``{out_field}_dt`` (right minus left) to the left element struct.
     ``tolerance`` (same units as the time axis) nulls matches farther
@@ -2197,16 +2003,11 @@ def nest_align(
     then in microseconds, ``_dt`` in microseconds). Mixed
     integral/float axes are rejected.
 
-    Scale shape: pure HOFs, zero shuffle, O(n_left * n_right) per cell
-    — the documented per-cell quadratic trade (cells are small by
-    construction). ``engine='explode'``: the mega-cell escape hatch —
-    posexplode both series and route the match through
-    :func:`~nested_pandas_spark.operators.asof.asof_join`
-    (direction='nearest') keyed on a snapshotted row id, then repack in
-    element order; linear per cell at the cost of element shuffles, and
-    bit-identical to the HOF engine (see :func:`_nest_align_explode`).
+    Scale shape: one Arrow-batched pass (:func:`_cell_pass`), no
+    shuffle: each cell's right times are sorted once and every left time
+    binary-searched among them, O((n_left + n_right) log n_right) per
+    cell.
     """
-    _check_engine(engine)
     rt = right_time_field or time_field
     rv = right_value_field or value_field
     for nest, f_ in ((left_nest, time_field), (left_nest, value_field),
@@ -2233,65 +2034,13 @@ def nest_align(
             tolerance = float(tolerance)
             if not (tolerance > 0):
                 raise ValueError("tolerance must be > 0")
-    ql, qr = quote(left_nest), quote(right_nest)
-    qlt, qrt, qrv = quote(time_field), quote(rt), quote(rv)
-    # SQL type names for the CAST(NULL AS ...) accumulator seeds
-    t_type = "BIGINT" if integral else "DOUBLE"
-    v_type = None
-    for f_ in df.schema.fields:
-        if f_.name == right_nest:
-            v_type = f_.dataType.elementType[rv].dataType.simpleString()
-    assert v_type is not None
-
-    if engine == "explode":
-        return _nest_align_explode(
-            df, left_nest, right_nest, time_field, rt, rv, tolerance,
-            out_field, lkind, rkind, t_type, v_type, lfields,
-        )
-
-    def t_sql(kind: str, var: str, field: str) -> str:
-        if kind == "timestamp":
-            return f"unix_micros(CAST({var}.{field} AS TIMESTAMP))"
-        return f"{var}.{field}"
-
-    # usable right candidates staged once per row: struct(t, v)
-    cand_c = "__na_r"
-    staged = df.withColumn(
-        cand_c,
-        F.expr(
-            f"transform(filter({qr}, __y -> __y.{qrt} IS NOT NULL), "
-            f"__y -> struct(CAST({t_sql(rkind, '__y', qrt)} AS {t_type}) AS t, "
-            f"__y.{qrv} AS v))"
-        ),
-    )
-    qc = quote(cand_c)
-    absd = "abs(__y.t - __lt)"
-    pick = (
-        f"aggregate({qc}, named_struct("
-        f"'t', CAST(NULL AS {t_type}), 'v', CAST(NULL AS {v_type}), "
-        f"'d', CAST(NULL AS {t_type})), "
-        f"(__a, __y) -> CASE WHEN __a.d IS NULL OR {absd} < __a.d OR "
-        f"({absd} = __a.d AND __y.t < __a.t) THEN "
-        f"named_struct('t', __y.t, 'v', __y.v, 'd', {absd}) ELSE __a END)"
-    )
-    tol_guard = "" if tolerance is None else f" AND __b.d <= {tolerance!r}"
-    lt = t_sql(lkind, "__x", qlt)
-    # bind left time, then the single-pass argmin, then build the element
-    keep_inner = {f: f"__x.{quote(f)}" for f in lfields}
-    keep_inner[out_field] = (
-        f"CASE WHEN __b.d IS NOT NULL{tol_guard} THEN __b.v END")
-    keep_inner[f"{out_field}_dt"] = (
-        f"CASE WHEN __b.d IS NOT NULL{tol_guard} THEN __b.t - __lt END")
-    with_match = _let_sql(pick, "__b", struct_sql(keep_inner))
-    keep_null = {f: f"__x.{quote(f)}" for f in lfields}
-    keep_null[out_field] = f"CAST(NULL AS {v_type})"
-    keep_null[f"{out_field}_dt"] = f"CAST(NULL AS {t_type})"
-    body = (
-        f"CASE WHEN __x.{qlt} IS NOT NULL AND size({qc}) > 0 THEN "
-        f"{_let_sql(f'CAST({lt} AS {t_type})', '__lt', with_match)} "
-        f"ELSE {struct_sql(keep_null)} END"
-    )
-    staged = staged.withColumn(
-        left_nest, F.expr(f"transform({ql}, __x -> {body})")
-    )
-    return staged.drop(cand_c)
+    out_type = _with_element_fields(
+        df, left_nest,
+        T.StructField(out_field,
+                      df.schema[right_nest].dataType.elementType[rv].dataType),
+        T.StructField(f"{out_field}_dt",
+                      T.LongType() if integral else T.DoubleType()))
+    return _cell_pass(
+        df, [left_nest, right_nest], left_nest, out_type,
+        lambda left, right: _align_cells(left, right, time_field, rt, rv,
+                                         integral, tolerance, out_field))

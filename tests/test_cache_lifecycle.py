@@ -137,10 +137,10 @@ def _pagerank(spark, tmp_path):
     return pagerank(edges, iters=2).count()
 
 
-def _rebin_explode(spark, tmp_path):
+def _rebin(spark, tmp_path):
     from nested_pandas_spark import rebin
 
-    return rebin(_nested(spark), "nested", "t", 4.0, engine="explode").count()
+    return rebin(_nested(spark), "nested", "t", 4.0).count()
 
 
 def _unigram_train(spark, tmp_path):
@@ -204,7 +204,7 @@ CASES = {
     "pack_sequences": (_pack_sequences, False),
     "clean_corpus": (_clean_corpus, False),
     "pagerank": (_pagerank, False),
-    "rebin_explode": (_rebin_explode, False),
+    "rebin": (_rebin, True),
     "unigram_train": (_unigram_train, True),
     "train_quality_classifier": (_train_quality_classifier, True),
     "pq_codebooks_refined": (_pq_codebooks_refined, True),

@@ -26,7 +26,8 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F
 
-from nested_pandas_spark import (NestedFrame, get_spark, lightcurve_features, pack,
+from nested_pandas_spark import (NestedFrame, get_spark, lightcurve_features, nest_align,
+                                 nest_cum, nest_dedup, nest_ewm, nest_rolling, pack,
                                  periodogram, phase_fold, read_parquet, rebin)
 from nested_pandas_spark.operators.aggregates import profile
 from nested_pandas_spark.pipeline import corpus
@@ -394,18 +395,37 @@ def main() -> int:
         squared, bounded by the plane count; the tournament top-k avoids a single-task
         window.""", n18, "Join", "Exchange")
 
-    # -- 19. rebin / phase_fold: zero-shuffle per-cell time series ----------
+    # -- 19. rebin / phase_fold and the per-cell sequential operators -------
     ev = table("events").select("user_id", "ts", "value")
-    folded = phase_fold(pack(ev, "series", on="user_id"), "series", "ts",
-                        period=7 * 86_400 * 10**6)
-    n19 = nodes(rebin(folded, "series", "ts", width=86_400 * 10**6, value_fields=["value"]))
+    series = pack(ev, "series", on="user_id")
+    day = 86_400 * 10**6
+    folded = phase_fold(series, "series", "ts", period=7 * day)
+    n19 = nodes(rebin(folded, "series", "ts", width=day, value_fields=["value"]))
     check("timeseries zero extra shuffle", hash_shuffles(n19) <= 1,
           f"rebin/phase_fold added shuffles beyond the pack ({hash_shuffles(n19)})")
-    section("Time-series rebin + phase_fold: per-cell HOFs, no shuffle beyond the pack", """
-        Binning and folding each user's series are pure transform/filter/aggregate lambdas
-        over the packed array — the ONLY Exchange in the plan is the pack's own groupBy.
-        The alternative (explode -> groupBy(user, bin) -> repack) would shuffle the full
-        measurement volume twice more.""", n19, "Exchange", "Aggregate", "Scan")
+    pair = series.join(pack(ev, "other", on="user_id").select("user_id", "other"),
+                       "user_id")
+    for name, out, src in (
+            ("rebin", rebin(series, "series", "ts", width=day), series),
+            ("nest_rolling", nest_rolling(series, "series", "value", 5), series),
+            ("nest_cum", nest_cum(series, "series", "value"), series),
+            ("nest_ewm", nest_ewm(series, "series", "value", alpha=0.3), series),
+            ("nest_dedup", nest_dedup(series, "series", by="value"), series),
+            ("nest_align", nest_align(pair, "series", "other", "ts", "value"), pair)):
+        ns = nodes(out)
+        extra = len(find(ns, "Exchange")) - len(find(nodes(src), "Exchange"))
+        check(f"{name} one MapInArrow pass, no shuffle",
+              len(find(ns, "MapInArrow")) == 1 and extra == 0,
+              f"{len(find(ns, 'MapInArrow'))} MapInArrow nodes, {extra} exchanges "
+              f"beyond the input's")
+    section("Time-series rebin + phase_fold: one Arrow pass, no shuffle beyond the pack", """
+        Folding each user's series is a transform lambda over the packed array; binning it
+        is one Arrow-batched MapInArrow pass whose NumPy kernel groups each cell's
+        elements by bin where they sit — the ONLY Exchange in the plan is the pack's own
+        groupBy. So are nest_rolling, nest_cum, nest_ewm, nest_dedup and nest_align: one
+        MapInArrow each, no Exchange beyond their input's. The alternative (explode ->
+        groupBy(user, bin) -> repack) would shuffle the full measurement volume twice
+        more.""", n19, "Exchange", "Aggregate", "MapInArrow", "Scan")
 
     # -- 20. concat: plan-level union, no data movement ---------------------
     n20 = nodes(NestedFrame.concat([NestedFrame(orders.where(F.col("o_orderkey") % 2 == r))

@@ -191,14 +191,13 @@ def main() -> int:
         def rolling_mega():
             # skewed MEGA-CELLS: every event packed under user_id % 5, so
             # each cell holds ~n/5 elements (tens of thousands at 10x) —
-            # exactly the shape where the per-cell O(n^2) HOFs die and the
-            # engine='explode' escape hatch must stay linear
+            # the per-cell Arrow pass must stay linear in the cell size (the
+            # entry name is kept so SCALE.md rows stay comparable)
             from nested_pandas_spark import nest_rolling, pack
             ev = t(d, "events").select(
                 (F.col("user_id") % 5).alias("k"), "event_id", "value")
             nf = pack(ev, "series", on="k", sort_within=["event_id"])
-            nest_rolling(nf, "series", "value", window=16,
-                         engine="explode").select(
+            nest_rolling(nf, "series", "value", window=16).select(
                 F.sum(F.size("series"))).collect()
 
         def pgram():
@@ -251,9 +250,10 @@ def main() -> int:
                 F.sum("n_paras_removed")).collect()
 
         def align_explode_mega():
-            # skewed MEGA-CELLS (user_id % 5) through the explode engine:
-            # per-cell nearest-time alignment must stay linear where the
-            # HOF engine's O(n_left*n_right) per cell would blow up
+            # skewed MEGA-CELLS (user_id % 5): per-cell nearest-time
+            # alignment must stay n log n per cell, where an
+            # O(n_left*n_right) per-cell scan would blow up (the entry
+            # name is kept so SCALE.md rows stay comparable)
             from nested_pandas_spark import nest_align, pack
             ev = t(d, "events")
             nanos = dict(ev.dtypes)["ts"] == "bigint"
@@ -267,8 +267,7 @@ def main() -> int:
                      .select("k", "ts", "value"),
                      "b", on="k", sort_within=["ts"])
             both = a.join(b.select("k", "b"), "k", "inner")
-            nest_align(both, "a", "b", "ts", "value", tolerance=tol,
-                       engine="explode").select(
+            nest_align(both, "a", "b", "ts", "value", tolerance=tol).select(
                 F.sum(F.size("a"))).collect()
 
         def mixture():
