@@ -479,7 +479,7 @@ def _rolling(c: _Cells, v: np.ndarray, ok: np.ndarray, window: int,
     (a sum from 0.0, as the SQL ``aggregate`` does; adding 0.0 for a
     skipped value leaves every sum bit-identical)."""
     n = len(v)
-    pos = np.arange(n) - np.repeat(c.off[:-1], np.diff(c.off))
+    pos = np.arange(n) - c.off[c.rows()]  # position inside the cell
     lags = range(min(window, int(pos.max(initial=-1)) + 1) - 1, -1, -1)
     if stat in ("mean", "sum"):
         total, cnt = np.zeros(n), np.zeros(n, np.int64)
