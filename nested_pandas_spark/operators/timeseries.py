@@ -36,7 +36,6 @@ from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1104,7 +1103,7 @@ def _codes(a: pa.Array) -> np.ndarray:
     if pa.types.is_floating(a.type):
         v, ok = _num(a, np.float64)
         a = pa.array(np.where(np.isnan(v), np.nan, v + 0.0), mask=~ok)
-    return pc.dictionary_encode(a, null_encoding="encode").indices.to_numpy(
+    return a.dictionary_encode(null_encoding="encode").indices.to_numpy(
         ).astype(np.int64)
 
 
