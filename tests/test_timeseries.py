@@ -741,9 +741,9 @@ def _sequential_ops(df):
 def test_sequential_ops_match_replay(spark):
     """rolling / cum / ewm / rebin / dedup equal a plain-Python replay of
     their definitions exactly (``==`` on NaN-tokenized, zero-signed
-    values): NULL elements, NULL cells, empty cells, an all-NULL-time cell,
-    NaN values (folded like SQL), and duplicate keys including NULL, NaN,
-    -0.0 and 0.0."""
+    values): NULL elements, NaN values (folded like SQL), and duplicate
+    keys including NULL, NaN, -0.0 and 0.0. NULL, empty and all-NULL-time
+    cells are :func:`test_sequential_ops_empty_and_allnull_time_cells`."""
     import random
 
     rng = random.Random(11)
@@ -755,13 +755,42 @@ def test_sequential_ops_match_replay(spark):
               for i in range(rng.randrange(1, 25))]
         for uid in range(6)
     }
-    cells[6] = None                                   # NULL cell
-    cells[7] = []                                     # empty cell
-    cells[8] = [(None, 1.0, 1.0), (None, 2.0, None)]  # all-NULL-time cell
     cells[9] = [(0.0, -0.0, -0.0), (1.0, 0.0, 0.0), (2.0, nan, nan),
                 (3.0, 5.0, nan), (4.0, None, None), (5.0, -0.0, None),
                 (None, 7.0, 0.0), (6.0, 1.0, 1.0)]
     cells[10] = [(0.0, nan, 1.0), (1.0, 2.0, 2.0), (2.0, -1.0, 3.0)]
+    df = _series_frame(spark, cells)
+    src = {r["id"]: None if r["nested"] is None
+           else [tuple(e) for e in r["nested"]] for r in df.collect()}
+    _check_replay(_sequential_ops(df), src)
+
+
+def test_sequential_ops_empty_and_allnull_time_cells(spark):
+    """A NULL cell stays NULL and an empty cell stays empty under every
+    sequential operator; rebin turns an all-NULL-time cell into an empty
+    binned array (not NULL) while the others keep its elements. Checked on
+    a frame packed by join_nested (an object without rows gets a NULL cell)
+    and against the replay."""
+    from nested_pandas_spark import NestedFrame
+
+    child = spark.createDataFrame(
+        [(0, 1.0, 2.0), (1, None, 5.0)], "id long, t double, flux double")
+    objects = spark.createDataFrame([(0,), (1,), (2,)], "id long")
+    nf = NestedFrame(objects).join_nested(child, "nested", on="id").df
+    out = {r["id"]: r["nested_binned"] for r in
+           rebin(nf, "nested", "t", width=1.0,
+                 value_fields=["flux"]).collect()}
+    assert out[2] is None      # NULL cell
+    assert out[1] == []        # all-NULL-time cell
+    assert len(out[0]) == 1
+
+    cells = {
+        0: [(0.0, 1.0, 1.0), (1.0, None, 2.0), (2.5, 3.0, 1.0)],
+        1: None,                                   # NULL cell
+        2: [],                                     # empty cell
+        3: [(None, 1.0, 1.0), (None, 2.0, None)],  # all-NULL-time cell
+        4: [(None, None, None)],
+    }
     df = _series_frame(spark, cells)
     src = {r["id"]: None if r["nested"] is None
            else [tuple(e) for e in r["nested"]] for r in df.collect()}
