@@ -6,7 +6,7 @@ become new columns; dotted output names re-pack into new nested columns
 (``infer_nesting``).
 
 Spark-first: this is the ONE place Python runs per row, so it uses
-``mapInPandas`` (Arrow-batched — each nested sub-column cell arrives as a
+``mapInArrow`` (Arrow-batched — each nested sub-column cell arrives as a
 numpy array, the exact shape the reference's ``iter_field_lists`` produces,
 ``ext_array.py:1029-1046``). The JVM->Python hop happens once per batch,
 not per row; batches flow partition-parallel across executors, so throughput
@@ -19,6 +19,7 @@ Schema handling: Spark needs the output schema up front. Either pass
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.nested import is_nested_type, quote
+from ..session import default_parallelism, drop_zip_finders
 
 __all__ = ["map_rows", "map_batches", "map_groups"]
 
@@ -129,7 +131,6 @@ def map_rows(
     row_container: str = "args",
     infer_nesting: bool = True,
     append_columns: bool = False,
-    key_columns: list[str] | None = None,
     repartition: bool | int | None = None,
     **kwargs: Any,
 ) -> DataFrame:
@@ -140,8 +141,8 @@ def map_rows(
     become columns named by ``output_names`` (or ``out0..``). Dotted output
     names like ``"res.x"`` pack into new nested columns when
     ``infer_nesting=True``. ``append_columns=True`` keeps the input columns
-    alongside (requires ``key_columns`` unique to re-join? no — we carry all
-    original columns through the same mapInPandas pass, zero join).
+    alongside: they ride through the same ``mapInArrow`` pass as the Arrow
+    arrays Spark hands over, so no join and no key is needed.
     """
     spec = _classify(df, columns)
     carried = df.columns if append_columns else []
@@ -187,8 +188,6 @@ def map_rows(
     # to fan the batches across every core. Left off by default: at real
     # scale the input is already wide and the extra shuffle would be waste.
     if repartition:
-        from ..session import default_parallelism
-
         src = src.repartition(
             default_parallelism(src.sparkSession)
             if repartition is True
@@ -267,6 +266,7 @@ def map_rows(
             ]
 
     def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        drop_zip_finders()
         for rb in batches:
             cols = [
                 _cells(rb.column(alias), is_n)
@@ -340,8 +340,6 @@ def map_batches(
     """
     src = df
     if repartition:
-        from ..session import default_parallelism
-
         src = src.repartition(
             default_parallelism(src.sparkSession)
             if repartition is True
@@ -349,6 +347,7 @@ def map_batches(
         )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             yield func(pdf)
 
@@ -389,4 +388,17 @@ def map_groups(
     [('a', 2.0), ('b', 0.0)]
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
-    return df.groupBy(*keys).applyInPandas(func, schema=schema)
+    # applyInPandas passes the group key too when ``func`` takes two
+    # arguments, so the wrapper keeps ``func``'s argument count.
+    if len(inspect.getfullargspec(func).args) == 2:
+
+        def run(key, pdf):
+            drop_zip_finders()
+            return func(key, pdf)
+    else:
+
+        def run(pdf):
+            drop_zip_finders()
+            return func(pdf)
+
+    return df.groupBy(*keys).applyInPandas(run, schema=schema)

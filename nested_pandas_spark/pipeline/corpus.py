@@ -21,7 +21,7 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import default_parallelism, snapshot
+from ..session import default_parallelism, drop_zip_finders, snapshot
 from .dedup import (
     _h32,
     exact_dedup,
@@ -1665,6 +1665,7 @@ def pack_whole_docs(
     cap = int(capacity)
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         pdf = pdf.sort_values("__rn")
         shard = int(pdf["__shard"].iloc[0])
         fills, bins, overs = [], [], []

@@ -25,6 +25,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import drop_zip_finders
+
 __all__ = [
     "embedding_moments",
     "covariance_matrix",
@@ -72,6 +74,7 @@ def _moment_partials(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
         return vals.astype(np.float64, copy=False).reshape(-1, dim)
 
     def gen(batches):
+        drop_zip_finders()
         for batch in batches:
             col = batch.column(0)
             X = _batch_matrix(col)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import drop_zip_finders
 from ..tuning import _ensure_parallelism
 
 __all__ = [
@@ -376,6 +377,7 @@ def decode_image(
         return _fake_pixels(payload, height, width, channels).ravel().tolist()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out = pdf[keep].copy()
             out[out_col] = [_decode_one(p) for p in pdf[payload_col]]
@@ -436,6 +438,7 @@ def encode_image(
         return encode_jpeg(img, quality=quality, subsampling=subsampling)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out = pdf[keep].copy()
             out[out_col] = [_encode_one(p) for p in pdf[pixels_col]]
@@ -567,6 +570,7 @@ def sample_video_frames(
         ]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out = pdf[keep].copy()
             out["frames"] = [_frames_of(p) for p in pdf[payload_col]]
@@ -611,6 +615,7 @@ def audio_features(
         return rms, zcr
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             feats = [_features(p) for p in pdf[payload_col]]
             out = pdf[keep].copy()
@@ -681,6 +686,7 @@ def audio_spectrum(
         return k, float(k * rate / n), centroid
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             feats = [_spectrum(p) for p in pdf[payload_col]]
             out = pdf[keep].copy()
@@ -864,6 +870,7 @@ def audio_fingerprint(
         return int(sum(1 << j for j, b in enumerate(bits) if b))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             o = pdf[keep].copy()
             o[out] = pd.array(
@@ -939,6 +946,7 @@ def encode_wav(
         )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             o = pdf[keep].copy()
             o[out_col] = [_enc(v) for v in pdf[samples_col]]

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.nested import quote
-from ..session import cached
+from ..session import cached, drop_zip_finders
 
 __all__ = [
     "cosine", "dot", "norm", "brute_force_topk", "srp_bucket",
@@ -586,6 +586,7 @@ def _vector_pass(df: DataFrame, vec: Column, dim: int, fields, fn):
     order = schema.fieldNames()
 
     def gen(batches):
+        drop_zip_finders()
         for b in batches:
             ok, V = _valid_vectors(
                 b.column("__vp").to_numpy(zero_copy_only=False), dim)
@@ -1079,6 +1080,7 @@ def _adc_scan_topk_arrow(
         return pdf[id_col].to_numpy()[ok], _pq_codes_np(X, cb), cells, V
 
     def gen(batches):
+        drop_zip_finders()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -1164,6 +1166,7 @@ def pq_adc_scores(
     qids = [r["query_id"] for r in qrows]
 
     def gen(batches):
+        drop_zip_finders()
         for pdf in batches:
             pdf = pdf[pdf["pq_code"].notna()]
             if not len(pdf):

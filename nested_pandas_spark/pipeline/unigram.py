@@ -40,7 +40,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import cached
+from ..session import cached, drop_zip_finders
 from .text import words
 
 __all__ = [
@@ -147,6 +147,7 @@ def _viterbi_table(word_df: DataFrame, logp: dict[str, float], max_len: int) -> 
     import pyarrow as pa
 
     def gen(batches):
+        drop_zip_finders()
         for batch in batches:
             ws = batch.column(0).to_pylist()
             wcs = batch.column(1).to_pylist()
@@ -299,6 +300,7 @@ def unigram_encode(
     max_len = max_piece_len
 
     def gen(batches):
+        drop_zip_finders()
         memo: dict[str, list[str]] = {}
         for batch in batches:
             cols = {n: batch.column(i) for i, n in enumerate(batch.schema.names)}

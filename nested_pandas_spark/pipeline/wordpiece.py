@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..nestedframe.expr import _sql_literal
 from ..plans.inspect import plan_nodes
-from ..session import FrameChain, snapshot
+from ..session import FrameChain, drop_zip_finders, snapshot
 from .text import words
 
 __all__ = [
@@ -492,6 +492,7 @@ def wordpiece_encode_vocab(
     with_ws = base.withColumn(ws_col, words(F.col(text_col)))
 
     def gen(batches):
+        drop_zip_finders()
         memo: dict[str, list[str]] = {}
         for batch in batches:
             cols = {

@@ -14,6 +14,8 @@ keeps scan tasks bounded; nested-schema pruning keeps parquet reads of
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -62,6 +64,12 @@ def get_spark(app_name: str = "nested-pandas-spark", cpus: int | None = None) ->
         # Set HERE, at session build, never inside an operator — flipping it
         # mid-session would retype every later parquet read.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers import this package too: put the directory it was
+        # imported from on their path, so a driver that found it through a
+        # ``sys.path`` entry or another cwd needs no install or PYTHONPATH.
+        # Spark keeps its own pyspark/py4j archives ahead of this entry.
+        .config("spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
     spark = builder.getOrCreate()
     try:
@@ -69,6 +77,36 @@ def get_spark(app_name: str = "nested-pandas-spark", cpus: int | None = None) ->
     except Exception:  # Spark Connect: no sparkContext on the client
         pass
     return spark
+
+
+def drop_zip_finders() -> None:
+    """Forget the Python worker's cached zip-archive import finders.
+
+    Called first thing in every function this package hands to Spark
+    (``mapInArrow``, ``mapInPandas``, ``applyInPandas``...). Before each
+    task a PySpark worker calls ``importlib.invalidate_caches()``, which
+    makes every ``zipimporter`` in ``sys.path_importer_cache`` re-read its
+    whole archive directory. A reused worker holds one per imported
+    sub-package of ``pyspark.zip`` plus the py4j zip's and the spark-core
+    jar's. With those re-reads an identity ``mapInArrow`` over 400k
+    elements took 0.47-0.59 s on 4 cores, without them 0.27-0.41 s. A dropped
+    entry is re-created from zipimport's directory cache by the next
+    import that needs it, so the worker re-reads an archive once, not once
+    per task. The root finder of an archive shipped with ``addPyFile`` /
+    ``spark.submit.pyFiles`` (under ``SparkFiles.getRootDirectory()``)
+    stays, so such archives keep Spark's per-task refresh. Outside a
+    Python worker this does nothing.
+    """
+    from pyspark.core.files import SparkFiles  # absent from Connect-only clients
+
+    if not SparkFiles._is_running_on_worker:
+        return
+    shipped = os.path.join(SparkFiles.getRootDirectory(), "")
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and (
+            finder.prefix or not finder.archive.startswith(shipped)
+        ):
+            sys.path_importer_cache.pop(path, None)
 
 
 def default_parallelism(spark: SparkSession) -> int:

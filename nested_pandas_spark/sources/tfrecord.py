@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import drop_zip_finders
+
 __all__ = [
     "crc32c",
     "masked_crc32c",
@@ -398,6 +400,7 @@ def write_tfrecord(
     run = uuid.uuid4().hex[:8]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -465,6 +468,7 @@ def read_tfrecord(
     names = list(features)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             for _, frow in pdf.iterrows():
                 rows = []

@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import drop_zip_finders
+
 __all__ = ["parse_warc_bytes", "read_warc", "read_wet", "WARC_RECORD_SCHEMA"]
 
 WARC_RECORD_SCHEMA = T.StructType(
@@ -187,6 +189,7 @@ def read_warc(
     names = [f.name for f in out_fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows: list[dict] = []
             for path_, content in zip(pdf["path"], pdf["content"]):

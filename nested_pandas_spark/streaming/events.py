@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import drop_zip_finders
+
 __all__ = [
     "read_event_stream",
     "with_event_time",
@@ -182,6 +184,7 @@ def running_user_totals(df: DataFrame, timeout_minutes: int = 60) -> DataFrame:
     )
 
     def update(key, pdfs, state: GroupState):
+        drop_zip_finders()
         n, total = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)
